@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.cc import connected_components
 from ..operators.ckpt import materialize
 from ..sources import load_table
 from .llm import (
@@ -34,7 +35,6 @@ from .llm import (
     SH_ON_WS_SPARK,
     W_DUCK,
     W_SPARK,
-    connected_components,
     hash60_duck,
     hash60_spark,
     mh_cte_fragment,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.buckets import capped_buckets
+from ..operators.cc import connected_components
 from ..sources.readers import load_table
 from .registry import declare
 
@@ -51,114 +52,29 @@ SH_ON_WS_SPARK = (
 )
 
 
-def _bytes_conf(conf, key: str, dflt: str) -> int:
-    v = (conf.get(key, dflt) or dflt).strip().lower()
-    return int(v[:-1] if v.endswith("b") else v)
+# (app, plan, input files, split confs, parallelism) -> Spark's scan partition
+# count. `df.rdd` costs 30-40 ms of plan->RDD conversion per call; callers
+# rebuild the same plan over the same files many times per session.
+_NUM_PARTITIONS: dict[tuple, int] = {}
 
 
-def _scan_partitions(df: DataFrame) -> int | None:
-    """Spark's scan partition count, computed driver-side without a plan→RDD
-    conversion (`df.rdd` costs 45-110 ms of py4j + deserializer planning per
-    call — measured r13; this is ~10 ms). Replicates FilePartition.scala's
-    maxSplitBytes + greedy bin packing from the local file sizes; validated
-    equal to `df.rdd.getNumPartitions()` on every fixture table at all three
-    SFs (incl. the 3-split lineitem). Returns None (caller falls back) for
-    non-`file:` schemes, missing files, or non-scan inputs.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file-source plans
-        return None
-    if not files:
-        return None
-    sizes = []
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        p = f[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-        try:
-            sizes.append(os.path.getsize(p))
-        except OSError:
-            return None
-    conf = df.sparkSession.conf
-    maxpb = _bytes_conf(conf, "spark.sql.files.maxPartitionBytes", "134217728b")
-    opencost = _bytes_conf(conf, "spark.sql.files.openCostInBytes", "4194304b")
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        minpn = int(conf.get("spark.sql.files.minPartitionNum", str(dp)) or dp)
-    except Exception:  # noqa: BLE001
-        minpn = dp
-    total = sum(sizes) + len(sizes) * opencost
-    max_split = min(maxpb, max(opencost, total // max(minpn, 1)))
-    pieces = []
-    for s in sizes:
-        off = 0
-        while off < s:
-            pieces.append(min(max_split, s - off))
-            off += max_split
-        if s == 0:
-            pieces.append(0)
-    pieces.sort(reverse=True)
-    n, cur, opened = 0, 0, False
-    for p in pieces:
-        if opened and cur + p > max_split:
-            n += 1
-            cur = 0
-        cur += p + opencost
-        opened = True
-    return n + 1 if opened else 0
-
-
-# logical-plan nodes that cannot RAISE the partition count above the scan's
-# split count; anything else (Repartition, Join, Aggregate, Window, ...) may
-# already have spread the data, so the slow df.rdd check decides there.
-_SCAN_SHAPED_NODES = frozenset({
-    "Relation", "UnresolvedDataSource", "UnresolvedRelation", "Project",
-    "Filter", "SubqueryAlias", "Union", "View", "WithColumns",
-})
-
-
-def _plan_is_scan_shaped(df: DataFrame) -> bool:
-    try:
-        plan = df._jdf.queryExecution().logical().toString()  # noqa: SLF001
-    except Exception:  # noqa: BLE001
-        return False
-    for line in plan.splitlines():
-        node = line.lstrip(" :+-").split(" ", 1)[0].split("(", 1)[0]
-        if node and node not in _SCAN_SHAPED_NODES:
-            return False
-    return True
-
-
-# applicationId -> is the FilePartition-packing replica trusted? (r13 verdict
-# item 10: the replica tracks FilePartition.scala's maxSplitBytes + greedy
-# packing, which could drift across Spark versions)
-_SCAN_EST_VALIDATED: dict[str, bool] = {}
-
-
-def _scan_est_ok(df: DataFrame, est: int) -> bool:
-    """One-time per-application cross-check of `_scan_partitions` against
-    Spark's own plan->RDD partition count. The first SCAN-SHAPED use (where
-    the estimate must equal `df.rdd.getNumPartitions()` exactly) pays one
-    df.rdd conversion (~50-100 ms, once per session); a mismatch permanently
-    disables the estimator for this application — every later caller falls
-    back to the df.rdd path — so a Spark upgrade that changes split packing
-    can never silently change spread decisions."""
-    app = df.sparkSession.sparkContext.applicationId
-    ok = _SCAN_EST_VALIDATED.get(app)
-    if ok is None:
-        if not _plan_is_scan_shaped(df):
-            # no exact ground truth on a transformed plan; trust the fixture-
-            # tested equality for now and validate on a later bare scan
-            return True
-        try:
-            ok = df.rdd.getNumPartitions() == est
-        except Exception:  # noqa: BLE001 — unvalidatable: keep the estimator
-            ok = True
-        _SCAN_EST_VALIDATED[app] = ok
-    return ok
+def _num_partitions(df: DataFrame) -> int:
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    key = (
+        sc.applicationId,
+        df.semanticHash(),
+        tuple(df.inputFiles()),
+        *(
+            spark.conf.get(f"spark.sql.files.{k}", None)
+            for k in ("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
+        ),
+        sc.defaultParallelism,
+    )
+    n = _NUM_PARTITIONS.get(key)
+    if n is None:
+        n = _NUM_PARTITIONS[key] = df.rdd.getNumPartitions()
+    return n
 
 
 def _spread_docs(df: DataFrame) -> DataFrame:
@@ -171,26 +87,11 @@ def _spread_docs(df: DataFrame) -> DataFrame:
     gives ~100k+ splits) this is a NO-OP: shipping the whole raw-text corpus
     through an exchange just to "spread" it would be a pure waste there, and
     the previous unconditional repartition did exactly that. The check reads
-    the physical scan's partition count (no job runs; computed from file
-    sizes when local, `df.rdd` otherwise).
+    Spark's own partition count for the plan (no job runs on a scan), memoized
+    per session.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
-    est = _scan_partitions(df)
-    if est is not None and not _scan_est_ok(df, est):
-        est = None  # replica drifted vs this Spark's packing: df.rdd decides
-    if est is not None and 2 * est >= n:
-        # scan splits alone satisfy the bar; upstream transforms never shrink
-        # them (no coalesce in any caller), so the no-op verdict is safe
-        return df
-    if est is not None and _plan_is_scan_shaped(df):
-        # narrow bare scan (the common bench-scale case): the estimate IS the
-        # partition count — spread without paying the plan→RDD conversion
-        return df.repartition(n, "doc_id")
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — conversion quirks: keep the safe path
-        cur = 1
-    return df if 2 * cur >= n else df.repartition(n, "doc_id")
+    return df if 2 * _num_partitions(df) >= n else df.repartition(n, "doc_id")
 
 
 def _shingles(df: DataFrame) -> DataFrame:
@@ -1425,161 +1326,6 @@ def text_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").alias("doc_b"),
         F.round("sim", 6).alias("cosine"),
     ).orderBy("doc_a", "doc_b")
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    round_log: list | None = None,
-    flip_after: int | None = 15,
-) -> DataFrame:
-    """Connected components over an undirected edge list -> (node, component)
-    where component = min node id in the component.
-
-    Iterative label propagation (alternating min): each round every node takes
-    the min label among itself and its neighbors; converges in O(diameter)
-    rounds. Each round is one shuffle (groupBy node); the loop is driver-side
-    but the data never leaves the cluster — the driver only checks a scalar
-    convergence count per round. Near-dup clusters have tiny diameters, so
-    this is 2-4 rounds in practice.
-
-    THE FLIP TRIGGER, now automated (r9 scale probe recorded ~15 rounds as
-    the crossover, scripts/cc_scale_probe.py + ARCHITECTURE.md): rounds
-    scale with graph DIAMETER, so a long-chain component needs diameter
-    rounds. When ``flip_after`` rounds pass without convergence the loop
-    hands the CURRENT labels to operators/cc.py:connected_components_star
-    (large-star/small-star, O(log d) rounds, equality-tested against this
-    function) — the partial labels ride along as shortcut edges
-    (node -> current min-reachable label, provably within-component), so
-    the work done so far is kept, not discarded. ``flip_after=None``
-    restores the old raise-at-max_iter behavior for callers that want a
-    diameter guard instead of a fallback. Near-dup/LSH cluster graphs stay
-    diameter-2-to-4 and never flip, which is why this simpler
-    one-shuffle-per-round form remains the default.
-
-    ``round_log``, when a list, receives one (round_idx, changed_labels,
-    seconds) tuple per round — the probe's instrument; None costs nothing.
-    A flip appends a ("flip_to_star", rounds_spent, 0.0) marker.
-
-    Raises RuntimeError if the labels have not converged after `max_iter`
-    rounds and no flip target applies — silently returning unconverged
-    labels would hand the caller WRONG clusters. The result is materialized
-    (localCheckpoint) so every intermediate cache can be released before
-    returning; nothing stays persisted across queries.
-    """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # eager localCheckpoint each round: materializes the new labels AND
-    # truncates the lineage, so round N's plan never replays rounds 1..N-1
-    # (with plain persist the DAG still deepens and the convergence count
-    # replays the whole chain — measured minutes on a 30-round graph).
-    # Superseded rounds are released EXPLICITLY (r9: relying on the
-    # ContextCleaner meant up to max_iter label-table copies could sit in
-    # executor block storage until a GC happened to run).
-    from ..operators.ckpt import release_checkpoint
-
-    # Round 0 folds the identity-label table away (r13): with comp(node) =
-    # node, the neighbor-min join against the label table is an identity
-    # join and the node list is distinct(a) by symmetry — so the first
-    # round is ONE aggregate over sym (least(a, min(b))), and the separate
-    # nodes-distinct checkpoint job disappears. Rounds >= 1 are unchanged.
-    ckpt = None
-    comps = None
-    frontier = None
-    converged = False
-    for _round in range(max_iter):
-        _t0 = time.perf_counter() if round_log is not None else 0.0
-        if comps is None:
-            updated = (
-                sym.groupBy(F.col("a").alias("node"))
-                .agg(F.min("b").alias("ncomp"))
-                .select(
-                    "node",
-                    F.least(F.col("node"), F.col("ncomp")).alias("comp"),
-                    (F.col("ncomp") < F.col("node")).alias("_changed"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # FRONTIER propagation (r14, r13 verdict item 3): a node's label
-            # can only fall via a neighbor whose label CHANGED last round —
-            # an unchanged neighbor's label was already folded in when it
-            # last changed (labels are monotone non-increasing), so re-
-            # reading it is a no-op. Joining sym against only the changed
-            # rows (semi-naive/delta evaluation) shrinks the per-round
-            # exchange from |edges|+|nodes| rows to the edges incident to
-            # the frontier — on low-diameter dedup graphs the frontier
-            # collapses after round 1 and later rounds shuffle almost
-            # nothing. `frontier` reads the PREVIOUS round's materialized
-            # checkpoint, so the filter costs no recompute.
-            neighbor_min = (
-                sym.join(frontier, sym.b == frontier.node)
-                .groupBy(F.col("a").alias("node"))
-                .agg(F.min("comp").alias("ncomp"))
-            )
-            updated = (
-                comps.join(neighbor_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).alias("comp"),
-                    (F.col("ncomp") < F.col("comp")).alias("_changed"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        changed = updated.filter(F.col("_changed")).count()
-        if round_log is not None:
-            round_log.append((_round, changed, time.perf_counter() - _t0))
-        # release the CHECKPOINTED handle, not the derived projection — the
-        # unpersist accessor needs the LogicalRDD at the plan root
-        if ckpt is not None:
-            release_checkpoint(ckpt)  # superseded: `updated` is materialized
-        ckpt = updated
-        comps = updated.drop("_changed")
-        # next round's delta: only these labels can still push a neighbor
-        # down (reads the checkpoint just materialized — no recompute)
-        frontier = updated.filter(F.col("_changed")).select("node", "comp")
-        if changed == 0:
-            converged = True
-            break
-        if flip_after is not None and _round + 1 >= flip_after:
-            # High-diameter graph (the recorded ~15-round crossover): hand
-            # off to the O(log d) star algorithm, seeding it with the
-            # original edges PLUS the partial labels as shortcut edges —
-            # (node -> current comp) is within-component by construction
-            # (comp = min label reachable so far), so the rounds already
-            # spent become distance-halving shortcuts instead of waste.
-            if round_log is not None:
-                round_log.append(("flip_to_star", _round + 1, 0.0))
-            from ..operators.cc import connected_components_star
-
-            shortcuts = comps.filter(F.col("node") != F.col("comp")).select(
-                F.col("node").alias("a"), F.col("comp").alias("b")
-            )
-            seeded = sym.select("a", "b").unionByName(shortcuts)
-            out = connected_components_star(
-                seeded, "a", "b", max_iter=max_iter, round_log=round_log
-            )
-            # star eagerly checkpointed its own working tables at entry, so
-            # the label table and edge table feeding `seeded` are free now
-            release_checkpoint(ckpt)
-            release_checkpoint(sym)
-            return out
-    release_checkpoint(sym)  # the loop is done with the edge table
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            "(graph diameter exceeds max_iter). flip_after=None disabled the "
-            "automatic hand-off — pass flip_after to delegate to "
-            "operators/cc.py connected_components_star (O(log d) rounds) "
-            "for high-diameter graphs, or raise max_iter"
-        )
-    return comps.select("node", "comp")
 
 
 # the LSH-band + Jaccard-verify + transitive-closure CTE chain (assumes the

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cc import connected_components
 from ..sources import load_table
 from .llm import (
     BAND_CAP,
@@ -39,7 +40,6 @@ from .llm import (
     _cosine_duck,
     _lsh_bucket_sql,
     _spread_docs,
-    connected_components,
     hash60_duck,
 )
 from .registry import declare

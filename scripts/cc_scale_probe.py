@@ -5,7 +5,7 @@ implementations on three planted shapes, printing one JSON line:
 
   cliques  — 10M edges of small dense clusters (diameter <= 2): the
              near-dup/LSH workload the DEFAULT alternating-min CC
-             (plans/llm.py) serves; both variants run.
+             (operators/cc.py) serves; both variants run.
   chain    — one 1000-node path (diameter 999): the adversarial shape;
              only the star variant runs (the default would need 999
              rounds — its max_iter guard exists precisely for this).
@@ -33,8 +33,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.operators.cc import connected_components_star
-    from hdfs2cass_spark.plans.llm import connected_components
+    from hdfs2cass_spark.operators.cc import connected_components, connected_components_star
     from hdfs2cass_spark.session import get_session
 
     spark = get_session("cc-scale-probe")

@@ -1,4 +1,4 @@
-"""Round-14 optimization profiler: per-query build/plan vs execute split.
+"""Optimization profiler: per-query build/plan vs execute split.
 
 For each named query at $SPARK_GRAFT_SF_DIR (default sf0.1):
   - t_build: fn(spark, dir) wall time (Python DataFrame construction)
@@ -9,9 +9,9 @@ For each named query at $SPARK_GRAFT_SF_DIR (default sf0.1):
              cached; isolates pure execution + re-optimization)
 
 Writes JSON to stdout; --explain also dumps explain("formatted") to
-plans/r14/<name>_<tag>.txt.
+plans/profile/<name>_<tag>.txt.
 
-Usage: python scripts/r14_profile.py [--explain TAG] [--passes N] name...
+Usage: python scripts/query_profile.py [--explain TAG] [--passes N] name...
        (no names = HEADLINE + PIPELINE + curate_corpus)
 """
 
@@ -51,7 +51,7 @@ def main() -> int:
     from hdfs2cass_spark.plans import CATALOG
     from hdfs2cass_spark.session import get_session
 
-    spark = get_session("r14-profile")
+    spark = get_session("profile")
     # warm: parquet reader, codegen, Arrow workers
     warm = "/root/testdata/sf0.001"
     for name in names:
@@ -60,18 +60,18 @@ def main() -> int:
     out: dict = {}
     for name in names:
         q = CATALOG[name]
-        spark.sparkContext.setJobDescription(f"r14:{name}")
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
         df = q.fn(spark, sf_dir)
         t_build = time.perf_counter() - t0
         if explain_tag:
-            p = os.path.join(
+            d = os.path.join(
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                 "plans",
-                "r14",
-                f"{name}_{explain_tag}.txt",
+                "profile",
             )
-            with open(p, "w") as f:
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, f"{name}_{explain_tag}.txt"), "w") as f:
                 f.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         t0 = time.perf_counter()

@@ -8,8 +8,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from hdfs2cass_spark.operators.cc import connected_components_star
-from hdfs2cass_spark.plans.llm import connected_components
+from hdfs2cass_spark.operators import cc
+from hdfs2cass_spark.operators.cc import connected_components, connected_components_star
 
 
 def _edges_df(spark, pairs):
@@ -36,31 +36,34 @@ def test_matches_default_cc_on_random_graphs(spark, seed):
     assert got == want
 
 
-def test_chain_converges_in_log_rounds(spark):
+def test_chain_converges_in_log_rounds(spark, monkeypatch):
     """A 200-node path has diameter 199: the default alternating-min CC
     would need ~200 rounds (with the automatic flip DISABLED it trips its
     guard); the star variant must finish in O(log d) — and still produce
     min-id labels."""
     n = 200
     e = _edges_df(spark, [(i, i + 1) for i in range(n - 1)])
+    monkeypatch.setattr(cc, "FLIP_AFTER", 21)  # past max_iter: never flips
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, max_iter=20, flip_after=None)
+        connected_components(e, max_iter=20)
     log: list = []
     got = _norm(connected_components_star(e, round_log=log).collect())
     assert got == [(i, 0) for i in range(n)]
     assert len(log) <= 12, f"rounds {len(log)} — not O(log d)"
 
 
-def test_default_cc_auto_flips_to_star_on_long_chain(spark):
+def test_default_cc_auto_flips_to_star_on_long_chain(spark, monkeypatch):
     """The r9-verdict flip automation: a planted long chain converges
     through the DEFAULT connected_components without manual intervention —
-    after flip_after alternating-min rounds it hands the partial labels to
+    after FLIP_AFTER alternating-min rounds it hands the partial labels to
     the star algorithm as shortcut edges and finishes, instead of raising
     at the max_iter guard."""
     n = 200
     e = _edges_df(spark, [(i, i + 1) for i in range(n - 1)])
     log: list = []
-    got = _norm(connected_components(e, round_log=log, flip_after=5).collect())
+    with monkeypatch.context() as m:
+        m.setattr(cc, "FLIP_AFTER", 5)
+        got = _norm(connected_components(e, round_log=log).collect())
     assert got == [(i, 0) for i in range(n)]
     flips = [t for t in log if t[0] == "flip_to_star"]
     assert flips == [("flip_to_star", 5, 0.0)]

@@ -2,7 +2,8 @@
 
 from collections import defaultdict
 
-from hdfs2cass_spark.plans.llm import connected_components, dedup_near_duplicates
+from hdfs2cass_spark.operators.cc import connected_components
+from hdfs2cass_spark.plans.llm import dedup_near_duplicates
 from hdfs2cass_spark.plans import CATALOG
 
 

@@ -322,54 +322,56 @@ def test_spread_docs_is_conditional(spark, sf_dir):
     assert _spread_docs(wide) is wide  # identity: no exchange added
 
 
-def test_scan_partitions_estimate_matches_spark(spark, sf_dir):
-    """_scan_partitions (the driver-side split estimate that replaced the
-    45-110 ms df.rdd conversion in _spread_docs, r13) must agree with
-    Spark's own FilePartition packing on every fixture table, and must
-    decline (None) on inputs it cannot see through — the df.rdd fallback
-    handles those."""
-    from hdfs2cass_spark.plans.llm import _plan_is_scan_shaped, _scan_partitions
+def test_spread_docs_asks_spark_and_memoizes(spark, sf_dir, tmp_path, monkeypatch):
+    """_spread_docs decides exactly as Spark's own scan partition count says
+    (2 * df.rdd.getNumPartitions() >= defaultParallelism) on every fixture
+    table, and memoizes that count: a rebuilt frame over the same files pays
+    no df.rdd conversion, while a changed file set or a changed
+    maxPartitionBytes asks Spark again."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from hdfs2cass_spark.plans import llm
     from hdfs2cass_spark.sources.readers import TABLES, load_table
 
+    monkeypatch.setattr(llm, "_NUM_PARTITIONS", {})
+    n = spark.sparkContext.defaultParallelism
     for t in TABLES:
         df = load_table(spark, sf_dir, t)
-        est = _scan_partitions(df)
-        assert est == df.rdd.getNumPartitions(), t
-        assert _plan_is_scan_shaped(df), t
-    # in-memory frame: no input files -> decline to estimate
-    mem = spark.range(10).withColumnRenamed("id", "doc_id")
-    assert _scan_partitions(mem) is None
-    # an upstream repartition hides the true count from the file estimate:
-    # the plan gate must reject it so the fallback answers
-    rep = load_table(spark, sf_dir, "documents").repartition(4)
-    assert not _plan_is_scan_shaped(rep)
+        if "doc_id" not in df.columns:  # the spread repartitions by doc_id
+            df = df.select(F.lit(0).alias("doc_id"), "*")
+        keep = 2 * df.rdd.getNumPartitions() >= n
+        assert (llm._spread_docs(df) is df) == keep, t
+
+    docs = load_table(spark, sf_dir, "documents")
+    calls = []
+    rdd = type(docs).rdd
+    monkeypatch.setattr(
+        type(docs), "rdd", property(lambda self: calls.append(1) or rdd.func(self))
+    )
+    llm._spread_docs(load_table(spark, sf_dir, "documents"))
+    assert calls == []  # same plan, same files: memo hit
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
+    llm._spread_docs(load_table(spark, str(tmp_path), "documents"))
+    assert calls == [1]  # other file set: miss
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+    try:
+        llm._spread_docs(load_table(spark, sf_dir, "documents"))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert calls == [1, 1]  # other split conf: miss
 
 
-def test_scan_estimator_self_check_disables_on_drift(spark, sf_dir, monkeypatch):
-    """_scan_est_ok (r14, r13 verdict item 10): the first scan-shaped use
-    cross-checks the FilePartition-packing replica against Spark's own
-    plan->RDD count; a mismatch permanently disables the estimator for the
-    application so a Spark-version packing change can never silently alter
-    spread decisions."""
-    from hdfs2cass_spark.plans import llm
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    true_n = df.rdd.getNumPartitions()
-    # fresh state, correct estimate: validates and memoizes trusted
-    monkeypatch.setattr(llm, "_SCAN_EST_VALIDATED", {})
-    assert llm._scan_est_ok(df, true_n)
-    app = spark.sparkContext.applicationId
-    assert llm._SCAN_EST_VALIDATED[app] is True
-    # fresh state, drifted estimate: the guard must catch it and stick
-    monkeypatch.setattr(llm, "_SCAN_EST_VALIDATED", {})
-    assert not llm._scan_est_ok(df, true_n + 7)
-    assert llm._SCAN_EST_VALIDATED[app] is False
-    assert not llm._scan_est_ok(df, true_n)  # sticky: estimator stays off
-    # non-scan-shaped frame: no ground truth here -> defer, don't memoize
-    monkeypatch.setattr(llm, "_SCAN_EST_VALIDATED", {})
-    rep = df.repartition(4)
-    assert llm._scan_est_ok(rep, 1)
-    assert app not in llm._SCAN_EST_VALIDATED
+def test_spread_docs_accepts_size_suffixed_split_conf(spark, sf_dir):
+    """spark.sql.files.maxPartitionBytes takes size strings like "64m"; a
+    spreading query must run under them, not fail parsing the conf."""
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
+    try:
+        rows = CATALOG["ngram_jaccard_pairs"].fn(spark, sf_dir).collect()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert rows
 
 
 def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
