@@ -21,6 +21,8 @@ and the DuckDB oracles keep hash-matching.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 
 def dot_sql(a: str, b: str) -> str:
     """Spark SQL for the dot product of two array columns (fold order:
@@ -37,4 +39,32 @@ def norm_sql(a: str) -> str:
     return (
         f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> "
         "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+
+
+# DuckDB twins; they hardcode the fixture width, range(1, 65)
+_DOT_DUCK = "list_sum(list_transform(range(1, 65), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
+_NORM_DUCK = "sqrt(list_sum(list_transform(range(1, 65), i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))"
+
+
+# cosine with a nullif-guarded denominator: a ZERO vector (padding row,
+# failed encode — inevitable in a 100 TB corpus) has norm 0 and Spark's
+# ANSI-mode division THROWS ArithmeticException where DuckDB yields NaN/inf.
+# Cosine is undefined for zero vectors: both engines yield NULL and the
+# consumers exclude it explicitly. Caught by the adversarial probe, not the
+# fixtures (which contain no zero vectors).
+def _cosine_prenormed(a: str, b: str, an: str, bn: str):
+    """Cosine from PRE-COMPUTED norm columns: the norms are built once per
+    vector before the pair join instead of re-evaluated per pair after it —
+    same IEEE values (sqrt and multiply are correctly rounded), ~3x less
+    arithmetic per candidate pair."""
+    return F.expr(dot_sql(a, b)) / F.expr(
+        f"nullif({an} * {bn}, CAST(0 AS DOUBLE))"
+    )
+
+
+def _cosine_duck(a: str, b: str) -> str:
+    return (
+        f"({_DOT_DUCK.format(a=a, b=b)}"
+        f" / nullif({_NORM_DUCK.format(a=a)} * {_NORM_DUCK.format(a=b)}, 0))"
     )

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ckpt import release_checkpoint
+from .text import BAND_CAND_SQL, JACCARD_COMMON_SQL
 
 # alternating-min rounds before the default hands off to the star algorithm
 FLIP_AFTER = 15
@@ -282,3 +283,28 @@ def connected_components_star(
     return nodes.join(
         e.select(F.col("u").alias("node"), F.col("v").alias("comp")), "node", "left"
     ).select("node", F.coalesce(F.col("comp"), F.col("node")).alias("comp"))
+
+
+# DuckDB twin of the near-dup clustering: the LSH-band + Jaccard-verify +
+# transitive-closure CTE chain (assumes the sh/m minhash CTEs are already in
+# scope; must sit under a WITH RECURSIVE): verified pairs -> symmetric edges
+# -> reachability -> keeper = min doc_id reachable, exactly the
+# alternating-min fixpoint connected_components converges to. Shared
+# verbatim by the dedup_clusters oracle (over documents) and the
+# curate_corpus oracle (over the exact-dedup survivors).
+CLUSTER_EDGES_FRAGMENT = f"""
+{BAND_CAND_SQL},
+{JACCARD_COMMON_SQL},
+    verified AS (
+      SELECT doc_a, doc_b FROM common
+      JOIN n na ON na.doc_id = doc_a
+      JOIN n nb ON nb.doc_id = doc_b
+      WHERE CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common) >= 0.5),
+    edges AS (
+      SELECT doc_a AS a, doc_b AS b FROM verified
+      UNION SELECT doc_b, doc_a FROM verified),
+    nodes AS (SELECT DISTINCT a AS node FROM edges),
+    reach AS (
+      SELECT node AS src, node AS dst FROM nodes
+      UNION
+      SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst)"""

@@ -129,15 +129,3 @@ def fit_logreg(
         w = [w[i] - lr * ((row[f"g{i}"] or 0) / Q) / n for i in range(dims)]
         b = b - lr * ((row["gb"] or 0) / Q) / n
     return w, b
-
-
-def score_margin(
-    df: DataFrame,
-    weights: list[float],
-    bias: float,
-    vec_col: str = "embedding",
-    out_col: str = "margin",
-) -> DataFrame:
-    """Map-side scoring: adds ``out_col`` (the raw margin; > 0 means the
-    positive class). Pure column expression, zero shuffle."""
-    return df.withColumn(out_col, margin_expr(vec_col, weights, bias))

@@ -102,7 +102,7 @@ def word_hash_sql(hash_mode: str) -> str:
         return "xxhash64(_w)"  # JVM-native, the production path
     if hash_mode == "md5":
         # the oracle-checkable twin: same 60-bit md5-derived word hash as
-        # plans.llm.hash60_spark / hash60_duck, so a DuckDB query can
+        # functions.tokenize.hash60_spark / hash60_duck, so a DuckDB query can
         # reproduce the embedding bit-for-bit (text_embed_near_dup_pairs_md5)
         return "CAST(conv(substr(md5(CAST(_w AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
     raise ValueError(f"hash_mode must be 'xxhash64' or 'md5', got {hash_mode!r}")

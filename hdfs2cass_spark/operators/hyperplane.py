@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from .buckets import capped_buckets
 
-DEFAULT_CAP = 100  # mirrors plans.llm.BAND_CAP for band buckets
+DEFAULT_CAP = 100  # mirrors operators.text.BAND_CAP for band buckets
 DEFAULT_SEED = 42
 
 
@@ -78,6 +78,13 @@ def bucket_sql(planes, elem_fmt: str) -> str:
         )
         proj_cols.append(f"(CASE WHEN ({terms}) > 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(proj_cols)
+
+
+def _lsh_bucket_sql(elem_fmt: str) -> str:
+    """8 fixed planes for the ORACLE-CHECKED queries (DuckDB evaluates the
+    identical literal arithmetic). The scale path derives the plane count
+    from corpus size — :func:`derive_n_planes`."""
+    return bucket_sql(lsh_planes(8, 64), elem_fmt)
 
 
 def _plane_bit_sql(plane, bit: int, elem_fmt: str) -> str:

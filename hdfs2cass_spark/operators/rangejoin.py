@@ -22,7 +22,7 @@ spans -> sessions), differentially tested against DuckDB's range join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfs2cass_spark.functions.ts import epoch_seconds
@@ -62,13 +62,3 @@ def range_join(
         .filter((F.col(point_ts) >= F.col(start)) & (F.col(point_ts) < F.col(end)))
         .drop("_bucket")
     )
-
-
-def bucket_count_expr(start: str, end: str, bucket_width_sec: int) -> Column:
-    """ceil(span / W) per interval — the amplification factor; useful for
-    choosing W (aim for a small per-interval bucket count at your span
-    distribution)."""
-    return F.ceil(
-        (epoch_seconds(end) - epoch_seconds(start))
-        / F.lit(float(bucket_width_sec))
-    ).cast("int")

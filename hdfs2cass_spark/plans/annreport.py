@@ -28,16 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.readers import load_table
-from .llm import (
-    _IVF_CENT_VALUES_DUCK,
+from ..functions.vec import _cosine_duck
+from ..operators.kmeans import (
     _IVF_CENTS,
+    _IVF_CENT_VALUES_DUCK,
     _IVF_DIST_DUCK,
     _NPROBE,
-    _cosine_duck,
-    embedding_topk_cosine,
     ivf_probe_topk,
 )
+from ..sources.readers import load_table
+from .llm import embedding_topk_cosine
 from .registry import declare
 
 _K = 3  # compare top-3 of both rankers (the IVF query's k)

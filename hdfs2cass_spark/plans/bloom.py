@@ -44,8 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_SPARK
+from ..operators.text import SHH_DUCK, _spread_docs, shingle_hashes
 from ..sources.readers import load_table
-from .llm import SHH_DUCK, _shingles_hashed
 from .pipeline import _BENCH_DUCK, _BENCH_SPARK
 from .registry import declare
 
@@ -191,9 +192,6 @@ def bloom_probe_df(train: DataFrame, words: list[int]) -> DataFrame:
     f"mod/mask arithmetic over the shared md5-derived shingle hashes.",
 )
 def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .llm import SH_ON_WS_SPARK, hash60_spark
-    from .llm import W_SPARK as _W
-
     d = load_table(spark, sf_dir, "documents")
     is_bench = F.expr(_BENCH_SPARK)
     # Filter-build side (eager: bloom_words collects the words): the bench
@@ -203,12 +201,9 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct exchange bought nothing (r13: the build job dropped from 3
     # exchanges over the corpus-spread scan to 1 over ~1/20 of the docs;
     # identical filter words by construction).
-    bench_sh = (
-        d.filter(is_bench)
-        .select(F.expr(_W).alias("ws"))
-        .select(F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s"))
-        .select(F.expr(hash60_spark("s")).alias("h"))
-    )
+    bench_sh = shingle_hashes(d.filter(is_bench).select(F.expr(W_SPARK).alias("ws")))
     words = bloom_words(bench_sh)
-    sh = _shingles_hashed(d)  # (doc_id, h) distinct per doc
+    sh = shingle_hashes(  # (doc_id, h) distinct per doc
+        _spread_docs(d).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    )
     return bloom_probe_df(sh.filter(~is_bench), words)

@@ -33,12 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import WS_CHARS
+from ..functions.tokenize import W_DUCK, W_SPARK, WS_CHARS
 from ..functions.tokenize import words_duck as _wduck
 from ..functions.tokenize import words_spark as _wspark
 from ..sources.readers import load_table
 from .lines import _LINES_DUCK, _LINES_SPARK
-from .llm import W_DUCK, W_SPARK
 from .registry import declare
 
 MIN_SENTENCES = 3

@@ -26,20 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.cc import connected_components
+from ..functions.tokenize import SH_DUCK, W_DUCK, W_SPARK, hash60_duck
+from ..operators.cc import CLUSTER_EDGES_FRAGMENT, connected_components
 from ..operators.ckpt import materialize
+from ..operators.text import mh_cte_fragment, near_dup_pairs_df, shingle_hashes
 from ..sources import load_table
-from .llm import (
-    CLUSTER_EDGES_FRAGMENT,
-    SH_DUCK,
-    SH_ON_WS_SPARK,
-    W_DUCK,
-    W_SPARK,
-    hash60_duck,
-    hash60_spark,
-    mh_cte_fragment,
-    near_dup_pairs_df,
-)
 from .pipeline import _BENCH_DUCK, _BENCH_SPARK, PACK_BUDGET, PACK_SHARD_DOCS
 from .registry import declare
 
@@ -224,16 +215,10 @@ def curate_stage_dfs(d: DataFrame) -> dict[str, DataFrame]:
     nd = deduped.join(losers, "doc_id", "left_anti")
 
     # --- 4. decontamination gate (in-row shingle dedup; bench set broadcast) ---
-    sh = nd.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s")
-    ).select("doc_id", F.expr(hash60_spark("s")).alias("h"))
-    bench = (
-        d.filter(F.expr(_BENCH_SPARK))
-        .select(F.expr(W_SPARK).alias("ws"))
-        .select(F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s"))
-        .select(F.expr(hash60_spark("s")).alias("h"))
-        .distinct()
-    )
+    sh = shingle_hashes(nd.select("doc_id", "ws"))
+    bench = shingle_hashes(
+        d.filter(F.expr(_BENCH_SPARK)).select(F.expr(W_SPARK).alias("ws"))
+    ).distinct()
     contam = (
         sh.join(F.broadcast(bench.withColumn("hit", F.lit(1))), "h", "left")
         .groupBy("doc_id")

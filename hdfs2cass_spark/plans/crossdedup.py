@@ -19,7 +19,7 @@ text have no shingles on either engine and simply never match.
 100 TB shape: the exact check is one distinct-hash aggregate on the
 reference + an AQE-splittable semi join (the reference side never carries
 text past the hash). Near-dup reuses the proven single-corpus machinery
-(plans/llm.py): ONE minhash aggregate per side, band keys from BOTH sides
+(operators/text.py): ONE minhash aggregate per side, band keys from BOTH sides
 unioned under a side marker into ONE capped-bucket pass (the skew gate
 counts the COMBINED bucket before any collect — a boilerplate band key
 shared by millions of reference docs is dropped, never materialized), cross
@@ -33,19 +33,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import hash60_duck, hash60_spark
 from ..operators.buckets import capped_buckets
-from ..sources import load_table
-from .llm import (
+from ..operators.text import (
     BAND_CAP,
     _band_structs,
     _spread_docs,
     bands_sql,
-    hash60_duck,
-    hash60_spark,
     mh_cte_fragment,
     minhash_wide_df,
     verified_jaccard,
 )
+from ..sources import load_table
 from .registry import declare
 
 REF_MOD = 3  # fixture split: doc_id % REF_MOD == 0 -> reference corpus

@@ -43,8 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
+from ..operators.text import _spread_docs
 from ..sources import load_table
-from .llm import W_DUCK, W_SPARK, _spread_docs, hash60_duck, hash60_spark
 from .registry import declare
 
 DSIR_BUCKETS = 256  # hashed-unigram feature space (B in the paper)

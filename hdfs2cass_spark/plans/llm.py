@@ -1,14 +1,20 @@
 """LLM-data-pipeline declared queries: dedup, similarity search, text analysis,
 multimodal plumbing (SURVEY.md §7 phase 4).
 
-Cross-engine determinism: every hash used here is derived from md5 (identical
-in Spark and DuckDB) truncated to 60 bits — Spark
-``conv(substr(md5(x),1,15),16,10)`` == DuckDB ``('0x'||substr(md5(x),1,15))::BIGINT``.
-No engine-native hash (xxhash64 / hash()) appears in any oracle-checked query.
+This module holds the 16 queries and their oracle SQL only. The operators
+they share with the rest of the engine live with their decisions: words,
+shingle and ``hash60`` expressions in functions/tokenize.py; spreading,
+shingle hashes, minhash, LSH bands and Jaccard verify in operators/text.py;
+cosine in functions/vec.py; IVF in operators/kmeans.py; connected components
+and its DuckDB twin in operators/cc.py.
+
+Cross-engine determinism: every hash in an oracle-checked query is md5-derived
+(``hash60_spark`` == ``hash60_duck``); no engine-native hash (xxhash64 /
+hash()) appears in one.
 
 Scale design (the point of these operators at 100 TB):
   - MinHash-LSH: candidate pairs come from banded signature equality, never an
-    all-pairs join. Cost ~ O(docs x bands) shuffle + per-bucket joins.
+    all-pairs join (operators/text.py).
   - n-gram Jaccard: shingles with document frequency > DF_CAP are dropped
     before the pair join (a frequent-shingle join is the classic quadratic
     blowup); similarity is computed on the pruned shingle space.
@@ -18,162 +24,53 @@ Scale design (the point of these operators at 100 TB):
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scrub import scrub_cte_duck as _scrub_cte_duck
+from ..functions.scrub import scrub_pii as _scrub_pii
+from ..functions.tokenize import (
+    STOPWORDS,
+    W_DUCK,
+    W_SPARK,
+    WS_CHARS,
+    WS_DUCK,
+    WS_SPARK,
+    hash60_duck,
+    hash60_spark,
+)
+from ..functions.vec import _cosine_duck, _cosine_prenormed, norm_sql
 from ..operators.buckets import capped_buckets
-from ..operators.cc import connected_components
+from ..operators.cc import CLUSTER_EDGES_FRAGMENT, connected_components
+from ..operators.hyperplane import _lsh_bucket_sql, hyperplane_near_dup_pairs
+from ..operators.kmeans import (
+    _IVF_CENT_VALUES_DUCK,
+    _IVF_CENTS,
+    _IVF_DIST_DUCK,
+    _NPROBE,
+    fit_kmeans,
+    ivf_probe_topk,
+)
+from ..operators.text import (
+    BAND_CAND_SQL,
+    BAND_CAP,
+    DISTINCT_SHINGLES,
+    JACCARD_COMMON_SQL,
+    N_BANDS,
+    N_HASHES,
+    SHH_DUCK,
+    _band_candidates,
+    _spread_docs,
+    mh_cte_fragment,
+    minhash_wide_df,
+    near_dup_pairs_df,
+)
 from ..sources.readers import load_table
 from .registry import declare
 
-# --- shared expression fragments (Spark SQL expr string / DuckDB SQL string) ---
-
-# explicit whitespace class — Java's \s set on BOTH engines (a bare \s
-# diverges on \x0B between Java and RE2; functions/tokenize.py)
-from ..functions.tokenize import WS_CHARS, WS_DUCK, WS_SPARK, words_duck, words_spark  # noqa: E402
-
-W_SPARK = words_spark()
-W_DUCK = words_duck()
-
-# k=3 word shingles over a pre-materialized words column `ws` (1-indexed
-# element access in both engines). IMPORTANT: the words array must be a real
-# column, not the split() expression inlined — Catalyst does not CSE inside
-# lambda bodies, so an inlined split re-tokenizes the document once per
-# shingle element (O(words^2) per doc; measured 10x slowdown at sf0.1).
-SH_ON_WS_SPARK = (
-    "CASE WHEN size(ws) >= 3 THEN "
-    "transform(sequence(1, size(ws) - 2), i -> "
-    "concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))) "
-    "ELSE CAST(array() AS ARRAY<STRING>) END"
-)
-
-
-# (app, plan, input files, split confs, parallelism) -> Spark's scan partition
-# count. `df.rdd` costs 30-40 ms of plan->RDD conversion per call; callers
-# rebuild the same plan over the same files many times per session.
-_NUM_PARTITIONS: dict[tuple, int] = {}
-
-
-def _num_partitions(df: DataFrame) -> int:
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    key = (
-        sc.applicationId,
-        df.semanticHash(),
-        tuple(df.inputFiles()),
-        *(
-            spark.conf.get(f"spark.sql.files.{k}", None)
-            for k in ("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
-        ),
-        sc.defaultParallelism,
-    )
-    n = _NUM_PARTITIONS.get(key)
-    if n is None:
-        n = _NUM_PARTITIONS[key] = df.rdd.getNumPartitions()
-    return n
-
-
-def _spread_docs(df: DataFrame) -> DataFrame:
-    """Ensure scan parallelism before an explode-heavy stage.
-
-    A compact local documents file is one parquet row group = ONE task, and
-    explode amplifies each row ~words-fold — so below-parallelism scans are
-    repartitioned by doc_id before the explode. When the scan already has
-    enough splits (any real multi-file corpus — at 100 TB the file listing
-    gives ~100k+ splits) this is a NO-OP: shipping the whole raw-text corpus
-    through an exchange just to "spread" it would be a pure waste there, and
-    the previous unconditional repartition did exactly that. The check reads
-    Spark's own partition count for the plan (no job runs on a scan), memoized
-    per session.
-    """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df if 2 * _num_partitions(df) >= n else df.repartition(n, "doc_id")
-
-
-def _shingles(df: DataFrame) -> DataFrame:
-    """(doc_id, s): distinct 3-word shingles, words materialized once.
-
-    Distinctness is PER DOC, and every shingle of a doc sits in one array
-    before the explode — so the dedup is array_distinct IN the row, not a
-    global .distinct() (which shuffled the whole exploded corpus for a
-    row-local property; removed round 4).
-
-    The repartition matters: a compact documents file scans as few input
-    splits, but explode amplifies each row ~words-fold and the downstream
-    hashing is the expensive part — spread rows across the cluster BEFORE the
-    explode or one task does all the work.
-    """
-    return (
-        _spread_docs(df)
-        .select("doc_id", F.expr(W_SPARK).alias("ws"))
-        .select("doc_id", F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s"))
-    )
-SH_DUCK = (
-    f"CASE WHEN len({W_DUCK}) >= 3 THEN "
-    f"list_transform(generate_series(1, len({W_DUCK}) - 2), i -> "
-    f"{W_DUCK}[i] || ' ' || {W_DUCK}[i + 1] || ' ' || {W_DUCK}[i + 2]) "
-    f"ELSE []::VARCHAR[] END"
-)
-
-
-def _shingles_hashed(df: DataFrame) -> DataFrame:
-    """(doc_id, h): distinct 60-bit md5-derived hashes of the 3-word shingles.
-
-    ZERO shuffles (round 4): per-doc distinctness is row-local, so the dedup
-    is array_distinct on the shingle STRINGS inside the row (the strings, not
-    the hashes — hashing inside a higher-order-function lambda runs
-    interpreted, measured 7x slower than the same hash post-explode in
-    codegen); the md5 then runs codegen'd on the exploded distinct shingles.
-    The previous global .distinct() was this operator's only shuffle of the
-    corpus — decontamination is now genuinely map-side end to end.
-
-    The int64 hash replaces the shingle STRING immediately after the explode,
-    so every downstream join and any broadcast membership set move 8-byte
-    keys instead of ~25-byte strings — the term that dominates shuffle volume
-    at 100 TB. Consumers that compare shingle sets across engines use the
-    identical hash AND the identical dedup-then-hash order in DuckDB
-    (SHH_DUCK), so equality is exact; a 60-bit collision folding two distinct
-    shingles is ~n^2/2^61 — the standard fingerprint trade every production
-    dedup pipeline makes.
-    """
-    return (
-        _spread_docs(df)
-        .select("doc_id", F.expr(W_SPARK).alias("ws"))
-        .select("doc_id", F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s"))
-        .select("doc_id", F.expr(hash60_spark("s")).alias("h"))
-    )
-
-N_HASHES = 16  # minhash signature length
-N_BANDS = 4  # LSH bands (4 rows per band)
 SIMHASH_BITS = 32  # 16 saturated on shared-vocab docs (28k pairs at hamming<=3); 32 discriminates
 DF_CAP = 50  # shingle document-frequency cap for the jaccard pair join
-# LSH band-bucket size cap: a degenerate corpus (thousands of identical docs)
-# puts them all in one band bucket and the pair expansion goes quadratic.
-# Buckets over the cap are dropped (the same guard DF_CAP applies to shingles);
-# a bucket of BAND_CAP docs yields at most ~BAND_CAP^2/2 pairs in one task.
-BAND_CAP = 100
-
-
-def hash60_spark(expr: str) -> str:
-    return f"CAST(conv(substr(md5(CAST({expr} AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-
-
-def hash60_duck(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
-# DuckDB twin of _shingles_hashed (same 60-bit md5-derived shingle hash)
-# dedup-then-hash, matching _shingles_hashed's in-row array_distinct order
-SHH_DUCK = (
-    "SELECT doc_id, "
-    + hash60_duck("s")
-    + " AS h FROM (SELECT DISTINCT doc_id, s FROM "
-    + f"(SELECT doc_id, unnest({SH_DUCK}) AS s FROM documents) t0) t"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -228,9 +125,6 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-STOPWORDS = "('the', 'a', 'and', 'of', 'to')"
-
-
 # text_analysis_documents (declared below, after the language helpers) absorbs
 # the former text_quality_score / lang_id_heuristic / doc_fingerprint /
 # array_map_functions quartet: same table, same per-document grain, one scan.
@@ -266,9 +160,6 @@ _FP_DUCK = """CASE WHEN text IS NULL THEN NULL
                   (acc, c) -> (acc * 31 + c) % 1000000007)
            END"""
 
-
-from ..functions.scrub import scrub_cte_duck as _scrub_cte_duck  # noqa: E402
-from ..functions.scrub import scrub_pii as _scrub_pii  # noqa: E402
 
 # GPT-2-style pretokenizer regex (Radford et al. 2019, public knowledge),
 # minus the contraction branch and the \s+(?!\S) lookahead (RE2 — DuckDB —
@@ -487,7 +378,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         _spread_docs(d)
         .select("doc_id", F.expr(W_SPARK).alias("ws"))
-        .select("doc_id", F.expr(f"array_distinct({SH_ON_WS_SPARK})").alias("shs"))
+        .select("doc_id", F.expr(DISTINCT_SHINGLES).alias("shs"))
         .select("doc_id", F.expr("inline(transform(shs, x -> struct(x AS s, size(shs) AS n_tot)))"))
         .select("doc_id", "n_tot", F.expr(hash60_spark("s")).alias("h"))
     )
@@ -536,269 +427,23 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Universal-hash minhash family: ONE md5 per shingle, 16 signature functions
-# derived arithmetically — mh_i = (A_i*g1 + B_i*g2 + C_i) mod (2^31-1) over
-# two 30-bit digest chunks. Bounds keep every product in int64 codegen range
-# (A,B < 2^30, g < 2^30 -> terms < 2^60; sum < 2^62). Replaces the round-3
-# family of 16 INDEPENDENT md5 calls per shingle ('i:'+s): interleaved A/B on
-# the signature aggregate alone measured 0.39s -> 0.28s (1.4x) at sf0.1 and
-# 9.18s -> 1.98s (4.6x) at the 200k-doc/100-word stress shape where hashing
-# dominates — the term that grows at 100 TB. Planted-pair recall invariant
-# re-verified in tests/test_lsh_twins.py; same construction style as
-# Kirsch-Mitzenmacher double hashing.
-_MH_P = 2147483647  # 2^31 - 1
-_MH_G = 1073741824  # 2^30 chunk modulus
-import random as _random  # noqa: E402
-
-_mh_rnd = _random.Random(7)
-MH_ABC = [
-    (
-        _mh_rnd.randrange(1, _MH_G),
-        _mh_rnd.randrange(1, _MH_G),
-        _mh_rnd.randrange(0, _MH_P),
-    )
-    for _ in range(N_HASHES)
-]
-
-
-def _minhash_wide(
-    spark: SparkSession, sf_dir: str, fast: bool = False, with_sets: bool = False
-) -> DataFrame:
-    """(doc_id, mh0..mh15[, shset, n_sh]): 16 signature functions min-folded
-    over the shingles, via explode + ONE hash-aggregate (map-side partial
-    min, single shuffle). `fast` switches the md5-derived universal-hash
-    family (the DuckDB-matchable oracle twin — see MH_ABC above) for
-    JVM-native xxhash64. `with_sets` also carries the distinct shingle ARRAY
-    through the same aggregation — consumers that need exact-Jaccard
-    verification then reference ONE aggregate subtree for both candidates
-    and verify sides, which measured ~40% faster end-to-end at sf0.1 than a
-    separate shingle-set aggregation (shared shuffle subtree; no persist
-    anywhere).
-
-    Deliberately NOT array_min(transform(...)): Catalyst evaluates
-    higher-order-function lambdas interpreted, outside whole-stage codegen —
-    per-shingle hashing that way measured 7x slower at sf0.1 than the same
-    hashes in a codegen'd aggregate.
-    """
-    return minhash_wide_df(
-        load_table(spark, sf_dir, "documents"), fast=fast, with_sets=with_sets
-    )
-
-
-def minhash_wide_df(
-    d: DataFrame,
-    fast: bool = False,
-    with_sets: bool = False,
-    spread: bool = True,
-    group_extra: tuple[str, ...] = (),
-    share_exchange: bool = False,
-) -> DataFrame:
-    """_minhash_wide over an arbitrary (doc_id, text, ...) DataFrame — the
-    composable form curate_corpus feeds its dedup survivors through.
-    ``spread=False`` skips the scan-parallelism check for inputs that already
-    sit downstream of a shuffle. ``group_extra`` names doc-constant columns
-    to carry through the aggregate (grouped alongside doc_id — a no-op on
-    the group shape since doc_id is unique; the cross-corpus dedup rides its
-    side marker through ONE union-side aggregate this way instead of
-    aggregating each corpus separately).
-
-    ``share_exchange`` (r14, for MULTI-consumer callers only): inserts an
-    explicit ``repartition("doc_id")`` between the per-shingle hash
-    projection and the aggregate. A caller that consumes the wide table
-    twice (cross_dedup_df: the band pass and the verify-set pass) otherwise
-    pays the scan+shingle+hash subtree once PER consumer — Catalyst inlines
-    the shared frame and nothing below the differing aggregates is reused.
-    With the exchange pinned below both aggregates, runtime stage reuse
-    executes scan+shingle+hash ONCE per action; the trade is shuffling the
-    exploded shingle rows instead of map-combined partials (narrowest
-    possible columns: (doc_id, h, g2) for the md5 family — g1 is derived
-    from h post-shuffle — and (doc_id, s) for the fast family, whose 16
-    seeded xxhash64 mins need the shingle itself). Measured at the 1M-doc
-    stress on dedup_against_reference_fast, two interleaved rounds:
-    8.76/9.90 -> 7.76/8.45 s (and beats the materialize() variant both
-    rounds). Single-consumer callers must keep the default: the explicit
-    exchange would forfeit map-side combine for nothing."""
-    # explode WITHOUT the _shingles .distinct(): collect_set dedups and min is
-    # duplicate-insensitive, so the extra (doc_id, s) shuffle buys nothing
-    sh = (
-        (_spread_docs(d) if spread else d)
-        .select("doc_id", *group_extra, F.expr(W_SPARK).alias("ws"))
-        .select("doc_id", *group_extra, F.explode(F.expr(SH_ON_WS_SPARK)).alias("s"))
-    )
-    # each signature aggregate is ONE parsed SQL expression: the Column-API
-    # forms cost ~10 py4j round-trips per signature (~0.3 s per call at
-    # N_HASHES=16, x2 for the cross-corpus twins — r13 cProfile); the parsed
-    # text analyzes to the identical aggregate (and for the md5 branch it is
-    # the same text the DuckDB oracle runs, _MH_MINS).
-    if fast:
-        if share_exchange:
-            sh = sh.repartition("doc_id")
-        aggs = [F.expr(f"min(xxhash64({i}, s)) AS mh{i}") for i in range(N_HASHES)]
-    else:
-        # the digest is materialized as REAL COLUMNS before the aggregate so
-        # codegen computes md5 once per shingle, not once per signature; `h`
-        # is the same 60-bit prefix hash as _shingles_hashed/hash60, carved
-        # from the SAME digest — set-carrying consumers dedup/intersect on it
-        # g1 is carved from h, not from its own conv: h holds digest bits
-        # 0-59, so bits 0-31 (hex chars 1-8) are shiftright(h, 28) — one
-        # string decode fewer per shingle. g2 (chars 9-16 = bits 32-63)
-        # overruns h's 60 bits and keeps its own conv.
-        sh = sh.select(
-            "doc_id",
-            *group_extra,
-            F.expr("md5(CAST(s AS BINARY))").alias("mhex"),
-        ).select(
-            "doc_id",
-            *group_extra,
-            F.expr("CAST(conv(substr(mhex, 1, 15), 16, 10) AS BIGINT)").alias("h"),
-            F.expr(f"CAST(conv(substr(mhex, 9, 8), 16, 10) AS BIGINT) % {_MH_G}").alias("g2"),
-        )
-        if share_exchange:
-            # exchange the narrow (doc_id, extra, h, g2) rows; g1 derives
-            # from h post-shuffle, so the shuffle carries ~24B/shingle
-            sh = sh.repartition("doc_id")
-        sh = sh.withColumn("g1", F.expr(f"shiftright(h, 28) % {_MH_G}"))
-        aggs = [
-            F.expr(f"min(({a} * g1 + {b} * g2 + {c}) % {_MH_P}) AS mh{i}")
-            for i, (a, b, c) in enumerate(MH_ABC)
-        ]
-    if with_sets:
-        # int64 hash sets, not string sets: smaller aggregation state and a
-        # ~8-byte-per-element array_intersect on the verify side
-        hcol = F.xxhash64(F.col("s")) if fast else F.col("h")
-        return (
-            sh.groupBy("doc_id", *group_extra)
-            .agg(F.collect_set(hcol).alias("shset"), *aggs)
-            .withColumn("n_sh", F.size("shset"))
-        )
-    return sh.groupBy("doc_id", *group_extra).agg(*aggs)
-
-
-# build the oracle SQL for minhash queries programmatically (the identical
-# universal-hash family: one md5, two 30-bit chunks, 16 affine combos)
-_MH_MINS = ",\n           ".join(
-    f"MIN(({a} * g1 + {b} * g2 + {c}) % {_MH_P}) AS mh{i}"
-    for i, (a, b, c) in enumerate(MH_ABC)
-)
-
-
-def mh_cte_fragment(src: str = "documents", suffix: str = "") -> str:
-    """The sh/m minhash CTE bodies (no leading WITH) over any source relation
-    with (doc_id, text) — `documents` for the standalone queries, `dd` (the
-    exact-dedup survivors) for the composed curation chain. ``suffix`` renames
-    the CTEs (sh_n/m_n, ...) so two corpora can coexist in one oracle
-    (cross-corpus dedup)."""
-    return f"""sh{suffix} AS (
-      SELECT DISTINCT doc_id, s FROM (
-        SELECT doc_id, unnest({SH_DUCK}) AS s FROM {src}) t),
-    m{suffix} AS (
-      SELECT doc_id,
-           {_MH_MINS}
-      FROM (
-        SELECT doc_id,
-               ('0x' || substr(mhex, 1, 8))::BIGINT % {_MH_G} AS g1,
-               ('0x' || substr(mhex, 9, 8))::BIGINT % {_MH_G} AS g2
-        FROM (SELECT doc_id, md5(s) AS mhex FROM sh{suffix}) t1) t2
-      GROUP BY doc_id)
-"""
-
-
 _MH_CTE = "\n    WITH " + mh_cte_fragment()
-
-
-_R = N_HASHES // N_BANDS  # rows per band
-
-
-def bands_sql(m: str = "m") -> str:
-    """The band-key UNION ALL body over a minhash-wide CTE named ``m``."""
-    return "\n      UNION ALL\n".join(
-        "      SELECT doc_id, {b} AS band, concat_ws(',', {cols}) AS bkey FROM {m}".format(
-            b=b, m=m, cols=", ".join(f"mh{b * _R + j}" for j in range(_R))
-        )
-        for b in range(N_BANDS)
-    )
-
-
-_BANDS_SQL = bands_sql()
-# band buckets over BAND_CAP docs are dropped before pair expansion (both
-# engines), killing the degenerate-corpus quadratic
-_OKB_SQL = f"""
-    okb AS (
-      SELECT band, bkey FROM bands
-      GROUP BY band, bkey HAVING COUNT(*) BETWEEN 2 AND {BAND_CAP})"""
-_CAND_SQL = """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN okb ON okb.band = a.band AND okb.bkey = a.bkey
-      JOIN bands b ON b.band = a.band AND b.bkey = a.bkey
-        AND a.doc_id < b.doc_id)"""
-
-
-def _band_structs() -> list:
-    return [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(",", *[f"mh{b * _R + j}" for j in range(_R)]).alias("bkey"),
-        )
-        for b in range(N_BANDS)
-    ]
-
-
-def band_rows(wide: DataFrame) -> DataFrame:
-    """(doc_id, band, bkey): the band-key explode over a minhash-wide table —
-    THE definition of a band key, shared by every candidate generator
-    (single-corpus pairs here, cross-corpus in plans/crossdedup.py) so the
-    band shape can never fork between them."""
-    return wide.select(
-        "doc_id", F.explode(F.array(*_band_structs())).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bkey")
-
-
-def _band_candidates(wide: DataFrame) -> DataFrame:
-    """LSH candidate pairs via IN-BUCKET expansion: group each (band, bkey)
-    bucket, cap its size at BAND_CAP, and expand the sorted doc list to
-    ordered pairs inside the bucket row.
-
-    Versus the round-1 band self-join: the band table is computed ONCE (no
-    persist needed, nothing leaks into the session cache), and a degenerate
-    bucket can't go quadratic — it's dropped by the cap, the same guard
-    DF_CAP applies to frequent shingles.
-    """
-    bands = band_rows(wide)
-    # size gate precedes the collect (capped_buckets): a band signature shared
-    # by millions of near-identical docs is dropped by a streaming count, not
-    # after materializing the full id list in one aggregation buffer
-    buckets = capped_buckets(bands, ["band", "bkey"], "doc_id", cap=BAND_CAP)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), y -> "
-        "struct(x AS doc_a, y AS doc_b))))"
-    )
-    return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
 
 
 @declare(
     "minhash_lsh_pairs",
     oracle=_MH_CTE
     + f""",
-    bands AS (
-{_BANDS_SQL}),
-{_OKB_SQL},
-{_CAND_SQL}
+{BAND_CAND_SQL}
     SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b
     """,
-    doc=f"MinHash-LSH candidate pairs: {N_BANDS} bands x {_R} rows; docs "
+    doc=f"MinHash-LSH candidate pairs: {N_BANDS} bands x {N_HASHES // N_BANDS} rows; docs "
     "sharing any full band signature become candidates. The scale path for "
     "near-dup at 100 TB: one shuffle on band keys, in-bucket pair expansion "
     f"capped at {BAND_CAP} docs per bucket — never an all-pairs join.",
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = _minhash_wide(spark, sf_dir)
+    wide = minhash_wide_df(load_table(spark, sf_dir, "documents"))
     return _band_candidates(wide).orderBy("doc_a", "doc_b")
 
 
@@ -835,37 +480,8 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding similarity search
 # ---------------------------------------------------------------------------
 
-# Shared HOF vector math (functions/vec.py — see its docstring for why the
-# unrolled-codegen alternative loses under composition). The DuckDB twins
-# hardcode the fixture width, range(1, 65).
-from ..functions.vec import dot_sql as _dot_sql  # noqa: E402
-from ..functions.vec import norm_sql as _norm_sql  # noqa: E402
-
-_DOT_DUCK = "list_sum(list_transform(range(1, 65), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))"
-_NORM_DUCK = "sqrt(list_sum(list_transform(range(1, 65), i -> {a}[i]::DOUBLE * {a}[i]::DOUBLE)))"
-
-
-# cosine with a nullif-guarded denominator: a ZERO vector (padding row,
-# failed encode — inevitable in a 100 TB corpus) has norm 0 and Spark's
-# ANSI-mode division THROWS ArithmeticException where DuckDB yields NaN/inf.
-# Cosine is undefined for zero vectors: both engines yield NULL and the
-# consumers exclude it explicitly. Caught by the adversarial probe, not the
-# fixtures (which contain no zero vectors).
-def _cosine_prenormed(a: str, b: str, an: str, bn: str):
-    """Cosine from PRE-COMPUTED norm columns: the norms are built once per
-    vector before the pair join instead of re-evaluated per pair after it —
-    same IEEE values (sqrt and multiply are correctly rounded), ~3x less
-    arithmetic per candidate pair."""
-    return F.expr(_dot_sql(a, b)) / F.expr(
-        f"nullif({an} * {bn}, CAST(0 AS DOUBLE))"
-    )
-
-
-def _cosine_duck(a: str, b: str) -> str:
-    return (
-        f"({_DOT_DUCK.format(a=a, b=b)}"
-        f" / nullif({_NORM_DUCK.format(a=a)} * {_NORM_DUCK.format(a=b)}, 0))"
-    )
+# Shared HOF vector math: functions/vec.py (see its docstring for why the
+# unrolled-codegen alternative loses under composition).
 
 
 @declare(
@@ -901,10 +517,10 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
-        F.expr(_norm_sql("embedding")).alias("_qn"),
+        F.expr(norm_sql("embedding")).alias("_qn"),
     )
     corpus = e.select(
-        "vec_id", "embedding", F.expr(_norm_sql("embedding")).alias("_en")
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("_en")
     )
     pairs = F.broadcast(q).crossJoin(corpus).filter(F.col("vec_id") != F.col("q_id"))
     sim = F.round(_cosine_prenormed("qe", "embedding", "_qn", "_en"), 6)
@@ -918,15 +534,6 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.filter(F.col("rnk") <= 5).select(
         "q_id", "vec_id", "sim", F.col("rnk").cast("int").alias("rnk")
     ).orderBy("q_id", "rnk")
-
-
-def _lsh_bucket_sql(elem_fmt: str) -> str:
-    """8 fixed planes for the ORACLE-CHECKED query (DuckDB evaluates the
-    identical literal arithmetic). The scale path derives the plane count
-    from corpus size — operators/hyperplane.py."""
-    from ..operators.hyperplane import bucket_sql, lsh_planes
-
-    return bucket_sql(lsh_planes(8, 64), elem_fmt)
 
 
 # ---------------------------------------------------------------------------
@@ -959,15 +566,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition("doc_id").orderBy("doc_id")
 
 
-_JACCARD_VERIFY_SQL = f"""
-    shh AS (SELECT DISTINCT doc_id, {hash60_duck('s')} AS h FROM sh),
-    n AS (SELECT doc_id, COUNT(*) AS n_sh FROM shh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN shh sa ON sa.doc_id = c.doc_a
-      JOIN shh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-      GROUP BY c.doc_a, c.doc_b)
+_NEAR_DUP_ORACLE = f"""{_MH_CTE},
+{BAND_CAND_SQL},
+{JACCARD_COMMON_SQL}
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common), 6) AS jaccard
     FROM common
@@ -976,16 +577,6 @@ _JACCARD_VERIFY_SQL = f"""
     WHERE CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common) >= 0.5
     ORDER BY doc_a, doc_b
 """
-
-_NEAR_DUP_ORACLE = (
-    _MH_CTE
-    + f""",
-    bands AS (
-{_BANDS_SQL}),
-{_OKB_SQL},
-{_CAND_SQL},"""
-    + _JACCARD_VERIFY_SQL
-)
 
 
 @declare(
@@ -1001,63 +592,6 @@ _NEAR_DUP_ORACLE = (
 )
 def dedup_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs_df(load_table(spark, sf_dir, "documents"))
-
-
-def near_dup_pairs_df(
-    d: DataFrame, threshold: float = 0.5, spread: bool = True
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard) LSH+verified near-dup pairs over an arbitrary
-    (doc_id, text, ...) DataFrame — the composable form of
-    dedup_near_duplicates (which binds it to the documents table)."""
-    # ONE aggregate carries signatures AND shingle sets; each candidate pair
-    # MELTS into an (a-side, b-side) row pair so the set table joins ONCE —
-    # with per-side joins the shared subtree executed three times (candidates
-    # + both sides; lambda-bearing subtrees never pass ReuseExchange), the
-    # melt holds it to two, trading a full corpus md5+aggregate pass for a
-    # candidate-sized reassembly aggregate (candidates << corpus at any
-    # scale). Still no persist anywhere.
-    full = minhash_wide_df(d, with_sets=True, spread=spread)
-    cand = _band_candidates(full)
-    return verified_jaccard(cand, full, threshold=threshold).orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-def verified_jaccard(
-    cand: DataFrame,
-    sets: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """(a, b, jaccard >= threshold) over candidate pairs, via the melted
-    one-join verify: each pair melts into an (a-side, b-side) row pair so
-    the (doc_id, shset, n_sh) set table joins ONCE — with per-side joins
-    the shared aggregate subtree executed three times (candidates + both
-    sides; lambda-bearing subtrees never pass ReuseExchange). ``sets`` may
-    be a union of several corpora as long as doc ids are globally unique."""
-    sides = cand.select(
-        a,
-        b,
-        F.explode(
-            F.expr(f"array(struct('a' AS role, {a} AS d), struct('b' AS role, {b} AS d))")
-        ).alias("r"),
-    ).select(a, b, "r.role", "r.d")
-    ver = (
-        sides.join(sets.select(F.col("doc_id").alias("d"), "shset", "n_sh"), "d")
-        .groupBy(a, b)
-        .agg(
-            F.first(F.when(F.col("role") == "a", F.col("shset")), ignorenulls=True).alias("set_a"),
-            F.first(F.when(F.col("role") == "b", F.col("shset")), ignorenulls=True).alias("set_b"),
-            F.first(F.when(F.col("role") == "a", F.col("n_sh")), ignorenulls=True).alias("na"),
-            F.first(F.when(F.col("role") == "b", F.col("n_sh")), ignorenulls=True).alias("nb"),
-        )
-    )
-    n_common = F.size(F.array_intersect("set_a", "set_b"))
-    jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-    return ver.filter(jac >= threshold).select(
-        a, b, F.round(jac, 6).alias("jaccard")
-    )
 
 
 @declare(
@@ -1087,8 +621,6 @@ def verified_jaccard(
     "on synthetic random vectors (max pairwise sim ~0.51).",
 )
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.hyperplane import hyperplane_near_dup_pairs
-
     e = load_table(spark, sf_dir, "embeddings")
     pairs = hyperplane_near_dup_pairs(e, threshold=0.3, n_planes=8, cap=BAND_CAP)
     return pairs.select(
@@ -1096,56 +628,6 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").alias("vec_b"),
         F.round("sim", 6).alias("sim"),
     ).orderBy("vec_a", "vec_b")
-
-
-def _ivf_centroids() -> list[list[float]]:
-    """The committed learned coarse quantizer (fixtures/ivf_centroids.parquet,
-    fit by scripts/gen_ivf_fixture.py with operators/kmeans.fit_kmeans — the
-    real IVF index-build step, run once offline). Both engines inline these
-    as literals, so cell assignment is engine-exact at every scale factor."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    t = pq.read_table(os.path.join(repo_root, "fixtures", "ivf_centroids.parquet"))
-    return [list(c) for c in t.column("centroid").to_pylist()]
-
-
-_IVF_CENTS = _ivf_centroids()
-_NPROBE = 2
-
-
-def _ivf_dist_spark(vec_col: str, cent: list[float]) -> str:
-    """Quantized squared L2 to one centroid: per-position floor((x-c)^2*1e12)
-    int64 terms, summed — order-independent exact ints, identical in DuckDB."""
-    lits = ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in cent)
-    return (
-        f"aggregate(zip_with({vec_col}, array({lits}), "
-        "(x, y) -> CAST(floor((CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y) "
-        "* CAST(1000000000000 AS DOUBLE)) AS BIGINT)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
-def _ivf_cell_struct_array(vec_col: str, cents: list[list[float]] | None = None) -> str:
-    structs = ", ".join(
-        f"struct({_ivf_dist_spark(vec_col, c)} AS dist, {j} AS cell)"
-        for j, c in enumerate(_IVF_CENTS if cents is None else cents)
-    )
-    return f"array({structs})"
-
-
-_IVF_CENT_VALUES_DUCK = ",\n      ".join(
-    "({j}, [{vals}])".format(
-        j=j, vals=", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in c)
-    )
-    for j, c in enumerate(_IVF_CENTS)
-)
-_IVF_DIST_DUCK = (
-    "SUM(CAST(floor((CAST({vec}[i] AS DOUBLE) - cv[i]) * (CAST({vec}[i] AS DOUBLE) - cv[i])"
-    " * CAST(1000000000000 AS DOUBLE)) AS BIGINT))"
-)
 
 
 @declare(
@@ -1196,69 +678,6 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_probe_topk(e, _IVF_CENTS)
 
 
-def ivf_probe_topk(
-    e: DataFrame,
-    cents: list[list[float]],
-    nprobe: int = _NPROBE,
-    topk: int = 3,
-    n_queries: int = 5,
-) -> DataFrame:
-    """IVF search given a coarse quantizer: assign every corpus vector to its
-    nearest centroid, probe the `nprobe` nearest cells per query, exact
-    cosine only within probed cells. Shared by embedding_ivf_topk (committed
-    fixture model, oracle-checked) and embedding_ivf_learned_topk (model fit
-    at call time)."""
-    from ..operators.kmeans import quantized_assign_udf
-
-    # index build (offline in a real system, inline here): nearest learned
-    # centroid per vector as ONE Arrow-batched numpy pass — bit-exact vs the
-    # oracle (same quantized int64 per-dim distance, same lowest-cell
-    # tiebreak; see quantized_assign_udf). The cell becomes a plain column on
-    # the corpus scan, so the index build adds NO join, NO explode, and NO
-    # aggregation — the round-3 codegen'd explode + broadcast-centroid-join +
-    # two-aggregation form (k*dims row amplification) measured 1.18s vs
-    # 0.69s for this form at sf0.1 (1.7x), and its amplification grows with
-    # k*dims at 100 TB while the batch pass stays one scan (interpreted HOF
-    # lambdas were 2.5x slower still).
-    assign = quantized_assign_udf(cents)
-    ecell = e.select(
-        "vec_id",
-        "embedding",
-        assign(F.col("embedding")).alias("cell"),
-        F.expr(_norm_sql("embedding")).alias("_en"),
-    )
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.expr(_norm_sql("embedding")).alias("_qn"),
-    )
-    # probe cells: the nprobe nearest of the k (dist, cell) structs, sorted
-    qcells = q.select(
-        "q_id",
-        "qe",
-        "_qn",
-        F.explode(
-            F.expr(f"slice(array_sort({_ivf_cell_struct_array('qe', cents)}), 1, {nprobe})")
-        ).alias("pc"),
-    ).select("q_id", "qe", "_qn", F.col("pc.cell").alias("cell"))
-    sim = F.round(_cosine_prenormed("qe", "embedding", "_qn", "_en"), 6)
-    sims = (
-        F.broadcast(qcells)
-        .join(ecell, "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", sim.alias("sim"))
-        .filter(F.col("sim").isNotNull())
-    )
-    return (
-        sims.withColumn(
-            "rnk", F.row_number().over(Window.partitionBy("q_id").orderBy(F.col("sim").desc(), "vec_id"))
-        )
-        .filter(F.col("rnk") <= topk)
-        .select("q_id", "vec_id", "sim", F.col("rnk").cast("int").alias("rnk"))
-        .orderBy("q_id", "rnk")
-    )
-
-
 @declare(
     "embedding_ivf_learned_topk",
     oracle=None,  # the quantizer is FIT at call time (iterative Lloyd's — not SQL-expressible); the fixture-model twin embedding_ivf_topk is the oracle-checked one
@@ -1272,8 +691,6 @@ def ivf_probe_topk(
     "is bounded in tests/test_kmeans.py on a planted clustered corpus.",
 )
 def embedding_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import fit_kmeans
-
     e = load_table(spark, sf_dir, "embeddings")
     cents = fit_kmeans(e, k=8, iters=4, init="spread")
     # nprobe=3 of 8 cells: Lloyd's routinely splits a natural cluster across
@@ -1292,7 +709,7 @@ def embedding_ivf_learned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle-verified while the fast path stays benchmarked.",
 )
 def minhash_lsh_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = _minhash_wide(spark, sf_dir, fast=True)
+    wide = minhash_wide_df(load_table(spark, sf_dir, "documents"), fast=True)
     return _band_candidates(wide).orderBy("doc_a", "doc_b")
 
 
@@ -1310,7 +727,6 @@ def minhash_lsh_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.embed import embed_texts
-    from ..operators.hyperplane import hyperplane_near_dup_pairs
 
     d = load_table(spark, sf_dir, "documents")
     emb = embed_texts(_spread_docs(d), dims=64).withColumnRenamed("doc_id", "vec_id")
@@ -1327,39 +743,6 @@ def text_embed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("sim", 6).alias("cosine"),
     ).orderBy("doc_a", "doc_b")
 
-
-# the LSH-band + Jaccard-verify + transitive-closure CTE chain (assumes the
-# sh/m minhash CTEs are already in scope; must sit under a WITH RECURSIVE):
-# verified pairs -> symmetric edges -> reachability -> keeper = min doc_id
-# reachable, exactly the alternating-min fixpoint connected_components
-# converges to. Shared verbatim by the dedup_clusters oracle (over documents)
-# and the curate_corpus oracle (over the exact-dedup survivors).
-CLUSTER_EDGES_FRAGMENT = f"""
-    bands AS (
-{_BANDS_SQL}),
-{_OKB_SQL},
-{_CAND_SQL},
-    shh AS (SELECT DISTINCT doc_id, {hash60_duck('s')} AS h FROM sh),
-    n AS (SELECT doc_id, COUNT(*) AS n_sh FROM shh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN shh sa ON sa.doc_id = c.doc_a
-      JOIN shh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-      GROUP BY c.doc_a, c.doc_b),
-    verified AS (
-      SELECT doc_a, doc_b FROM common
-      JOIN n na ON na.doc_id = doc_a
-      JOIN n nb ON nb.doc_id = doc_b
-      WHERE CAST(n_common AS DOUBLE) / (na.n_sh + nb.n_sh - n_common) >= 0.5),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM verified
-      UNION SELECT doc_b, doc_a FROM verified),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach AS (
-      SELECT node AS src, node AS dst FROM nodes
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.dst)"""
 
 _CLUSTERS_ORACLE = (
     "    WITH RECURSIVE"

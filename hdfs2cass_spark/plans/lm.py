@@ -36,9 +36,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from ..operators.ckpt import materialize
+from ..operators.text import _spread_docs
 from ..sources import load_table
-from .llm import W_DUCK, W_SPARK, _spread_docs, hash60_duck, hash60_spark
 from .registry import declare
 
 _LOGP_DEC = "DECIMAL(20, 9)"

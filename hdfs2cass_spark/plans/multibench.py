@@ -28,8 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_SPARK, hash60_duck, hash60_spark
+from ..operators.text import SHH_DUCK, _spread_docs, shingle_hashes
 from ..sources import load_table
-from .llm import SHH_DUCK, _shingles_hashed, hash60_duck, hash60_spark
 from .registry import declare
 
 N_SUITES = 3
@@ -80,7 +81,9 @@ _SUITES = [f"suite{c}" for c in "ABC"]
 )
 def decontamination_by_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = _shingles_hashed(d)  # (doc_id, h) distinct; spreads internally
+    sh = shingle_hashes(  # (doc_id, h) distinct
+        _spread_docs(d).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    )
     lab = sh.withColumn("bid", F.expr(_BID_SPARK))
     bench = (
         lab.filter(F.col("bid") < N_SUITES)

@@ -21,17 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from ..operators.ckpt import materialize
+from ..operators.text import SHH_DUCK, _spread_docs, shingle_hashes
 from ..sources.readers import load_table
-from .llm import (
-    SHH_DUCK,
-    W_DUCK,
-    W_SPARK,
-    _shingles_hashed,
-    _spread_docs,
-    hash60_duck,
-    hash60_spark,
-)
 from .registry import declare
 
 # Benchmark-set membership: a pure md5 function of doc_id (~5% of docs), the
@@ -59,7 +52,7 @@ _BENCH_DUCK = hash60_duck("'bench:' || CAST(doc_id AS VARCHAR)") + " % 20 = 0"
     doc="Benchmark decontamination: per training doc, how many of its distinct "
     "3-word shingles appear anywhere in the benchmark (eval-suite) shingle "
     "set. Membership is checked on 60-bit md5-derived shingle HASHES "
-    "(_shingles_hashed; the oracle hashes identically) — the broadcast set "
+    "(shingle_hashes; the oracle hashes identically) — the broadcast set "
     "and the probe keys are 8-byte ints, not ~25-byte strings. 100 TB "
     "shape: the benchmark set is tiny next to the corpus, so its "
     "distinct-hash table is BROADCAST and the check is a map-side left "
@@ -68,7 +61,9 @@ _BENCH_DUCK = hash60_duck("'bench:' || CAST(doc_id AS VARCHAR)") + " % 20 = 0"
 )
 def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = _shingles_hashed(d)  # (doc_id, h) distinct
+    sh = shingle_hashes(  # (doc_id, h) distinct
+        _spread_docs(d).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    )
     is_bench = F.expr(_BENCH_SPARK)
     bench = sh.filter(is_bench).select("h").distinct()
     train = sh.filter(~is_bench)
@@ -134,8 +129,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# Bigrams over the materialized words column (same CSE rule as SH_ON_WS_SPARK:
-# inlining split() into the lambda re-tokenizes per element).
+# Bigrams over the materialized words column (same CSE rule as the 3-word
+# shingles in functions/tokenize.py: inlining split() into the lambda
+# re-tokenizes per element).
 _BG_ON_WS_SPARK = (
     "CASE WHEN size(ws) >= 2 THEN "
     "transform(sequence(1, size(ws) - 1), i -> "

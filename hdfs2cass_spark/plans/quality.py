@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.tokenize import STOPWORDS, W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from ..sources.readers import load_table
-from .llm import STOPWORDS, W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from .registry import declare
 
 # ---------------------------------------------------------------------------

@@ -49,9 +49,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import STOPWORDS, W_DUCK, W_SPARK
 from ..operators.classifier import fit_logreg, margin_duck, margin_expr
+from ..operators.text import _spread_docs
 from ..sources.readers import load_table
-from .llm import STOPWORDS, W_DUCK, W_SPARK, _spread_docs
 from .registry import declare
 from .textembed import _embed_md5_duck_ctes
 

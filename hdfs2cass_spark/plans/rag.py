@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.tokenize import words_duck
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, words_duck
+from ..functions.vec import _cosine_duck, _cosine_prenormed
 from ..functions.vec import norm_sql as _norm_sql
 from ..sources import load_table
-from .llm import W_DUCK, W_SPARK, _cosine_duck, _cosine_prenormed, hash60_duck
 from .pipeline import (
     CHUNK_LAST_DUCK,
     CHUNK_LAST_SPARK,

@@ -18,9 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_DUCK
 from ..sources.readers import load_table
 from .compose import CTE_CHAIN, curation_funnel as _curation_funnel
-from .llm import W_DUCK
 from .registry import declare
 
 declare(

@@ -51,15 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.vec import _cosine_duck, _cosine_prenormed, norm_sql
+from ..operators.kmeans import _IVF_CENTS, _IVF_CENT_VALUES_DUCK, _IVF_DIST_DUCK
 from ..sources.readers import load_table
-from .llm import (
-    _IVF_CENT_VALUES_DUCK,
-    _IVF_CENTS,
-    _IVF_DIST_DUCK,
-    _cosine_duck,
-    _cosine_prenormed,
-    _norm_sql,
-)
 from .registry import declare
 
 # tau for the synthetic fixture corpus: its vectors are well-separated
@@ -87,7 +81,7 @@ def semdedup_df(
         "vec_id",
         "embedding",
         assign(F.col("embedding")).alias("cell"),
-        F.expr(_norm_sql("embedding")).alias("_n"),
+        F.expr(norm_sql("embedding")).alias("_n"),
     )
     # exact-duplicate collapse: rep = lowest vec_id per identical embedding
     # (cell is a function of the embedding, so grouping by the vector alone

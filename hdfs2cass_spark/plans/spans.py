@@ -34,15 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from ..sources import load_table
 from .pipeline import (
     _BENCH_DUCK,
     _BENCH_SPARK,
     SUBSTR_K,
-    W_DUCK,
-    W_SPARK,
-    hash60_duck,
-    hash60_spark,
     substring_dup_flags,
     substring_gram_positions,
 )

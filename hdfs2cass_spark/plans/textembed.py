@@ -32,16 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_DUCK, hash60_duck
+from ..functions.vec import _cosine_duck
 from ..operators.cc import connected_components
+from ..operators.hyperplane import _lsh_bucket_sql
+from ..operators.text import BAND_CAP, _spread_docs
 from ..sources import load_table
-from .llm import (
-    BAND_CAP,
-    W_DUCK,
-    _cosine_duck,
-    _lsh_bucket_sql,
-    _spread_docs,
-    hash60_duck,
-)
 from .registry import declare
 
 _DIMS = 64

@@ -12,7 +12,7 @@ SUBSTR_K + WINNOW_W - 1 words produces at least one shared fingerprint
 
 Relation to the neighbors in this engine: the exact-substring family
 (plans/pipeline.py, plans/spans.py) keeps EVERY gram (exact spans, big
-index); minhash (plans/llm.py) keeps a similarity SKETCH (whole-doc
+index); minhash (operators/text.py) keeps a similarity SKETCH (whole-doc
 Jaccard, no positions). Winnowing sits between them: positional evidence
 like the gram table at a fraction of its size — the right index for
 "which documents share a passage with this one" at corpus scale.
@@ -35,9 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from ..operators.buckets import capped_buckets
 from ..sources.readers import load_table
-from .llm import W_DUCK, W_SPARK, hash60_duck, hash60_spark
 from .pipeline import SUBSTR_K
 from .present import present_sorted
 from .registry import declare

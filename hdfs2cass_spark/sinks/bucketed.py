@@ -287,10 +287,3 @@ def join_salted(
         .join(spark.table(replicated_table), [on, SALT_COL])
         .drop(SALT_COL)
     )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back with its bucketing metadata (a plain
-    ``spark.read.parquet(path)`` would lose it — the catalog carries the
-    bucket spec, not the files)."""
-    return spark.table(table)

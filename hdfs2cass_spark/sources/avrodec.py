@@ -481,20 +481,6 @@ def iter_file_blocks(f, header: dict, start: int, end: int):
         pos = f.tell()
 
 
-def iter_records(path: str, start: int = 0, end: int | None = None):
-    """Decode records from one container file (or a byte range of it)."""
-    with open(path, "rb") as f:
-        header = read_header(f)
-        dec = compile_decoder(header["schema"])
-        if end is None:
-            f.seek(0, 2)
-            end = f.tell()
-        for payload, n in iter_file_blocks(f, header, start, end):
-            buf = io.BytesIO(payload)
-            for _ in range(n):
-                yield dec(buf)
-
-
 def write_container(path: str, schema, rows, codec: str = "null",
                     sync: bytes | None = None, block_records: int = 4096) -> int:
     """Write rows (dicts matching the record schema) as one container file.

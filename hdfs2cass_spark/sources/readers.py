@@ -71,16 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str | list[str], name: str) -> DataF
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views (used by SQL-form queries)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_legacy_text(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """S2: read legacy tab-separated lines from text files -> (line) rows, the
     input shape operators/legacy.parse_legacy_lines consumes.

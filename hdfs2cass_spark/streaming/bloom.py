@@ -4,7 +4,7 @@ plans/bloom.py ``bloom_decontamination``'s filter build.
 A live eval-suite registry appends benchmark documents over time; the
 contamination filter must grow WITH it without ever rebuilding from
 scratch. Per arriving micro-batch of benchmark docs: hash their distinct
-shingles (the shared plans/llm.py arithmetic), fold them into sparse
+shingles (the shared operators/text.py arithmetic), fold them into sparse
 (w, v) filter words (the shared plans/bloom.py bloom_word_rows), and
 append to an accumulating word index (streaming/index.py machinery).
 
@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_SPARK
+from ..operators.text import _spread_docs, shingle_hashes
 from ..plans.bloom import bloom_probe_df, bloom_word_rows, dense_words
-from ..plans.llm import _shingles_hashed
 
 
 def stream_bloom_enroll(
@@ -58,7 +59,9 @@ def stream_bloom_enroll(
                 fold=lambda df: df.groupBy("w").agg(F.expr("bit_or(v)").alias("v")),
             )
         n = spark.sparkContext.defaultParallelism
-        sh = _shingles_hashed(batch_df.repartition(n, "doc_id")).select("h")
+        sh = shingle_hashes(
+            batch_df.repartition(n, "doc_id").select(F.expr(W_SPARK).alias("ws"))
+        )
         append(bloom_word_rows(sh), index_path, batch_id)
 
     writer = bench_stream.writeStream.foreachBatch(write_batch).option(
@@ -90,6 +93,5 @@ def bloom_report(
     filter — the batch bloom_decontamination probe over the streamed-in
     benchmark: identical output schema (doc_id, n_shingles, n_bloom_hits,
     bloom_frac, flagged)."""
-    return bloom_probe_df(
-        _shingles_hashed(train_docs), read_bloom_words(spark, index_path)
-    )
+    sh = shingle_hashes(_spread_docs(train_docs).select("doc_id", F.expr(W_SPARK).alias("ws")))
+    return bloom_probe_df(sh, read_bloom_words(spark, index_path))

@@ -1,7 +1,8 @@
 """Streaming bulk-load: the reference dataflow fed by a stream.
 
-The reference is batch-only; this extension runs the same
-reshape -> token-route -> sorted-bucket sink per micro-batch via foreachBatch.
+The reference is batch-only; this extension runs the batch ``bulk_load``
+(reshape -> token-route -> sorted-bucket sink, every output-URI option
+included) per micro-batch via foreachBatch.
 Each micro-batch appends its own token-sorted bucket files — the same
 append-only-within-bucket contract, amortized over time. A real deployment
 points the writer at the Cassandra connector instead of parquet; everything
@@ -19,8 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from ..config import CassandraParams
-from ..operators.partitioning import binary_key_expr, route_to_buckets
-from ..operators.reshape import reshape_cql, resolve_rowkey
+from ..sinks.pipeline import bulk_load
+from ..sinks.simulated import write_simulated_sstables
 
 
 def stream_bulk_load(
@@ -37,25 +38,24 @@ def stream_bulk_load(
 ):
     """Start the streaming bulk-load query; returns the StreamingQuery."""
     params = CassandraParams.parse(output_uri)
-    n = params.num_partitions()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # tokens come from the TYPED key bytes (_pk), exactly like the batch
-        # pipeline — tokenizing the stringified rowkey diverges from the real
-        # ring for every non-string key. The upfront repartition spreads a
-        # one-file micro-batch (ONE scan partition) so the token UDF doesn't
-        # run single-core before the bucket shuffle.
-        rk = resolve_rowkey(batch_df.columns, rowkey)
+        # The upfront repartition spreads a one-file micro-batch (ONE scan
+        # partition) so the token UDF doesn't run single-core before the
+        # bucket shuffle.
         npart = batch_df.sparkSession.sparkContext.defaultParallelism
-        batch_df = batch_df.repartition(npart)
-        keyed = batch_df.withColumn("_pk", binary_key_expr(batch_df, [rk]))
-        reshaped = reshape_cql(
-            keyed, rk, timestamp, ttl, ignore, now_ms=now_ms, passthrough=["_pk"]
+        routed = bulk_load(
+            batch_df.repartition(npart),
+            output_uri,
+            rowkey=rowkey,
+            timestamp=timestamp,
+            ttl=ttl,
+            ignore=ignore,
+            now_ms=now_ms,
         )
-        routed = route_to_buckets(
-            reshaped, n, key_col="_pk", distribute_randomly=params.distribute_randomly
+        write_simulated_sstables(
+            routed, sink_path, mode="append", compressionclass=params.compressionclass
         )
-        routed.write.mode("append").partitionBy("bucket").parquet(sink_path)
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

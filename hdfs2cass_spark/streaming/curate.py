@@ -43,8 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.tokenize import W_SPARK
 from ..plans.compose import MAX_CONTAM_FRAC, MIN_UNIQ_RATIO, MIN_WORDS
-from ..plans.llm import W_SPARK
 from ..plans.pipeline import PACK_BUDGET, PACK_SHARD_DOCS
 from .decontam import score_batch
 from .neardup import _candidates, _candidates_pruned, bands_of, signatures

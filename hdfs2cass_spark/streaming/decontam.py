@@ -16,7 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..plans.llm import SH_ON_WS_SPARK, W_SPARK
+
+from ..functions.tokenize import W_SPARK, hash60_spark
+from ..operators.text import shingle_hashes
 from ..sources.readers import ensure_session_confs
 
 
@@ -50,15 +52,9 @@ def score_batch(docs: DataFrame, bench_shingles: DataFrame) -> DataFrame:
     shingle hashes: ``bench_shingles`` still arrives as a ``s`` string column
     (API unchanged) and is hashed here, so the broadcast that rides EVERY
     micro-batch carries 8-byte ints instead of shingle strings."""
-    from ..plans.llm import hash60_spark
-
     # in-row array_distinct (not a global .distinct()): per-doc distinctness
-    # is row-local — matches the batch _shingles_hashed, zero shuffles
-    sh = (
-        docs.select("doc_id", F.expr(W_SPARK).alias("ws"))
-        .select("doc_id", F.explode(F.array_distinct(F.expr(SH_ON_WS_SPARK))).alias("s"))
-        .select("doc_id", F.expr(hash60_spark("s")).alias("h"))
-    )
+    # is row-local — the batch operator's shingle_hashes, zero shuffles
+    sh = shingle_hashes(docs.select("doc_id", F.expr(W_SPARK).alias("ws")))
     bench_h = bench_shingles.select(
         F.expr(hash60_spark("s")).alias("h")
     ).distinct()

@@ -1,7 +1,7 @@
 """Streaming near-duplicate detection: score documents against an
 ACCUMULATING minhash signature index as they arrive.
 
-The batch LSH family (plans/llm.py) answers "which pairs in this corpus are
+The batch LSH family (operators/text.py) answers "which pairs in this corpus are
 near-dups"; a live ingest pipeline asks a different question per document:
 "is this NEW doc a near-dup of anything seen BEFORE it". This module runs
 that check per micro-batch via foreachBatch:
@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.llm import N_HASHES, band_rows, minhash_wide_df
+from ..operators.text import N_HASHES, band_rows, minhash_wide_df
 
 EST_THRESHOLD = 0.5  # matches >= 8 of 16 signature components
 
@@ -73,7 +73,7 @@ def signatures(d: DataFrame) -> DataFrame:
 
 def bands_of(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, bkey) — 4 narrow rows per doc, the candidate table,
-    via the SHARED band-key definition (plans.llm.band_rows)."""
+    via the SHARED band-key definition (operators.text.band_rows)."""
     mh_cols = [F.col("mh").getItem(i).alias(f"mh{i}") for i in range(N_HASHES)]
     return band_rows(sigs.select("doc_id", *mh_cols))
 

@@ -543,7 +543,7 @@ def main() -> int:
     # uniform-random vectors are its documented worst case (no cell structure
     # to exploit; measured recall 0.44 there, and brute force wins outright).
     from hdfs2cass_spark.operators.kmeans import fit_kmeans, quantized_assign_udf
-    from hdfs2cass_spark.plans.llm import _ivf_dist_spark
+    from hdfs2cass_spark.operators.kmeans import _ivf_dist_spark
 
     cvec = F.expr(
         "transform(sequence(1, 64), i -> CAST("

@@ -215,7 +215,7 @@ def test_ivf_fixture_topk_recall_vs_brute_force(spark):
 
     from hdfs2cass_spark.operators.kmeans import quantized_assign_udf
     from hdfs2cass_spark.plans import CATALOG
-    from hdfs2cass_spark.plans.llm import _IVF_CENTS
+    from hdfs2cass_spark.operators.kmeans import _IVF_CENTS
 
     sf01 = "/root/testdata/sf0.01"
     if not os.path.isdir(sf01):

@@ -311,7 +311,7 @@ def test_spread_docs_is_conditional(spark, sf_dir):
     when the input already has parallelism — shipping the raw corpus through
     an exchange to fix parallelism the scan already provides is the scale
     anti-pattern it exists to avoid."""
-    from hdfs2cass_spark.plans.llm import _spread_docs
+    from hdfs2cass_spark.operators.text import _spread_docs
 
     narrow = spark.read.parquet(f"{sf_dir}/documents.parquet")
     spread = _spread_docs(narrow)
@@ -332,17 +332,17 @@ def test_spread_docs_asks_spark_and_memoizes(spark, sf_dir, tmp_path, monkeypatc
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans import llm
+    from hdfs2cass_spark.operators import text
     from hdfs2cass_spark.sources.readers import TABLES, load_table
 
-    monkeypatch.setattr(llm, "_NUM_PARTITIONS", {})
+    monkeypatch.setattr(text, "_NUM_PARTITIONS", {})
     n = spark.sparkContext.defaultParallelism
     for t in TABLES:
         df = load_table(spark, sf_dir, t)
         if "doc_id" not in df.columns:  # the spread repartitions by doc_id
             df = df.select(F.lit(0).alias("doc_id"), "*")
         keep = 2 * df.rdd.getNumPartitions() >= n
-        assert (llm._spread_docs(df) is df) == keep, t
+        assert (text._spread_docs(df) is df) == keep, t
 
     docs = load_table(spark, sf_dir, "documents")
     calls = []
@@ -350,14 +350,14 @@ def test_spread_docs_asks_spark_and_memoizes(spark, sf_dir, tmp_path, monkeypatc
     monkeypatch.setattr(
         type(docs), "rdd", property(lambda self: calls.append(1) or rdd.func(self))
     )
-    llm._spread_docs(load_table(spark, sf_dir, "documents"))
+    text._spread_docs(load_table(spark, sf_dir, "documents"))
     assert calls == []  # same plan, same files: memo hit
     shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
-    llm._spread_docs(load_table(spark, str(tmp_path), "documents"))
+    text._spread_docs(load_table(spark, str(tmp_path), "documents"))
     assert calls == [1]  # other file set: miss
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1m")
     try:
-        llm._spread_docs(load_table(spark, sf_dir, "documents"))
+        text._spread_docs(load_table(spark, sf_dir, "documents"))
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert calls == [1, 1]  # other split conf: miss

@@ -211,7 +211,7 @@ def test_token_budget_selection_is_greedy_prefix(spark, sf_dir):
         .count()
     )
     if all_rows > len(sel):  # corpus exceeds the budget -> a real cutoff
-        from hdfs2cass_spark.plans.llm import STOPWORDS, W_SPARK
+        from hdfs2cass_spark.functions.tokenize import STOPWORDS, W_SPARK
 
         scored = (
             load_table(spark, sf_dir, "documents")

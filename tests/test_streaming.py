@@ -83,13 +83,16 @@ def test_stream_decontamination_equals_batch(spark, sf_dir, tmp_path):
     state. Train docs split across 3 files = 3 micro-batches."""
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import read_scored, stream_decontamination, stream_documents
 
     d = load_table(spark, sf_dir, "documents")
-    bench = _shingles(d.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        d.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     train = d.filter(~F.expr(_BENCH_SPARK)).select(*cols)
 
@@ -131,13 +134,16 @@ def test_stream_decontamination_checkpoint_resume(spark, sf_dir, tmp_path):
     first run, never re-emitting earlier docs."""
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import read_scored, stream_decontamination, stream_documents
 
     d = load_table(spark, sf_dir, "documents")
-    bench = _shingles(d.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        d.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     train = d.filter(~F.expr(_BENCH_SPARK)).select(*cols)
 
@@ -309,7 +315,8 @@ def test_stream_curate_with_learned_gate_equals_batch_twin(spark, sf_dir, tmp_pa
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.plans.quality_clf import _fixture_model
     from hdfs2cass_spark.sources.readers import load_table
@@ -322,7 +329,9 @@ def test_stream_curate_with_learned_gate_equals_batch_twin(spark, sf_dir, tmp_pa
 
     model = _fixture_model()
     docs = load_table(spark, sf_dir, "documents")
-    bench = _shingles(docs.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        docs.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     train = docs.filter(~F.expr(_BENCH_SPARK)).select("doc_id", "text")
 
     n = train.agg(F.max("doc_id")).first()[0] + 1
@@ -364,7 +373,8 @@ def test_stream_curate_equals_greedy_batch_twin(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import stream_documents
@@ -375,7 +385,9 @@ def test_stream_curate_equals_greedy_batch_twin(spark, sf_dir, tmp_path):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bench = _shingles(docs.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        docs.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     base = docs.filter(~F.expr(_BENCH_SPARK)).select("doc_id", "text")
     # seed exact duplicates (the sf0.001 fixture has near-dups but no exact
     # text copies): re-emit 10 early docs under fresh high ids, so the exact
@@ -493,7 +505,8 @@ def test_stream_curate_compaction_bounds_dirs_and_preserves_decisions(
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import stream_documents
@@ -505,7 +518,9 @@ def test_stream_curate_compaction_bounds_dirs_and_preserves_decisions(
     from hdfs2cass_spark.streaming.index import _parts, n_subdirs, read_split
 
     docs = load_table(spark, sf_dir, "documents")
-    bench = _shingles(docs.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        docs.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     base = docs.filter(~F.expr(_BENCH_SPARK)).select("doc_id", "text")
     hi = base.agg(F.max("doc_id")).first()[0] + 1
     dupes = (
@@ -590,7 +605,8 @@ def test_stream_curate_packing_equals_batch_twin(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import stream_documents
@@ -601,7 +617,9 @@ def test_stream_curate_packing_equals_batch_twin(spark, sf_dir, tmp_path):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bench = _shingles(docs.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        docs.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     base = docs.filter(~F.expr(_BENCH_SPARK)).select("doc_id", "text")
     hi = base.agg(F.max("doc_id")).first()[0] + 1
     flat = tmp_path / "pk_flat"
@@ -656,7 +674,8 @@ def test_stream_curate_checkpoint_resume(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.llm import _shingles
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingles
     from hdfs2cass_spark.plans.pipeline import _BENCH_SPARK
     from hdfs2cass_spark.sources.readers import load_table
     from hdfs2cass_spark.streaming import stream_documents
@@ -667,7 +686,9 @@ def test_stream_curate_checkpoint_resume(spark, sf_dir, tmp_path):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    bench = _shingles(docs.filter(F.expr(_BENCH_SPARK))).select("s").distinct()
+    bench = shingles(
+        docs.filter(F.expr(_BENCH_SPARK)).select("doc_id", F.expr(W_SPARK).alias("ws"))
+    ).select("s").distinct()
     base = docs.filter(~F.expr(_BENCH_SPARK)).select("doc_id", "text")
     hi = base.agg(F.max("doc_id")).first()[0] + 1
     # batch 2 (arriving after the restart) re-emits 5 early docs verbatim —
@@ -898,10 +919,20 @@ def test_streaming_dedup_state_spans_micro_batches(spark, tmp_path):
     assert rows == {(7, "click"): 1, (8, "view"): 2, (9, "click"): 4}
 
 
-def test_stream_bulk_load_routes_on_typed_key(spark, events_dir, tmp_path):
+@pytest.mark.parametrize(
+    "uri, key",
+    [
+        ("cql://h/ks/events?reducers=4", "_rowkey"),
+        ("thrift://h/ks/events?reducers=4", "key"),
+        ("cql://h/ks/events?reducers=4&columnnames=event_id,user_id,value", "_rowkey"),
+    ],
+    ids=["cql", "thrift", "cql-columnnames"],
+)
+def test_stream_bulk_load_routes_on_typed_key(spark, events_dir, tmp_path, uri, key):
     """Streaming bulk load must tokenize the TYPED key bytes exactly like the
-    batch pipeline — per-bucket contents of the streamed sink equal the
-    batch bulk_load of the same data."""
+    batch pipeline and honor every output-URI option — the streamed sink's
+    columns and per-bucket contents equal the batch bulk_load of the same
+    data, for the CQL and thrift shapes and a columnnames= projection."""
     import glob
 
     import pyarrow.parquet as pq
@@ -913,7 +944,7 @@ def test_stream_bulk_load_routes_on_typed_key(spark, events_dir, tmp_path):
     stream = stream_events(spark, events_dir)
     q = stream_bulk_load(
         stream,
-        "cql://h/ks/events?reducers=4",
+        uri,
         sink_path=str(tmp_path / "ssink"),
         checkpoint=str(tmp_path / "sckpt"),
         rowkey="event_id",
@@ -923,15 +954,16 @@ def test_stream_bulk_load_routes_on_typed_key(spark, events_dir, tmp_path):
     q.awaitTermination(120)
 
     batch = load_table(spark, str(events_dir), "events")
-    routed = bulk_load(batch, "cql://h/ks/events?reducers=4", rowkey="event_id", now_ms=42)
+    routed = bulk_load(batch, uri, rowkey="event_id", now_ms=42)
     want = {
-        (r["bucket"], r["token"], r["_rowkey"]) for r in routed.select("bucket", "token", "_rowkey").collect()
+        (r["bucket"], r["token"], r[key]) for r in routed.select("bucket", "token", key).collect()
     }
     got = set()
     for d in glob.glob(str(tmp_path / "ssink" / "bucket=*")):
         b = int(d.rsplit("=", 1)[1])
         t = pq.read_table(d)
-        for tok, rk in zip(t.column("token").to_pylist(), t.column("_rowkey").to_pylist()):
+        assert t.column_names == [c for c in routed.columns if c != "bucket"], d
+        for tok, rk in zip(t.column("token").to_pylist(), t.column(key).to_pylist()):
             got.add((b, tok, rk))
     assert got == want
 
@@ -1994,15 +2026,17 @@ def test_stream_bloom_enroll_equals_batch_any_order(spark, sf_dir, tmp_path):
 
     # replay idempotence: re-appending the last batch's words (what an
     # at-least-once retry does) cannot change the accumulated filter
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
+    from hdfs2cass_spark.operators.text import shingle_hashes
     from hdfs2cass_spark.plans.bloom import bloom_word_rows
-    from hdfs2cass_spark.plans.llm import _shingles_hashed
     from hdfs2cass_spark.streaming.index import append
 
     before = read_bloom_words(spark, idx)
     last = bench.filter(
         (F.col("doc_id") >= ranges[-1][0]) & (F.col("doc_id") < ranges[-1][1])
     )
-    append(bloom_word_rows(_shingles_hashed(last).select("h")), idx, 2)
+    sh = shingle_hashes(last.select(F.expr(W_SPARK).alias("ws")))
+    append(bloom_word_rows(sh), idx, 2)
     assert read_bloom_words(spark, idx) == before
 
 

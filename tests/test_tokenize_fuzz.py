@@ -47,7 +47,7 @@ def test_hash60_agrees_on_fuzz_battery(spark):
     coins, fingerprints, exact dedup) — Spark's md5(CAST(x AS BINARY)) and
     DuckDB's md5(VARCHAR) must hash the identical UTF-8 bytes for every
     nasty string (emoji = surrogate pairs, combining marks, controls)."""
-    from hdfs2cass_spark.plans.llm import hash60_duck, hash60_spark
+    from hdfs2cass_spark.functions.tokenize import hash60_duck, hash60_spark
 
     # md5('') is fine but NULs embedded in strings probe the byte handling
     texts = [t for t in _battery() if t]  # both engines NULL-out NULL input

@@ -121,7 +121,7 @@ def test_doubling_ladders_equal_sequential_forms(spark, fast):
     )
     seq = f"element_at(transform(array({seq_hs}), hs -> {seq_sel}), 1)"
 
-    from hdfs2cass_spark.plans.llm import W_SPARK
+    from hdfs2cass_spark.functions.tokenize import W_SPARK
 
     base = (
         d.select("doc_id", F.expr(W_SPARK).alias("ws"))

@@ -115,7 +115,7 @@ def test_scrub_keeps_first_occurrence(spark, planted_sf):
     # through the engine's own hash60 on a literal (same md5 arithmetic)
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.pipeline import hash60_spark
+    from hdfs2cass_spark.functions.tokenize import hash60_spark
 
     def h(text):
         return spark.range(1).select(
@@ -159,7 +159,7 @@ def test_scrub_fully_scrubbed_doc_hashes_empty(spark, tmp_path):
     assert rows[1]["n_scrubbed"] == 8 and rows[1]["n_words"] == 8
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.plans.pipeline import hash60_spark
+    from hdfs2cass_spark.functions.tokenize import hash60_spark
 
     empty = spark.range(1).select(F.expr(hash60_spark("''")).alias("v")).first()["v"]
     assert rows[1]["scrubbed_fp"] == empty
