@@ -63,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     spark = get_session("hdfs2cass_spark.cli")
     # --format avro uses the native spark-avro module when its jar is on the
-    # classpath, else the built-in pure-Python container reader (sources/avro.py)
+    # classpath, else the built-in container reader (sources/avro.py)
     opts = {}
     for kv in args.input_option:
         if "=" not in kv:

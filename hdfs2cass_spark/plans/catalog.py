@@ -1334,8 +1334,8 @@ def legacy_to_sinks_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     "input). Hash-equality against SQL over the original parquet proves the "
     "whole encode -> container -> split-scan -> decode loop value-exact. "
     "Scale: the writer is the fixture-scale staging tool; the READ side is "
-    "the production path — header-only driver planning, one task per "
-    "maxPartitionBytes range, Arrow-batched decode.",
+    "the production path — header-only driver planning, splits packed into "
+    "tasks by Spark's file-source rule, Arrow-batched decode.",
 )
 def avro_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile

@@ -5,34 +5,40 @@ files (Hdfs2Cass.java:107-108,135-144), but Spark's Avro source lives in the
 EXTERNAL spark-avro module that pip-distributed pyspark does not bundle.
 `read_avro` makes `read_records(format="avro")` work with no extra jars:
 
-  driver:   open each file, parse the header only (schema + codec + sync —
-            a few hundred bytes), plan byte-range splits of
-            ``spark.sql.files.maxPartitionBytes`` each
-  executors: one task per split opens its file, seeks to the range start,
-            scans forward to the next 16-byte sync marker, and decodes the
-            blocks that START inside its range — exactly the Hadoop/
-            spark-avro split contract, so a 10 GB file fans out across the
-            cluster instead of serializing through one task
-  output:   mapInPandas over the split plan — each task yields pandas
-            batches (~one per container block group), Arrow-framed back to
-            the JVM; temporal logical types are converted COLUMN-wise
+  driver:   parse the first file's header only (schema + codec + sync — a
+            few hundred bytes), cut every file into byte-range splits and
+            pack them into tasks by Spark's own file-source rule
+            (`plan_tasks`: FilePartition.maxSplitBytes + next-fit packing
+            with openCostInBytes per split), so small files share a task
+  plan:     ``spark.range(n_tasks)`` with one partition per task; each
+            task's splits travel in the decode closure — no shuffle
+  executors: each split opens its file, checks the writer schema against
+            the planned one (a mismatch fails naming the file), seeks to the
+            range start, scans forward to the next 16-byte sync marker, and
+            decodes the blocks that START inside its range — exactly the
+            Hadoop/spark-avro split contract, so a 10 GB file fans out
+            across the cluster instead of serializing through one task
+  output:   mapInArrow — each task decodes record by record (the compiled
+            per-schema decoder of sources/avrodec.py) and yields one Arrow
+            RecordBatch per container block; top-level date/timestamp
+            columns are converted with exact integer Arrow casts
 
-The decode itself is pure Python (sources/avrodec.py, stdlib only, shipped
-by value into the UDF pickle) — slower per-byte than the JVM source, which
-is why `read_records` still prefers spark-avro when the jar is present and
-uses this reader only as the fallback. The split planning means the
-fallback still SCALES (bounded per-task work, no driver data path); it
-trades per-core decode speed, not architecture.
+The decode is pure Python and slower per byte than the JVM source, which is
+why `read_records` still prefers spark-avro when the jar is present and uses
+this reader only as the fallback.
 """
 
 from __future__ import annotations
 
+import io
 import os
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.shippable import pickle_by_value
 from . import avrodec
@@ -147,7 +153,7 @@ def spark_to_avro_schema(st: T.StructType, name: str = "record0") -> dict:
 
 def _temporal_columns(schema) -> dict[str, str]:
     """field name -> logicalType for top-level temporal fields (decoded as
-    raw ints; converted column-wise after the batch is assembled)."""
+    raw ints; cast column-wise once the block's arrays are built)."""
     schema = avrodec.parse_schema(schema)
     out = {}
     for f in schema["fields"]:
@@ -164,26 +170,24 @@ def _temporal_columns(schema) -> dict[str, str]:
     return out
 
 
-def _parse_byte_size(s: str | None) -> int:
+def _parse_byte_size(
+    s: str | None, default: int = _DEFAULT_SPLIT, key: str = "spark.sql.files.maxPartitionBytes"
+) -> int:
     """Spark byte-size string -> bytes (the JVM byteStringAsBytes subset:
     plain digits or digits + b/k/kb/m/mb/g/gb, case-insensitive). The old
     ``int(s.rstrip('b'))`` silently fell back to 128MB on '16m'-style
     values, ignoring the user's fan-out tuning (review round 11); an
-    unparseable value still falls back, but loudly."""
+    unparseable value still falls back to ``default``, but loudly."""
     if not s:
-        return _DEFAULT_SPLIT
+        return default
     import re
 
     m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?b?)\s*", str(s).lower())
     if not m:
         import warnings
 
-        warnings.warn(
-            f"unparseable spark.sql.files.maxPartitionBytes {s!r}; "
-            f"using {_DEFAULT_SPLIT} bytes",
-            stacklevel=2,
-        )
-        return _DEFAULT_SPLIT
+        warnings.warn(f"unparseable {key} {s!r}; using {default} bytes", stacklevel=2)
+        return default
     mult = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
             "m": 1 << 20, "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
             "t": 1 << 40, "tb": 1 << 40}[m.group(2)]
@@ -191,8 +195,9 @@ def _parse_byte_size(s: str | None) -> int:
 
 
 def plan_splits(paths: list[str], split_bytes: int) -> list[tuple[str, int, int]]:
-    """Driver-side split plan: header-only reads (schema/sync, not data).
-    Returns [(path, start, end)] covering every byte of every file."""
+    """Byte-range splits of at most ``split_bytes`` per file, from file
+    sizes alone. Returns [(path, start, end)] covering every byte of every
+    file."""
     splits = []
     for p in sorted(paths):
         size = os.path.getsize(p)
@@ -201,6 +206,42 @@ def plan_splits(paths: list[str], split_bytes: int) -> list[tuple[str, int, int]
             splits.append((p, start, min(start + split_bytes, size)))
             start += split_bytes
     return splits
+
+
+def plan_tasks(
+    spark: SparkSession, paths: list[str], split_bytes: int | None = None
+) -> list[list[tuple[str, int, int]]]:
+    """Group the byte-range splits into tasks by Spark's file-source rule
+    (FilePartition.maxSplitBytes and getFilePartitions): splits of
+    ``min(maxPartitionBytes, max(openCostInBytes, totalBytes /
+    minPartitionNum))``, where every file counts ``openCostInBytes`` on top
+    of its size, packed largest first, next-fit, each split charged its
+    length plus ``openCostInBytes``. ``split_bytes`` stands in for
+    ``maxPartitionBytes``."""
+    conf = spark.conf
+    if split_bytes is None:
+        split_bytes = _parse_byte_size(conf.get("spark.sql.files.maxPartitionBytes", None))
+    key = "spark.sql.files.openCostInBytes"
+    open_cost = _parse_byte_size(conf.get(key, None), 4 << 20, key)
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    total = sum(os.path.getsize(p) + open_cost for p in paths)
+    max_split = min(split_bytes, max(open_cost, total // min_parts))
+    splits = sorted(plan_splits(paths, max_split), key=lambda s: s[2] - s[1], reverse=True)
+    tasks, task, size = [], [], 0
+    for split in splits:
+        length = split[2] - split[1]
+        if task and size + length > max_split:
+            tasks.append(task)
+            task, size = [], 0
+        task.append(split)
+        size += length + open_cost
+    if task:
+        tasks.append(task)
+    return tasks
 
 
 def _expand_paths(paths: str | list[str]) -> list[str]:
@@ -223,69 +264,65 @@ def read_avro(
     spark: SparkSession,
     paths: str | list[str],
     split_bytes: int | None = None,
-    batch_rows: int = 16384,
 ) -> DataFrame:
     """Read Avro container files into a DataFrame with no external jars —
     see the module docstring for the split/scan architecture. All files
-    must share one reader schema (the first file's — the reference unions
-    same-schema inputs, Hdfs2Cass.java:107-108)."""
+    must share one writer schema (the first file's — the reference unions
+    same-schema inputs, Hdfs2Cass.java:107-108); a task that opens a file
+    with another schema fails the read, naming the file."""
     files = _expand_paths(paths)
     with open(files[0], "rb") as f:
-        header = avrodec.read_header(f)
-    schema = header["schema"]
+        schema = avrodec.read_header(f)["schema"]
     if avrodec._schema_type(schema) != "record":
         raise ValueError("top-level avro schema must be a record")
     spark_schema = avro_to_spark_type(schema)
     assert isinstance(spark_schema, T.StructType)
-    temporals = _temporal_columns(schema)
-    col_names = [f.name for f in spark_schema.fields]
-
-    if split_bytes is None:
-        split_bytes = _parse_byte_size(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        )
-    splits = plan_splits(files, split_bytes)
-    plan = spark.createDataFrame(splits, "path string, start long, end long").repartition(
-        max(len(splits), 1)
-    )
+    out_schema = to_arrow_schema(spark_schema)
+    names = spark_schema.fieldNames()
+    temporals = {names.index(c): lt for c, lt in _temporal_columns(schema).items()}
+    # each top-level temporal is built from its raw int, then cast
+    raw_types = [
+        pa.int64() if i in temporals else out_schema.field(i).type for i in range(len(names))
+    ]
+    tasks = plan_tasks(spark, files, split_bytes)
+    first = files[0]
 
     pickle_by_value(avrodec)
-    schema_json = __import__("json").dumps(schema)
 
-    def decode_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import json as _json
+    def decode_block(payload: bytes, n: int, dec) -> pa.RecordBatch:
+        buf = io.BytesIO(payload)
+        rows = [dec(buf) for _ in range(n)]
+        if buf.tell() != len(payload):
+            raise ValueError(f"avro block of {n} records leaves trailing bytes")
+        cols = [pa.array([r[c] for r in rows], t) for c, t in zip(names, raw_types)]
+        for i, lt in temporals.items():
+            if lt == "date":
+                cols[i] = cols[i].cast(pa.int32()).cast(pa.date32())
+            else:
+                us = cols[i]
+                if lt == "timestamp-millis":
+                    us = pc.multiply_checked(us, 1000)
+                cols[i] = us.cast(out_schema.field(i).type)
+        return pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-        sch = avrodec.parse_schema(_json.loads(schema_json))
-        dec = avrodec.compile_decoder(sch)
+    def decode_tasks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        dec = avrodec.compile_decoder(schema)
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                for path, start, end in tasks[task]:
+                    with open(path, "rb") as f:
+                        hdr = avrodec.read_header(f)
+                        if hdr["schema"] != schema:
+                            raise ValueError(
+                                f"{path}: writer schema differs from {first}'s, "
+                                "the schema this read was planned with"
+                            )
+                        for payload, n in avrodec.iter_file_blocks(f, hdr, start, end):
+                            yield decode_block(payload, n, dec)
 
-        def to_pdf(rows: list[dict]) -> pd.DataFrame:
-            pdf = pd.DataFrame(rows, columns=col_names)
-            for c, lt in temporals.items():
-                if lt == "date":
-                    pdf[c] = pd.to_datetime(pdf[c], unit="D", errors="coerce").dt.date
-                elif lt == "timestamp-millis":
-                    pdf[c] = pd.to_datetime(pdf[c], unit="ms", errors="coerce")
-                else:
-                    pdf[c] = pd.to_datetime(pdf[c], unit="us", errors="coerce")
-            return pdf
-
-        for b in batches:
-            for path, start, end in zip(b["path"], b["start"], b["end"]):
-                with open(path, "rb") as f:
-                    hdr = avrodec.read_header(f)
-                    rows: list[dict] = []
-                    for payload, n in avrodec.iter_file_blocks(f, hdr, int(start), int(end)):
-                        buf = _io.BytesIO(payload)
-                        for _ in range(n):
-                            rows.append(dec(buf))
-                        if len(rows) >= batch_rows:
-                            yield to_pdf(rows)
-                            rows = []
-                    if rows:
-                        yield to_pdf(rows)
-
-    return plan.mapInPandas(decode_splits, spark_schema)
+    return spark.range(len(tasks), numPartitions=max(len(tasks), 1)).mapInArrow(
+        decode_tasks, spark_schema
+    )
 
 
 def write_avro(

@@ -92,15 +92,28 @@ def read_legacy_text(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 AVRO_PACKAGE = "org.apache.spark:spark-avro_2.13"
 
 
-def has_avro_support(spark: SparkSession) -> bool:
-    """The Avro source (S1) is an external Spark module; the pip pyspark
-    distribution may not bundle spark-avro. Callers use parquet/text when
-    absent — same dataflow, different container format."""
+def _probe_avro(spark: SparkSession) -> bool:
     try:
         spark.read.format("avro").load("/nonexistent-avro-probe")
         return True  # pragma: no cover
     except Exception as e:
         return "FAILED_FIND_AVRO_DATA_SOURCE" not in str(e) and "Failed to find" not in str(e)
+
+
+# applicationId -> probe result: the jar set is fixed for an application's
+# life, and each probe raises and catches a py4j exception (~57 ms)
+_AVRO_SUPPORT: dict[str, bool] = {}
+
+
+def has_avro_support(spark: SparkSession) -> bool:
+    """The Avro source (S1) is an external Spark module; the pip pyspark
+    distribution may not bundle spark-avro. Callers use parquet/text when
+    absent — same dataflow, different container format. Probed once per
+    SparkContext."""
+    app = spark.sparkContext.applicationId
+    if app not in _AVRO_SUPPORT:
+        _AVRO_SUPPORT[app] = _probe_avro(spark)
+    return _AVRO_SUPPORT[app]
 
 
 def read_records(
@@ -113,10 +126,10 @@ def read_records(
     Any Spark datasource format works (parquet, csv, json, orc, text);
     ``options`` pass through to the reader (e.g. ``header="true"`` for CSV).
     `fmt="avro"` prefers the native spark-avro module (external jar,
-    JVM-speed decode) and falls back to the built-in pure-Python container
-    reader (sources/avro.py — byte-range-split, mapInPandas, no jars) when
-    the module is absent, so the reference's primary input format runs
-    anywhere.
+    JVM-speed decode) and falls back to the built-in container reader
+    (sources/avro.py — byte-range-split, per-record decode, mapInArrow, no
+    jars) when the module is absent, so the reference's primary input
+    format runs anywhere.
     """
     p = [paths] if isinstance(paths, str) else list(paths)
     if fmt == "avro" and not has_avro_support(spark):

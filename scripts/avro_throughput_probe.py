@@ -1,11 +1,11 @@
-"""Built-in Avro reader throughput probe: the pure-Python fallback at volume.
+"""Built-in Avro reader throughput probe: the no-jar fallback at volume.
 
 The S1 fallback (sources/avro.py) trades per-core decode speed for
 zero-dependency operation — this probe measures the trade at a shape the
 fixture round-trip cannot: ``--rows`` records (~bench stress grain) written
-as ONE container file, read back through the byte-range-split mapInPandas
-reader with default split planning, counted. Records rows/s and the split
-fan-out so ROUND notes carry a number instead of "slower per-byte".
+as ONE container file, read back through the byte-range-split mapInArrow
+reader with ``--split-kib`` splits, counted. Records rows/s and the split
+fan-out so notes carry a number instead of "slower per-byte".
 
 Run:  python scripts/avro_throughput_probe.py [--rows 1000000] [--codec deflate]
 """
