@@ -62,8 +62,8 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     spark = get_session("hdfs2cass_spark.cli")
-    # --format avro uses the native spark-avro module when its jar is on the
-    # classpath, else the built-in container reader (sources/avro.py)
+    # --format avro reads through Spark's own Avro file source
+    # (sources/readers.py AVRO_FORMAT); no extra jar is needed
     opts = {}
     for kv in args.input_option:
         if "=" not in kv:

@@ -83,37 +83,11 @@ def read_legacy_text(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     return spark.read.text(p).withColumnRenamed("value", "line")
 
 
-# spark-avro is an EXTERNAL Spark module (not bundled with pip pyspark); on a
-# real cluster ship it with either of:
-#   spark-submit --packages org.apache.spark:spark-avro_2.13:<spark-version>
-#   spark.jars.packages=org.apache.spark:spark-avro_2.13:<spark-version>
-# The reference reads Avro container files (Hdfs2Cass.java:107-108,135-144);
-# with the jar present `--format avro` runs the identical dataflow.
-AVRO_PACKAGE = "org.apache.spark:spark-avro_2.13"
-
-
-def _probe_avro(spark: SparkSession) -> bool:
-    try:
-        spark.read.format("avro").load("/nonexistent-avro-probe")
-        return True  # pragma: no cover
-    except Exception as e:
-        return "FAILED_FIND_AVRO_DATA_SOURCE" not in str(e) and "Failed to find" not in str(e)
-
-
-# applicationId -> probe result: the jar set is fixed for an application's
-# life, and each probe raises and catches a py4j exception (~57 ms)
-_AVRO_SUPPORT: dict[str, bool] = {}
-
-
-def has_avro_support(spark: SparkSession) -> bool:
-    """The Avro source (S1) is an external Spark module; the pip pyspark
-    distribution may not bundle spark-avro. Callers use parquet/text when
-    absent — same dataflow, different container format. Probed once per
-    SparkContext."""
-    app = spark.sparkContext.applicationId
-    if app not in _AVRO_SUPPORT:
-        _AVRO_SUPPORT[app] = _probe_avro(spark)
-    return _AVRO_SUPPORT[app]
+# Spark's own Avro file source (S1). spark-sql 4.1 ships this class but
+# registers no "avro" short name for it (that registration comes with the
+# external spark-avro package), so `read_records` names the class. The
+# reference reads Avro container files (Hdfs2Cass.java:107-108,135-144).
+AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
 def read_records(
@@ -125,25 +99,14 @@ def read_records(
 
     Any Spark datasource format works (parquet, csv, json, orc, text);
     ``options`` pass through to the reader (e.g. ``header="true"`` for CSV).
-    `fmt="avro"` prefers the native spark-avro module (external jar,
-    JVM-speed decode) and falls back to the built-in container reader
-    (sources/avro.py — byte-range-split, per-record decode, mapInArrow, no
-    jars) when the module is absent, so the reference's primary input
-    format runs anywhere.
+    ``fmt="avro"`` reads through Spark's Avro file source (``AVRO_FORMAT``):
+    JVM decode and Spark's own split planning. It reads only ``*.avro``
+    files, as Hadoop's Avro input format does, unless the caller passes a
+    ``pathGlobFilter``; an input with no Avro file raises.
     """
     p = [paths] if isinstance(paths, str) else list(paths)
-    if fmt == "avro" and not has_avro_support(spark):
-        if options:
-            # the built-in reader has no option surface — honoring some
-            # options with the jar and silently dropping them without it
-            # would make the same call behave differently per environment
-            raise ValueError(
-                "reader options are not supported by the built-in Avro "
-                f"fallback (got {sorted(options)}); install the spark-avro "
-                "module or drop the options"
-            )
-        from .avro import read_avro
-
-        return read_avro(spark, p)
+    if fmt == "avro":
+        fmt = AVRO_FORMAT
+        options = {"pathGlobFilter": "*.avro", **options}
     # pass the list, not *p: load()'s 2nd positional parameter is `format`
     return spark.read.format(fmt).options(**options).load(p)

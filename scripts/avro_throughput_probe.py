@@ -1,11 +1,10 @@
-"""Built-in Avro reader throughput probe: the no-jar fallback at volume.
+"""Avro read throughput probe: the S1 source at volume.
 
-The S1 fallback (sources/avro.py) trades per-core decode speed for
-zero-dependency operation — this probe measures the trade at a shape the
-fixture round-trip cannot: ``--rows`` records (~bench stress grain) written
-as ONE container file, read back through the byte-range-split mapInArrow
-reader with ``--split-kib`` splits, counted. Records rows/s and the split
-fan-out so notes carry a number instead of "slower per-byte".
+Measures ``read_records(fmt="avro")`` (Spark's own Avro file source) at a
+shape the fixture round-trip cannot: ``--rows`` records (~bench stress
+grain) written as ONE container file, read back with
+``spark.sql.files.maxPartitionBytes`` set to ``--split-kib`` so the file
+splits across tasks, counted. Records rows/s and the split fan-out.
 
 Run:  python scripts/avro_throughput_probe.py [--rows 1000000] [--codec deflate]
 """
@@ -30,8 +29,9 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from hdfs2cass_spark.sources.avro import read_avro, write_avro
     from hdfs2cass_spark.session import get_session
+    from hdfs2cass_spark.sources.avro import write_avro
+    from hdfs2cass_spark.sources.readers import read_records
 
     spark = get_session("avro-throughput-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -49,7 +49,8 @@ def main() -> int:
     t_write = time.perf_counter() - t0
     size = os.path.getsize(path)
 
-    back = read_avro(spark, path, split_bytes=args.split_kib * 1024)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", f"{args.split_kib}k")
+    back = read_records(spark, path, fmt="avro")
     n_parts = back.rdd.getNumPartitions()
     back.count()  # warm (codec import, worker spin-up)
     best = float("inf")

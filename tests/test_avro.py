@@ -1,12 +1,18 @@
-"""Built-in Avro reader: split packing against Spark's own file scans,
-exact temporal casts on the Arrow output, and the loud failures (mixed
-schemas, a block whose record count does not match its payload)."""
+"""Avro reads through Spark's own file source (``read_records(fmt="avro")``):
+split planning against Spark's other file scans, the plan shape, exact
+temporals, the directory contract, and the loud failures (mixed schemas, a
+block whose record count does not match its payload)."""
 
 from __future__ import annotations
 
 import pytest
 
 from hdfs2cass_spark.sources import avrodec
+from hdfs2cass_spark.sources.readers import read_records
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _song_files(d, n_files: int, rows_per_file: int) -> int:
@@ -25,17 +31,14 @@ def _song_files(d, n_files: int, rows_per_file: int) -> int:
 
 
 def test_split_packing_follows_spark_file_scans(spark, tmp_path):
-    """Small files pack into as many tasks as Spark's own file scan gives
+    """Small files pack into as many tasks as Spark's other file scans give
     the same files (binaryFile packs by FilePartition's rule too) under
-    size-suffixed confs, every row is read exactly once, and an explicit
-    split_bytes still splits a file into several tasks."""
+    size-suffixed confs, every row is read exactly once, and the scan is
+    Spark's Avro source with no Python decode node."""
     from pyspark.sql import functions as F
-
-    from hdfs2cass_spark.sources.avro import _parse_byte_size, plan_tasks, read_avro
 
     d = tmp_path / "many"
     n = _song_files(d, 40, 1000)
-    files = sorted(str(p) for p in d.iterdir())
     keys = (
         "spark.sql.files.openCostInBytes",
         "spark.sql.files.maxPartitionBytes",
@@ -44,15 +47,15 @@ def test_split_packing_follows_spark_file_scans(spark, tmp_path):
     old = [spark.conf.get(k, None) for k in keys]
     counts = []
     try:
-        # the second set packs 40 ~7 KB files into 14 tasks; were either
-        # size unparsed (falling back to 4 MB / 128 MB) the count would be
-        # 40 or 4
+        # the second set packs 40 ~7 KB files into 14 tasks, the first
+        # into 4
         for confs in (("4m", "128m", "4"), ("16k", "64k", "4")):
             for k, v in zip(keys, confs):
                 spark.conf.set(k, v)
             want = spark.read.format("binaryFile").load(str(d)).rdd.getNumPartitions()
-            df = read_avro(spark, str(d))
-            assert len(plan_tasks(spark, files)) == want
+            df = read_records(spark, str(d), fmt="avro")
+            plan = _plan(df)
+            assert "FileScan avro" in plan and "MapInArrow" not in plan, plan
             assert df.rdd.getNumPartitions() == want
             got = df.agg(F.count("*"), F.countDistinct("k"), F.sum("k")).first()
             assert tuple(got) == (n, n, n * (n - 1) // 2)
@@ -64,22 +67,12 @@ def test_split_packing_follows_spark_file_scans(spark, tmp_path):
             else:
                 spark.conf.set(k, v)
     assert counts[0] != counts[1]
-    assert _parse_byte_size("4m", 0) == 4 << 20
-
-    big = tmp_path / "big"
-    n = _song_files(big, 2, 20000)
-    df = read_avro(spark, str(big), split_bytes=64 * 1024)
-    assert df.rdd.getNumPartitions() > 2
-    got = df.agg(F.count("*"), F.countDistinct("k")).first()
-    assert tuple(got) == (n, n)
 
 
 def test_top_level_temporals_cast_exactly(spark, tmp_path):
     """date / timestamp-millis / timestamp-micros top-level columns arrive
     as the exact instants, including pre-1970 values and ones past
     the year 2262, where a nanosecond pandas hop overflows."""
-    from hdfs2cass_spark.sources.avro import read_avro
-
     schema = {
         "type": "record",
         "name": "r",
@@ -98,7 +91,7 @@ def test_top_level_temporals_cast_exactly(spark, tmp_path):
     ]
     p = str(tmp_path / "t.avro")
     avrodec.write_container(p, schema, rows, codec="deflate", block_records=3)
-    got = read_avro(spark, p).selectExpr(
+    got = read_records(spark, p, fmt="avro").selectExpr(
         "k", "unix_date(d) AS d", "unix_millis(ms) AS ms", "unix_micros(us) AS us"
     )
     assert sorted(map(tuple, got.collect())) == [
@@ -107,25 +100,21 @@ def test_top_level_temporals_cast_exactly(spark, tmp_path):
 
 
 def test_mixed_writer_schemas_fail_naming_the_file(spark, tmp_path):
-    """A file whose writer schema differs from the planned one must fail
-    the read, not be decoded with the first file's decoder."""
-    from hdfs2cass_spark.sources.avro import read_avro
-
+    """A file whose writer schema cannot resolve to the read schema must
+    fail the read, naming the file, not be decoded as the first file."""
     d = tmp_path / "mixed"
     d.mkdir()
     a = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     b = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "string"}]}
     avrodec.write_container(str(d / "a.avro"), a, [{"k": i} for i in range(10)])
     avrodec.write_container(str(d / "b.avro"), b, [{"k": f"s{i}"} for i in range(10)])
-    with pytest.raises(Exception, match=r"b\.avro.*schema"):
-        read_avro(spark, str(d)).collect()
+    with pytest.raises(Exception, match=r"FAILED_READ_FILE.*b\.avro"):
+        read_records(spark, str(d), fmt="avro").collect()
 
 
 def test_block_count_mismatch_fails(spark, tmp_path):
     """A block whose record count leaves payload bytes undecoded must fail
     the read instead of dropping the rest of the block."""
-    from hdfs2cass_spark.sources.avro import read_avro
-
     schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     p = tmp_path / "short.avro"
     avrodec.write_container(str(p), schema, [{"k": 1}, {"k": 2}], block_records=2)
@@ -135,15 +124,42 @@ def test_block_count_mismatch_fails(spark, tmp_path):
     assert raw[start] == 4  # zigzag varint of the record count 2
     raw[start] = 2  # claim one record
     p.write_bytes(bytes(raw))
-    with pytest.raises(Exception, match="trailing bytes"):
-        read_avro(spark, str(p)).collect()
+    with pytest.raises(Exception, match="Block read partially"):
+        read_records(spark, str(p), fmt="avro").collect()
 
 
-def test_has_avro_support_probes_once_per_app(spark, monkeypatch):
-    from hdfs2cass_spark.sources import readers
+def test_directory_reads_only_avro_files(spark, tmp_path):
+    """A directory input reads only its *.avro files, a caller's
+    pathGlobFilter replaces that default, and an input with no Avro file
+    raises."""
+    schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
+    d = tmp_path / "dir"
+    d.mkdir()
+    avrodec.write_container(str(d / "a.avro"), schema, [{"k": i} for i in range(10)])
+    (d / "README.txt").write_text("not avro\n")
+    assert read_records(spark, str(d), fmt="avro").count() == 10
+    avrodec.write_container(str(d / "b.dat"), schema, [{"k": i} for i in range(5)])
+    assert read_records(spark, str(d), fmt="avro", pathGlobFilter="*.dat").count() == 5
+    empty = tmp_path / "noavro"
+    empty.mkdir()
+    (empty / "x.txt").write_text("x\n")
+    with pytest.raises(Exception, match="No Avro files found"):
+        read_records(spark, str(empty), fmt="avro")
 
-    first = readers.has_avro_support(spark)
-    calls = []
-    monkeypatch.setattr(readers, "_probe_avro", lambda s: calls.append(s) or (not first))
-    assert readers.has_avro_support(spark) is first
-    assert calls == []
+
+def test_bulk_load_over_avro_has_one_python_node(spark, tmp_path):
+    """read_records(fmt="avro") -> bulk_load plans the JVM Avro scan and
+    exactly one Python node, the Murmur3 token UDF."""
+    import re
+
+    from hdfs2cass_spark.sinks.pipeline import bulk_load
+
+    d = tmp_path / "songs"
+    n = _song_files(d, 2, 500)
+    routed = bulk_load(
+        read_records(spark, str(d), fmt="avro"), "cql://h/ks/t?reducers=4", rowkey="k", now_ms=42
+    )
+    plan = _plan(routed)
+    assert "FileScan avro" in plan, plan
+    assert len(re.findall(r"(ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas)", plan)) == 1, plan
+    assert routed.count() == n

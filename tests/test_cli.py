@@ -45,24 +45,17 @@ def test_cli_end_to_end(spark, sf_dir, tmp_path):
 
 def test_avro_roundtrip(spark, tmp_path, sf_dir):
     """S1: round-trip a fixture through the Avro container format and
-    bulk-load it — identical dataflow to parquet. With spark-avro present
-    the native source writes+reads; without it (pip pyspark) the built-in
-    pure-Python container reader (sources/avro.py) is the read path and the
-    built-in writer produces the fixture — either way the reference's
-    primary input format RUNS here, values checked against the parquet
-    original."""
+    bulk-load it — identical dataflow to parquet. The built-in writer
+    stages the file and Spark's own Avro source reads it back, values
+    checked against the parquet original."""
     from hdfs2cass_spark.sinks.pipeline import bulk_load
-    from hdfs2cass_spark.sources.readers import has_avro_support, read_records
+    from hdfs2cass_spark.sources.avro import write_avro
+    from hdfs2cass_spark.sources.readers import read_records
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     avro_dir = tmp_path / "customer_avro"
-    if has_avro_support(spark):  # pragma: no cover - jar absent in sandbox
-        cust.write.format("avro").save(str(avro_dir))
-    else:
-        from hdfs2cass_spark.sources.avro import write_avro
-
-        avro_dir.mkdir()
-        write_avro(cust, str(avro_dir / "part-0.avro"), codec="deflate")
+    avro_dir.mkdir()
+    write_avro(cust, str(avro_dir / "part-0.avro"), codec="deflate")
     back = read_records(spark, str(avro_dir), fmt="avro")
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, cust.collect()))
     routed = bulk_load(back, "cql://h/ks/t?reducers=4", rowkey="c_custkey", now_ms=42)
@@ -70,11 +63,11 @@ def test_avro_roundtrip(spark, tmp_path, sf_dir):
 
 
 def test_avro_builtin_reader_splits_and_codecs(spark, tmp_path):
-    """The built-in container reader's scale contract: multi-file input,
-    byte-range splits smaller than one file (forced via split_bytes) cover
-    every row exactly once, and every supported codec decodes."""
-    from hdfs2cass_spark.sources.avro import read_avro, write_avro
+    """Spark's Avro source at scale: multi-file input, splits smaller than
+    one file (forced via maxPartitionBytes) cover every row exactly once,
+    and every codec the writer produces decodes."""
     from hdfs2cass_spark.sources import avrodec
+    from hdfs2cass_spark.sources.readers import read_records
 
     df = spark.range(5000).selectExpr(
         "id",
@@ -102,11 +95,21 @@ def test_avro_builtin_reader_splits_and_codecs(spark, tmp_path):
             codec=codec,
             block_records=256,
         )
-    # 64 KiB splits => many tasks per file; union of 3 files
-    back = read_avro(spark, str(d), split_bytes=64 * 1024)
-    assert back.count() == 3 * 5000
-    one = read_avro(spark, str(d / "b.avro"), split_bytes=64 * 1024)
-    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, df.collect()))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    try:
+        # 64 KiB splits => several tasks per file; union of 3 files
+        spark.conf.set(key, "64k")
+        back = read_records(spark, str(d), fmt="avro")
+        assert back.rdd.getNumPartitions() > 3
+        assert back.count() == 3 * 5000
+        one = read_records(spark, str(d / "b.avro"), fmt="avro")
+        assert sorted(map(tuple, one.collect())) == sorted(map(tuple, df.collect()))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 def test_read_records_multi_path_union(spark, sf_dir, tmp_path):
@@ -259,7 +262,8 @@ def test_avro_timestamp_roundtrip_is_microsecond_exact(spark, tmp_path):
     microsecond epochs where float64 resolution is ~0.5us."""
     import datetime as dt
 
-    from hdfs2cass_spark.sources.avro import read_avro, write_avro
+    from hdfs2cass_spark.sources.avro import write_avro
+    from hdfs2cass_spark.sources.readers import read_records
 
     rows = [
         (0, dt.datetime(2005, 4, 17, 8, 29, 2, 646319)),  # the fuzz repro
@@ -273,70 +277,59 @@ def test_avro_timestamp_roundtrip_is_microsecond_exact(spark, tmp_path):
     df = spark.createDataFrame(rows, "k bigint, ts timestamp_ntz")
     p = str(tmp_path / "ts.avro")
     write_avro(df, p)
-    got = {r.k: r.ts for r in read_avro(spark, p).collect()}
+    got = {r.k: r.ts for r in read_records(spark, p, fmt="avro").collect()}
     for k, want in rows:
         assert got[k] == want, (k, got[k], want)
 
 
-def test_avro_nested_temporal_stays_underlying_int(spark, tmp_path):
-    """A temporal logical type NESTED in a record/array must surface as its
-    underlying int/long with the raw value intact — declaring TimestampType
-    there while decoding raw millis let pyarrow coerce them as MICROseconds,
-    a silent 1000x corruption (review round 11)."""
-    from pyspark.sql import types as T
-
+def test_avro_nested_temporal_reads_exact_instant(spark, tmp_path):
+    """A temporal logical type NESTED in a record/array reads back as the
+    exact instant, like a top-level one (spark-avro semantics): declaring
+    TimestampType while keeping raw millis would read them as MICROseconds,
+    a silent 1000x corruption."""
     from hdfs2cass_spark.sources import avrodec
-    from hdfs2cass_spark.sources.avro import avro_to_spark_type, read_avro
+    from hdfs2cass_spark.sources.readers import read_records
 
+    ts = {"type": "long", "logicalType": "timestamp-millis"}
     schema = {
         "type": "record", "name": "r", "fields": [
             {"name": "k", "type": "long"},
-            {"name": "t", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+            {"name": "t", "type": ts},
             {"name": "nest", "type": {"type": "record", "name": "n", "fields": [
-                {"name": "t2", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+                {"name": "t2", "type": ts},
             ]}},
-            {"name": "arr", "type": {"type": "array",
-                "items": {"type": "long", "logicalType": "timestamp-millis"}}},
+            {"name": "arr", "type": {"type": "array", "items": ts}},
         ],
     }
-    st = avro_to_spark_type(schema)
-    assert isinstance(st["t"].dataType, T.TimestampType)  # top level converts
-    assert isinstance(st["nest"].dataType["t2"].dataType, T.LongType)  # nested stays raw
-    assert isinstance(st["arr"].dataType.elementType, T.LongType)
-
-    millis = 1700000000000
+    millis = 1700000000123
     p = str(tmp_path / "nested.avro")
     avrodec.write_container(
         p, schema, [{"k": 1, "t": millis, "nest": {"t2": millis}, "arr": [millis]}]
     )
-    row = read_avro(spark, p).collect()[0]
-    assert row.nest.t2 == millis and row.arr == [millis]
-    assert row.t.year == 2023  # top-level converted from millis correctly
+    df = read_records(spark, p, fmt="avro")
+    assert df.schema.simpleString() == (
+        "struct<k:bigint,t:timestamp,nest:struct<t2:timestamp>,arr:array<timestamp>>"
+    )
+    got = df.selectExpr(
+        "unix_millis(t)", "unix_millis(nest.t2)", "transform(arr, x -> unix_millis(x))"
+    ).first()
+    assert tuple(got) == (millis, millis, [millis])
 
 
-def test_avro_fallback_rejects_reader_options(spark, tmp_path):
-    import pytest
+def test_avro_reader_options_pass_through(spark, tmp_path):
+    """Reader options reach Spark's Avro source: an avroSchema projection
+    reads only the fields it names."""
+    from hdfs2cass_spark.sources import avrodec
+    from hdfs2cass_spark.sources.readers import read_records
 
-    from hdfs2cass_spark.sources.readers import has_avro_support, read_records
-
-    if has_avro_support(spark):  # pragma: no cover — jar present elsewhere
-        pytest.skip("spark-avro present; fallback gate not applicable")
-    with pytest.raises(ValueError, match="built-in Avro fallback"):
-        read_records(spark, str(tmp_path / "x.avro"), fmt="avro", avroSchema="{}")
-
-
-def test_parse_byte_size_spark_forms():
-    from hdfs2cass_spark.sources.avro import _DEFAULT_SPLIT, _parse_byte_size
-
-    assert _parse_byte_size("134217728b") == 128 << 20
-    assert _parse_byte_size("16m") == 16 << 20
-    assert _parse_byte_size("256MB") == 256 << 20
-    assert _parse_byte_size("1g") == 1 << 30
-    assert _parse_byte_size("4096") == 4096
-    assert _parse_byte_size(None) == _DEFAULT_SPLIT
-    import warnings
-
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert _parse_byte_size("lots") == _DEFAULT_SPLIT
-        assert any("unparseable" in str(x.message) for x in w)
+    schema = {
+        "type": "record", "name": "r", "fields": [
+            {"name": "id", "type": "long"}, {"name": "v", "type": "string"},
+        ],
+    }
+    p = str(tmp_path / "x.avro")
+    avrodec.write_container(p, schema, [{"id": 7, "v": "a"}])
+    proj = '{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}'
+    df = read_records(spark, p, fmt="avro", avroSchema=proj)
+    assert df.schema.simpleString() == "struct<id:bigint>"
+    assert [tuple(r) for r in df.collect()] == [(7,)]
