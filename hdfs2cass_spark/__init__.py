@@ -10,7 +10,8 @@ all designed for 100 TB scale.
 Layout:
     session       SparkSession factory (AQE on, UTC, Arrow on)
     sources       table loaders for the fixture schema + legacy text format
-    functions     cassandra murmur3 token, serialization matrix, text/vector exprs
+    functions     cassandra token specs, serialization matrix, text/vector exprs
+    jvm           the cassandra tokens as Java UDFs, compiled and registered on first use
     operators     reshape (P1/P2/P6), legacy parse (P3-P5), token partitioning
                   (K1, G1-G3), dedup, similarity, multimodal
     sinks         simulated bulk sink (sorted parquet by token bucket), connector stub

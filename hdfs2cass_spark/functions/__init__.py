@@ -1,3 +1,3 @@
-from .murmur3 import cassandra_token, murmur3_x64_128, token_pandas_udf
+from .murmur3 import cassandra_token, murmur3_x64_128
 
-__all__ = ["cassandra_token", "murmur3_x64_128", "token_pandas_udf"]
+__all__ = ["cassandra_token", "murmur3_x64_128"]

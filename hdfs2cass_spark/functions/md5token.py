@@ -16,7 +16,11 @@ Tokens exceed int64/decimal(38) range (up to 2^127), so the DataFrame carries
 them as fixed-width zero-padded decimal strings (39 chars): lexicographic
 order == numeric order for non-negative values, which keeps the in-partition
 ``sortWithinPartitions(bucket, token)`` append-only contract intact without
-128-bit arithmetic in the JVM.
+128-bit arithmetic in Catalyst.
+
+This module is the readable spec and the test oracle; the bulk-load path
+computes token and bucket JVM-side (``hdfs2cass_spark/jvm/Tokens.java``,
+differentially tested against it).
 """
 
 from __future__ import annotations
@@ -44,45 +48,3 @@ def range_per_bucket_md5(num_buckets: int) -> int:
     CassandraParams.java:310-317)."""
     q, r = divmod(RING_SIZE_MD5, num_buckets)
     return q + (1 if r else 0)
-
-
-def md5_token_bucket_udf(num_buckets: int):
-    """Arrow-batched pandas UDF: 16-byte md5 DIGEST -> struct(token: string,
-    bucket: int).
-
-    The digest itself is computed JVM-side by codegen'd ``md5()`` (see
-    operators/partitioning.with_md5_token_bucket, which also maps empty/NULL
-    keys to the all-zero digest = RandomPartitioner.ZERO), so the Python hop
-    is pure whole-batch numpy: abs-of-128-bit + decimal-string token +
-    searchsorted bucket. token is the zero-padded decimal string; bucket =
-    token div rangePerReducer (CassandraPartitioner.java:72) — Python-side
-    because the 128-bit division has no JVM-decimal equivalent (decimal tops
-    out at 38 digits). Differentially tested against md5_token.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from . import md5_np as _np_mod
-    from .md5_np import md5_tokens_and_buckets_from_digests
-    from .shippable import pickle_by_value
-
-    # workers may not have this package on PYTHONPATH — embed the module code
-    # in the UDF pickle instead of referencing it by import
-    pickle_by_value(_np_mod)
-
-    range_per = range_per_bucket_md5(num_buckets)
-
-    def _tok(digests: pd.Series) -> pd.DataFrame:
-        toks, buckets = md5_tokens_and_buckets_from_digests(
-            digests, range_per, num_buckets
-        )
-        return pd.DataFrame({"token": toks, "bucket": buckets})
-
-    _tok.__annotations__ = {"digests": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(
-        _tok,
-        StructType(
-            [StructField("token", StringType()), StructField("bucket", IntegerType())]
-        ),
-    )

@@ -21,9 +21,9 @@ Edge cases mirrored from Cassandra's Murmur3Partitioner.getToken:
     - raw hash Long.MIN_VALUE -> normalized to Long.MAX_VALUE
 
 `xxhash64`/`hash` built-ins are NOT substitutes — they use different algorithms
-and would route rows to the wrong replica. The pandas UDF below is the one
-unavoidable Python hop in the bulk-load path; it is Arrow-batched and the only
-per-row Python work is the hash itself.
+and would route rows to the wrong replica. This module is the readable spec
+and the test oracle; the bulk-load path computes the same token JVM-side
+(``hdfs2cass_spark/jvm/Tokens.java``, differentially tested against it).
 """
 
 from __future__ import annotations
@@ -131,31 +131,3 @@ def cassandra_token(key: bytes | str | None) -> int:
         return MIN_TOKEN
     h1, _ = murmur3_x64_128(key)
     return MAX_TOKEN if h1 == MIN_TOKEN else h1
-
-
-def token_pandas_udf():
-    """Arrow-batched pandas UDF: BinaryType/StringType column -> LongType token.
-
-    Delegates to the numpy-vectorized batch implementation
-    (functions/murmur3_np.py, differentially tested against this module) —
-    ~10x the scalar throughput on realistic keys.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    from . import murmur3_np as _np_mod
-    from .murmur3_np import murmur3_tokens
-    from .shippable import pickle_by_value
-
-    # workers may not have this package on PYTHONPATH — embed the module code
-    # in the UDF pickle instead of referencing it by import
-    pickle_by_value(_np_mod)
-
-    def _tok(keys: pd.Series) -> pd.Series:
-        # murmur3_tokens consumes the Series' Arrow buffers directly — no
-        # per-row materialization or utf-8 encode here
-        return pd.Series(murmur3_tokens(keys))
-
-    _tok.__annotations__ = {"keys": pd.Series, "return": pd.Series}
-    return pandas_udf(_tok, LongType())

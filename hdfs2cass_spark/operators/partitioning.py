@@ -7,9 +7,11 @@ re-sorting (SURVEY.md §2.1 G1-G3;
 CassandraKeyComparator.java:32-89, CassandraParams.java:288-334).
 
 Spark-first design (100 TB rationale):
-  - token: one Arrow-batched pandas UDF (Cassandra Murmur3 has no JVM built-in
-    equivalent; xxhash64/hash are different algorithms). Everything else stays
-    in Catalyst.
+  - token: a Java UDF from ``hdfs2cass_spark/jvm`` (Cassandra Murmur3 has no
+    Spark built-in; xxhash64/hash are different algorithms, and the Murmur3
+    classes in Spark's jars mask tail bytes where Cassandra sign-extends them).
+    It runs inside whole-stage codegen, so the bulk-load path has no Python
+    hop; everything else is Catalyst column arithmetic.
   - bucket: pure column arithmetic over fixed ring boundaries —
     ``(token - MIN) div range_per_bucket`` — NOT repartitionByRange (which
     *samples* boundaries; the ring gives us exact ones for free).
@@ -33,7 +35,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.murmur3 import MIN_TOKEN, token_pandas_udf
+from ..functions.murmur3 import MIN_TOKEN
+from ..jvm import MD5_TOKEN_BUCKET, MURMUR3_TOKEN, ensure_registered
 
 RING_SIZE = 2**64  # Murmur3 LongToken ring
 
@@ -44,8 +47,8 @@ def with_token(df: DataFrame, key_col: str, token_col: str = "token") -> DataFra
     `key_col` may be StringType (tokenized as UTF-8 bytes) or BinaryType
     (composite keys pre-composed via functions.serde.compose_partition_key).
     """
-    tok = token_pandas_udf()
-    return df.withColumn(token_col, tok(F.col(key_col)))
+    ensure_registered(df.sparkSession)
+    return df.withColumn(token_col, F.call_function(MURMUR3_TOKEN, F.col(key_col).cast("binary")))
 
 
 def bucket_expr(token_col: str, num_buckets: int) -> Column:
@@ -118,28 +121,19 @@ def with_md5_token_bucket(
     num_buckets: int,
     shuffle_seed: int | None = 42,
 ) -> DataFrame:
-    """G2 RandomPartitioner branch: MD5 BigIntegerToken + bucket in one UDF
-    pass (tokens are 128-bit — carried as sortable zero-padded strings).
-
-    The md5 digest runs JVM-SIDE in whole-stage codegen (round 4 — hashlib
-    per row in the Arrow batch was ~half the hop's runtime); empty/NULL keys
-    map to the all-zero digest, whose 128-bit abs is exactly
-    RandomPartitioner.ZERO. The Python hop is pure whole-batch numpy.
-    """
-    from ..functions.md5token import md5_token_bucket_udf
-
-    tb = md5_token_bucket_udf(num_buckets)
+    """G2 RandomPartitioner branch: MD5 BigIntegerToken + bucket from one
+    Java UDF call over the key bytes (tokens are 128-bit, carried as sortable
+    zero-padded strings; empty/NULL keys get RandomPartitioner.ZERO)."""
+    ensure_registered(df.sparkSession)
     # Column API, not an interpolated SQL string: key_col names containing
     # dots/spaces/hyphens would need backticks in F.expr and either fail to
     # parse or resolve as a field path (F.col parses dots as field paths too,
     # hence the backtick quoting)
     key = F.col("`" + key_col.replace("`", "``") + "`")
-    dig = F.when(
-        key.isNull() | (F.length(key) == 0), F.unhex(F.lit("0" * 32))
-    ).otherwise(F.unhex(F.md5(key.cast("binary"))))
-    out = df.withColumn("_dig", dig).withColumn("_tb", tb(F.col("_dig"))).select(
+    tb = F.call_function(MD5_TOKEN_BUCKET, key.cast("binary"), F.lit(num_buckets))
+    out = df.withColumn("_tb", tb).select(
         "*", F.col("_tb.token").alias("token"), F.col("_tb.bucket").alias("bucket")
-    ).drop("_tb", "_dig")
+    ).drop("_tb")
     if shuffle_seed is not None:
         mapping = shuffled_bucket_map(num_buckets, shuffle_seed)
         out = out.withColumn(

@@ -43,9 +43,9 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # larger Arrow batches amortize the per-batch numpy setup in the token
-        # UDF: 10k -> 64k batches doubled end-to-end bulk-load throughput
-        # (0.69 -> 1.41M rows/s on local[32], 5M-row stress run)
+        # larger Arrow batches amortize the per-batch Python/JVM handoff of
+        # the pandas/Arrow UDFs (multimodal decode, wire sinks, streaming
+        # state); the bulk-load token is a JVM function and crosses no batch
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.speculation", "false")

@@ -47,9 +47,9 @@ def ensure_session_confs(spark: SparkSession) -> None:
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # bigger Arrow batches amortize the per-batch Python/JVM handoff in
-        # the token UDF (~7% on bulk routing); runtime-settable, worker-memory
-        # bounded (~64k rows x row width per in-flight batch)
+        # bigger Arrow batches amortize the per-batch Python/JVM handoff of
+        # the pandas/Arrow UDFs; runtime-settable, worker-memory bounded
+        # (~64k rows x row width per in-flight batch)
         ("spark.sql.execution.arrow.maxRecordsPerBatch", "65536"),
     ):
         try:

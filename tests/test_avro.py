@@ -147,19 +147,25 @@ def test_directory_reads_only_avro_files(spark, tmp_path):
         read_records(spark, str(empty), fmt="avro")
 
 
-def test_bulk_load_over_avro_has_one_python_node(spark, tmp_path):
-    """read_records(fmt="avro") -> bulk_load plans the JVM Avro scan and
-    exactly one Python node, the Murmur3 token UDF."""
+def test_bulk_load_over_avro_has_no_python_node(spark, tmp_path):
+    """read_records(fmt="avro") -> bulk_load plans the JVM Avro scan and no
+    Python node, on the Murmur3 and the RandomPartitioner path; the token
+    function runs inside a whole-stage-codegen stage."""
     import re
 
+    from hdfs2cass_spark.config import RANDOM, TargetInfo
+    from hdfs2cass_spark.jvm import MD5_TOKEN_BUCKET, MURMUR3_TOKEN
     from hdfs2cass_spark.sinks.pipeline import bulk_load
 
     d = tmp_path / "songs"
     n = _song_files(d, 2, 500)
-    routed = bulk_load(
-        read_records(spark, str(d), fmt="avro"), "cql://h/ks/t?reducers=4", rowkey="k", now_ms=42
-    )
-    plan = _plan(routed)
-    assert "FileScan avro" in plan, plan
-    assert len(re.findall(r"(ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas)", plan)) == 1, plan
-    assert routed.count() == n
+    src = read_records(spark, str(d), fmt="avro")
+    random_target = TargetInfo("ks", "t", src.columns, ["k"], partitioner=RANDOM)
+    for fn, target in ((MURMUR3_TOKEN, None), (MD5_TOKEN_BUCKET, random_target)):
+        routed = bulk_load(src, "cql://h/ks/t?reducers=4", rowkey="k", target=target, now_ms=42)
+        # collect finalizes the adaptive plan, which carries the codegen stage ids
+        assert len(routed.collect()) == n
+        plan = _plan(routed)
+        assert "FileScan avro" in plan, plan
+        assert not re.search(r"ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas", plan), plan
+        assert re.search(rf"\*\(\d+\) Project \[[^\n]*{fn}\(", plan), plan

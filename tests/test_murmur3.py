@@ -51,18 +51,3 @@ def test_long_keys_and_tails():
         -4835482818955082061
     )
     assert cassandra_token(bytes(range(200, 230))) == -1961898924875430197
-
-
-def test_numpy_batch_matches_scalar():
-    """Differential: vectorized batch implementation == scalar spec on random
-    keys covering empty/None, high-bit bytes, all tail lengths, multi-block."""
-    import random
-
-    from hdfs2cass_spark.functions.murmur3_np import murmur3_tokens
-
-    rnd = random.Random(1234)
-    keys = [bytes(rnd.randrange(256) for _ in range(rnd.randrange(100))) for _ in range(3000)]
-    keys += [b"", None, b"foo", b"x" * 16, b"y" * 17, b"z" * 1000]
-    got = list(murmur3_tokens(keys))
-    exp = [cassandra_token(k) for k in keys]
-    assert got == exp

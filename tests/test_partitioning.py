@@ -350,10 +350,9 @@ def test_bucket_expr_exact_vs_python_bigint(spark):
 
 
 def test_md5_route_digest_path_edge_keys(spark):
-    """The JVM-side md5(CAST(key AS BINARY)) digest must agree with the
-    scalar spec on the edges the CASE handles specially: empty string and
-    NULL (-> all-zero digest -> RandomPartitioner.ZERO), multi-byte UTF-8,
-    and raw BINARY keys (cast is a no-op there)."""
+    """The MD5 token of CAST(key AS BINARY) must agree with the scalar spec
+    on the edge keys: empty string and NULL (-> RandomPartitioner.ZERO),
+    multi-byte UTF-8, and raw BINARY keys (cast is a no-op there)."""
     from pyspark.sql.types import BinaryType, StructField, StructType
 
     from hdfs2cass_spark.functions.md5token import md5_token
@@ -377,7 +376,7 @@ def test_md5_route_digest_path_edge_keys(spark):
 
 def test_md5_route_dotted_column_name(spark):
     """Key columns whose NAMES need backticks (dots, spaces, hyphens) must
-    route — the digest is built with Column APIs, not an interpolated SQL
+    route — the key is built with Column APIs, not an interpolated SQL
     string that would parse the dot as a field path."""
     from hdfs2cass_spark.functions.md5token import md5_token
     from hdfs2cass_spark.operators.partitioning import with_md5_token_bucket

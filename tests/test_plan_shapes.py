@@ -79,13 +79,15 @@ def test_q3_fact_side_join_never_force_broadcast(spark, sf_dir):
     assert "TakeOrderedAndProject" in p  # top-k shape survives the join change
 
 
-def test_bulk_load_single_shuffle_single_python_hop(spark, sf_dir):
+def test_bulk_load_single_shuffle_no_python_hop(spark, sf_dir):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     routed = bulk_load(cust, "cql://h/ks/t?reducers=8", rowkey="c_custkey", now_ms=42)
     p = _explain(spark, routed)
     assert p.count("Exchange") == 1  # the bucket repartition — nothing else shuffles
-    assert p.count("ArrowEvalPython") == 1  # the token UDF — nothing else crosses to Python
+    assert "ArrowEvalPython" not in p  # the token is a JVM function: nothing crosses to Python
     assert "Sort [bucket" in p  # in-partition sort feeding the append-only sink
+    routed.collect()  # the final adaptive plan carries the codegen stage ids
+    assert re.search(r"\*\(\d+\) Project \[[^\n]*h2c_m3tok\(", _explain(spark, routed))
 
 
 def test_semi_anti_join_plans(spark, sf_dir):
@@ -232,15 +234,15 @@ def test_window_rank_is_group_limited(spark, sf_dir):
 
 
 def test_token_route_sampler_reuses_barrier(spark, sf_dir):
-    """token_route_customer (r13 fix): both token UDFs are map-only, so the
-    presentation sort must sit on a hash-repartition barrier — otherwise the
-    range sampler re-runs the murmur3 + md5 hops (measured 2x end-to-end on
-    the 1.5M-row probe slice)."""
+    """token_route_customer (r13 fix): both token functions are map-only, so
+    the presentation sort must sit on a hash-repartition barrier — otherwise
+    the range sampler re-runs the murmur3 + md5 tokens (measured 2x end-to-end
+    on the 1.5M-row probe slice, when they were Python UDFs)."""
     p = _explain(spark, CATALOG["token_route_customer"].fn(spark, sf_dir))
     i = p.find("rangepartitioning")
     assert i >= 0
     assert "Exchange hashpartitioning" in p[i:] or "ShuffleQueryStage" in p[i:]
-    assert p.count("ArrowEvalPython") == 1  # both token UDFs share one hop
+    assert p.count("ArrowEvalPython") == 0  # both tokens are JVM functions
 
 
 def test_substring_spans_skew_safe_dup_marking(spark, sf_dir):

@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis) for the pure-Python kernels.
 
 These cover the non-Spark invariants cheaply (no session needed): the
-vectorized murmur3 == scalar spec for arbitrary byte keys, serialization
-round-trip envelopes, and bucket math covering the full ring.
+scalar token specs' range and determinism, serialization round-trip
+envelopes, and bucket math covering the full ring. The JVM token functions
+are checked against the scalar specs in tests/test_jvm_tokens.py.
 """
 
 from hypothesis import given, settings
@@ -13,14 +14,7 @@ from hdfs2cass_spark.functions.murmur3 import (
     MIN_TOKEN,
     cassandra_token,
 )
-from hdfs2cass_spark.functions.murmur3_np import murmur3_tokens
 from hdfs2cass_spark.functions.serde import compose_partition_key, to_cassandra_bytes
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.binary(min_size=0, max_size=200), min_size=1, max_size=50))
-def test_vectorized_tokens_match_scalar(keys):
-    assert list(murmur3_tokens(keys)) == [cassandra_token(k) for k in keys]
 
 
 @settings(max_examples=500, deadline=None)
@@ -75,13 +69,13 @@ def test_bucket_covers_ring_exhaustively():
 @settings(max_examples=300, deadline=None)
 @given(st.one_of(st.binary(max_size=64), st.text(max_size=32), st.none()))
 def test_md5_token_matches_inline_udf_logic(key):
-    """The pandas UDF's self-contained closure re-implements md5_token inline
-    (so executors need no package import); this pins the two against drift."""
+    """An independent inline statement of RandomPartitioner.getToken pins
+    md5_token, the spec the JVM function is tested against, to the ring."""
     import hashlib
 
     from hdfs2cass_spark.functions.md5token import RING_SIZE_MD5, md5_token
 
-    # the closure's inline branch, verbatim
+    # abs of the signed big-endian digest; empty and NULL keys -> 0
     k = key
     if k is None:
         k = b""
