@@ -15,13 +15,20 @@ Spark-first design (100 TB rationale):
   - bucket: pure column arithmetic over fixed ring boundaries —
     ``(token - MIN) div range_per_bucket`` — NOT repartitionByRange (which
     *samples* boundaries; the ring gives us exact ones for free).
-  - routing: ``df.repartition(n, "bucket")`` + ``sortWithinPartitions(bucket,
-    token, key)``. Hash-partitioning on the bucket id may co-locate several
-    buckets in one task (hash collision), but every bucket lands entirely in
-    exactly one task and rows within it are token-sorted — the append-only sink
-    contract holds per bucket, with ~n concurrent writers. This stays entirely
-    in the DataFrame/Tungsten path: no Python round-trip of row data, which an
-    RDD ``partitionBy`` would force on every byte at 100 TB.
+  - routing: ``df.repartition(k, route)`` + ``sortWithinPartitions(bucket,
+    token, key)`` with ``k = min(n, defaultParallelism)``. ``route`` is a
+    partitioning expression (nothing new crosses the shuffle) that picks, for
+    ``pmod(bucket, k) = p``, the smallest int Spark's hash partitioner sends
+    to task ``p`` (``route_keys``, from a Python twin of Spark's
+    Murmur3 ``hashInt``). So every bucket lands wholly in one task, in
+    decorated-key order — the append-only sink contract — and with
+    ``n <= cores`` task ``p`` carries exactly bucket ``p``, the reference's
+    reducer-per-bucket layout. Past the core count, a task writes its
+    ``n / k`` buckets one after another (one file each): more tasks than
+    cores would add no concurrency, only the ~0.1 core-second fixed cost of
+    every Parquet write task. This stays entirely in the DataFrame/Tungsten
+    path: no Python round-trip of row data, which an RDD ``partitionBy``
+    would force on every byte at 100 TB.
   - bucket->partition shuffling (CassandraParams.java:319-328, avoids mapping
     ring order onto node order): a seeded permutation applied to the bucket id.
   - ``distribute_randomly`` escape hatch (CassandraPartitioner.java:58-60):
@@ -30,7 +37,9 @@ Spark-first design (100 TB rationale):
 
 from __future__ import annotations
 
+import functools
 import random
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -100,6 +109,42 @@ def shuffled_bucket_map(num_buckets: int, seed: int = 42) -> list[int]:
     return perm
 
 
+def _lookup(table: Sequence[int], index: Column) -> Column:
+    """``table[index]`` as one Catalyst expression over a literal int array."""
+    return F.element_at(F.array(*[F.lit(v) for v in table]), index + 1)
+
+
+def spark_hash_int(value: int, seed: int = 42) -> int:
+    """Spark's ``hash(int)``: ``Murmur3_x86_32.hashInt(value, seed)``, signed."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k1 = rotl(value * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = (rotl((seed & m) ^ k1, 13) * 5 + 0xE6546B64) & m
+    h ^= 4  # the input length in bytes
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & m
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.cache
+def route_keys(k: int) -> tuple[int, ...]:
+    """``keys[p]`` = the smallest non-negative int whose Spark hash has
+    ``pmod(hash, k) == p``, i.e. a value ``repartition(k, ...)`` sends to
+    task ``p``. Pure Python: computing it starts no Spark job."""
+    keys: dict[int, int] = {}
+    x = 0
+    while len(keys) < k:
+        keys.setdefault(spark_hash_int(x) % k, x)
+        x += 1
+    return tuple(keys[p] for p in range(k))
+
+
 def with_bucket(
     df: DataFrame,
     num_buckets: int,
@@ -109,9 +154,7 @@ def with_bucket(
 ) -> DataFrame:
     b = bucket_expr(token_col, num_buckets)
     if shuffle_seed is not None:
-        mapping = shuffled_bucket_map(num_buckets, shuffle_seed)
-        mapping_expr = F.element_at(F.array(*[F.lit(p) for p in mapping]), b + 1)
-        b = mapping_expr
+        b = _lookup(shuffled_bucket_map(num_buckets, shuffle_seed), b)
     return df.withColumn(bucket_col, b)
 
 
@@ -135,9 +178,8 @@ def with_md5_token_bucket(
         "*", F.col("_tb.token").alias("token"), F.col("_tb.bucket").alias("bucket")
     ).drop("_tb")
     if shuffle_seed is not None:
-        mapping = shuffled_bucket_map(num_buckets, shuffle_seed)
         out = out.withColumn(
-            "bucket", F.element_at(F.array(*[F.lit(p) for p in mapping]), F.col("bucket") + 1)
+            "bucket", _lookup(shuffled_bucket_map(num_buckets, shuffle_seed), F.col("bucket"))
         )
     return out
 
@@ -155,7 +197,9 @@ def route_to_buckets(
     Output carries `token` and `bucket` columns; rows arrive at the sink in
     (bucket, token, key) order, i.e. decorated-key order within each bucket —
     the exact contract CassandraKeyComparator.java:32-35 establishes so the
-    SSTable writer can append without re-sorting.
+    SSTable writer can append without re-sorting. The rows run in
+    ``min(num_partitions, defaultParallelism)`` tasks, bucket ``b`` in task
+    ``pmod(b, tasks)``; `distribute_randomly` keeps `num_partitions`.
 
     `partitioner` selects the token branch exactly like
     CassandraPartitioner.java:63-68: the Murmur3 LongToken path (default) or
@@ -170,9 +214,9 @@ def route_to_buckets(
     else:
         routed = with_token(df, key_col)
         routed = with_bucket(routed, num_partitions, shuffle_seed=shuffle_seed)
-    return routed.repartition(num_partitions, F.col("bucket")).sortWithinPartitions(
-        "bucket", "token", key_col
-    )
+    k = min(num_partitions, df.sparkSession.sparkContext.defaultParallelism)
+    route = _lookup(route_keys(k), F.pmod(F.col("bucket"), F.lit(k)))
+    return routed.repartition(k, route).sortWithinPartitions("bucket", "token", key_col)
 
 
 def binary_key_expr(df: DataFrame, cols: list[str]) -> Column:

@@ -39,10 +39,11 @@ def write_simulated_sstables(
 ) -> None:
     """Write a `route_to_buckets` output as bucket-partitioned sorted parquet.
 
-    ``partitionBy("bucket")`` + the upstream ``repartition(n, bucket)
-    .sortWithinPartitions(bucket, token, key)`` means each task appends exactly
-    its buckets' rows in token order — one sorted file per bucket, no
-    post-sort, matching the reference's append-only writer contract.
+    ``partitionBy("bucket")`` + the upstream routing (every bucket wholly in
+    one task, ``sortWithinPartitions(bucket, token, key)``) means each task
+    writes its buckets one after another, each bucket's rows in token order —
+    one sorted file per bucket, no post-sort, matching the reference's
+    append-only writer contract.
 
     `compressionclass` accepts the Cassandra compressor class names from the
     output URI (short or fully-qualified) and maps them to the sink codec;

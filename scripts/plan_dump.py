@@ -10,7 +10,9 @@ clean when (and only when) their plans agree:
     RDD a ``localCheckpoint`` leaves in the plan);
   - the wall-clock "now" literal of the queries that default ``now_ms`` to
     the current time: a 13-digit (millis) or 16-digit (micros) integer within
-    a day of the dump's own clock.
+    a day of the dump's own clock;
+  - the process and thread ids in the staging directory of
+    ``avro_roundtrip_customer`` (``h2c_avro_rt_<pid>_<thread id>/``).
 
 A query whose construction raises writes ``ERROR <type>: <message>`` instead.
 
@@ -45,6 +47,7 @@ _NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"\b\d{13}(?:\d{3})?\b"), _now_literal),
+    (re.compile(r"h2c_avro_rt_\d+_\d+"), "h2c_avro_rt_<pid>_<tid>"),
 ]
 
 

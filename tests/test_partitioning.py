@@ -11,8 +11,10 @@ from pyspark.sql import functions as F
 from hdfs2cass_spark.functions.murmur3 import MIN_TOKEN, cassandra_token
 from hdfs2cass_spark.operators.partitioning import (
     bucket_expr,
+    route_keys,
     route_to_buckets,
     shuffled_bucket_map,
+    spark_hash_int,
     with_bucket,
     with_token,
 )
@@ -69,26 +71,62 @@ def test_route_tokens_are_correct(spark):
         assert r["token"] == cassandra_token(r["k"])
 
 
+def test_spark_hash_int_twin_matches_spark(spark):
+    # every int the route-key search visits for up to 256 sink tasks
+    top = max(max(route_keys(k)) for k in range(1, 257))
+    got = [r[0] for r in spark.range(-8, top + 1).select(F.hash(F.col("id").cast("int"))).collect()]
+    assert got == [spark_hash_int(i) for i in range(-8, top + 1)]
+    spark_hashes = got[8:]  # ints 0..top
+    for k in (1, 3, 16, 256):
+        # keys[p] is the first int whose Spark hash pmod k is p
+        residues = [h % k for h in spark_hashes]
+        assert list(route_keys(k)) == [residues.index(p) for p in range(k)]
+
+
+@pytest.mark.parametrize("n", [1, 3, 4, 16, 64])
+@pytest.mark.parametrize("partitioner", ["murmur3", "random"])
+def test_each_bucket_routes_to_one_task(spark, n, partitioner):
+    from hdfs2cass_spark.config import MURMUR3, RANDOM
+
+    df = spark.range(3000).select(F.concat(F.lit("key"), F.col("id")).alias("k"))
+    routed = route_to_buckets(
+        df, n, key_col="k", partitioner={"murmur3": MURMUR3, "random": RANDOM}[partitioner]
+    )
+    k = min(n, spark.sparkContext.defaultParallelism)
+    assert routed.rdd.getNumPartitions() == k
+    placed = (
+        routed.select("bucket", F.spark_partition_id().alias("task")).distinct().collect()
+    )
+    assert all(r["task"] == r["bucket"] % k for r in placed)
+    buckets = [r["bucket"] for r in placed]
+    assert len(buckets) == len(set(buckets))  # no bucket split across tasks
+    assert set(buckets) <= set(range(n))
+
+
 def test_bulk_load_end_to_end(spark, sf_dir, tmp_path):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    out = str(tmp_path / "sstables")
-    routed = bulk_load(
-        cust,
-        "cql://localhost/ks/customer?reducers=4",
-        rowkey="c_custkey",
-        now_ms=42,
-        simulated_path=out,
-    )
-    dirs = sorted(glob.glob(os.path.join(out, "bucket=*")))
-    assert 1 <= len(dirs) <= 4
-    total = 0
-    for d in dirs:
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        t = pq.read_table(files[0]) if len(files) == 1 else pq.read_table(d)
-        toks = t.column("token").to_pylist()
-        assert toks == sorted(toks)  # append-only order inside each bucket
-        total += t.num_rows
-    assert total == cust.count()
+    # 16 and 64 reducers exceed the core count: a task writes several
+    # buckets one after another, still one token-sorted file per bucket
+    for reducers in (4, 16, 64):
+        out = str(tmp_path / f"sstables{reducers}")
+        routed = bulk_load(
+            cust,
+            f"cql://localhost/ks/customer?reducers={reducers}",
+            rowkey="c_custkey",
+            now_ms=42,
+            simulated_path=out,
+        )
+        dirs = sorted(glob.glob(os.path.join(out, "bucket=*")))
+        assert 1 <= len(dirs) <= reducers
+        total = 0
+        for d in dirs:
+            assert 0 <= int(d.rsplit("=", 1)[1]) < reducers
+            files = glob.glob(os.path.join(d, "*.parquet"))
+            assert len(files) == 1, d
+            toks = pq.read_table(files[0]).column("token").to_pylist()
+            assert toks == sorted(toks)  # append-only order inside each bucket
+            total += len(toks)
+        assert total == cust.count()
     assert routed.columns[0] == "_rowkey"
 
 
@@ -265,7 +303,10 @@ def test_bulk_load_random_partitioner_target(spark):
     )
     routed = bulk_load(df, "cql://h/ks/t", rowkey="user_id", target=target, now_ms=42)
     assert dict(routed.dtypes)["token"] == "string"  # 128-bit tokens ride as strings
-    assert routed.rdd.getNumPartitions() == 4  # reducers default = node count
+    # reducers default = node count: 4 buckets, in at most one task per core
+    buckets = {r["bucket"] for r in routed.select("bucket").distinct().collect()}
+    assert len(buckets) <= 4 and max(buckets) < 4
+    assert routed.rdd.getNumPartitions() == min(4, spark.sparkContext.defaultParallelism)
 
 
 def test_composite_component_over_64k_raises(spark):
