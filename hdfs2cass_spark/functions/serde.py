@@ -6,9 +6,10 @@ and composite partition-key composition (``getPartitionKey``/``compose``,
 CassandraRecordUtils.java:230-261).
 
 In the Spark engine this is needed only at the sink boundary (Catalyst keeps
-native types until then); rows are encoded via an Arrow-batched pandas UDF in
-``operators/partitioning.py``. Python-side equivalents are kept here both for the
-UDF body and for differential tests against known Cassandra encodings.
+native types until then): CQL values are encoded by ``schema_encoder`` inside
+the one Arrow-batched mapInPandas of ``sinks/wire.py`` ``encode_cql_wire``.
+The scalar and composite-key forms are also the differential specs that tests
+hold the JVM-side key bytes (``operators/partitioning.binary_key_expr``) to.
 """
 
 from __future__ import annotations

@@ -67,3 +67,14 @@ def capped_buckets(
         .groupBy(*keys)
         .agg(F.sort_array(F.collect_list(payload)).alias(out))
     )
+
+
+def bucket_pairs(ids: str, fields: str) -> Column:
+    """Every pair of the sorted bucket array ``ids`` in array order, expanded
+    inside the bucket row (no self-join), as ``struct(fields)`` over the
+    earlier element ``x`` and the later element ``y``."""
+    return F.expr(
+        f"flatten(transform({ids}, (x, i) -> "
+        f"transform(slice({ids}, i + 2, size({ids}) - i - 1), y -> "
+        f"struct({fields}))))"
+    )

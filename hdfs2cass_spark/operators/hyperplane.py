@@ -45,7 +45,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .buckets import capped_buckets
+from .buckets import bucket_pairs, capped_buckets
 
 DEFAULT_CAP = 100  # mirrors operators.text.BAND_CAP for band buckets
 DEFAULT_SEED = 42
@@ -228,13 +228,8 @@ def hyperplane_candidates(
     # but an adversarial code (millions of identical embeddings) would
     # otherwise fill one aggregation buffer before cap-and-drop could fire
     buckets = capped_buckets(entries, ["code"], "_id", cap=cap)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), y -> "
-        "struct(x AS id_a, y AS id_b))))"
-    )
     return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(bucket_pairs("ids", "x AS id_a, y AS id_b")).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )

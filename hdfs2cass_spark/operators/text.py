@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import SH_DUCK, SH_ON_WS_SPARK, W_SPARK, hash60_duck, hash60_spark
-from .buckets import capped_buckets
+from .buckets import bucket_pairs, capped_buckets
 
 # (app, plan, input files, split confs, parallelism) -> Spark's scan partition
 # count. `df.rdd` costs 30-40 ms of plan->RDD conversion per call; callers
@@ -368,13 +368,8 @@ def _band_candidates(wide: DataFrame) -> DataFrame:
     # by millions of near-identical docs is dropped by a streaming count, not
     # after materializing the full id list in one aggregation buffer
     buckets = capped_buckets(bands, ["band", "bkey"], "doc_id", cap=BAND_CAP)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), y -> "
-        "struct(x AS doc_a, y AS doc_b))))"
-    )
     return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(bucket_pairs("ids", "x AS doc_a, y AS doc_b")).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )

@@ -41,7 +41,7 @@ from ..functions.tokenize import (
     hash60_spark,
 )
 from ..functions.vec import _cosine_duck, _cosine_prenormed, norm_sql
-from ..operators.buckets import capped_buckets
+from ..operators.buckets import bucket_pairs, capped_buckets
 from ..operators.cc import CLUSTER_EDGES_FRAGMENT, connected_components
 from ..operators.hyperplane import _lsh_bucket_sql, hyperplane_near_dup_pairs
 from ..operators.kmeans import (
@@ -388,14 +388,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = capped_buckets(
         sh, ["h"], F.struct("doc_id", "n_tot"), out="ms", cap=DF_CAP
     )
-    pair_expr = (
-        "flatten(transform(ms, (x, i) -> "
-        "transform(slice(ms, i + 2, size(ms) - i - 1), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "x.n_tot AS na, y.n_tot AS nb))))"
+    pairs = bucket_pairs(
+        "ms", "x.doc_id AS doc_a, y.doc_id AS doc_b, x.n_tot AS na, y.n_tot AS nb"
     )
     common = (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         # two DISTINCT shingles of one doc can collide to the same 60-bit
         # hash (~n^2/2^61), putting the doc in the bucket twice — the sorted
         # expansion would then emit a self-pair the oracle's a.doc_id <
@@ -830,14 +827,11 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = capped_buckets(
         bands, ["band", "bval"], F.struct("doc_id", "simhash"), out="ms", cap=BAND_CAP
     )
-    pair_expr = (
-        "flatten(transform(ms, (x, i) -> "
-        "transform(slice(ms, i + 2, size(ms) - i - 1), y -> "
-        "struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-        "x.simhash AS sh_a, y.simhash AS sh_b))))"
+    pairs = bucket_pairs(
+        "ms", "x.doc_id AS doc_a, y.doc_id AS doc_b, x.simhash AS sh_a, y.simhash AS sh_b"
     )
     cand = (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b", "p.sh_a", "p.sh_b")
         .distinct()
     )

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import W_DUCK, W_SPARK, hash60_duck, hash60_spark
-from ..operators.buckets import capped_buckets
+from ..operators.buckets import bucket_pairs, capped_buckets
 from ..sources.readers import load_table
 from .pipeline import SUBSTR_K
 from .present import present_sorted
@@ -314,13 +314,8 @@ def _candidate_pairs_df(d: DataFrame, fast: bool = False) -> DataFrame:
         .select("doc_id", F.explode(F.expr(sel_h)).alias("h"))
     )
     buckets = capped_buckets(dfp, ["h"], "doc_id", cap=PAIR_CAP)
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids) - i - 1), y -> "
-        "struct(x AS doc_a, y AS doc_b))))"
-    )
     return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(bucket_pairs("ids", "x AS doc_a, y AS doc_b")).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 2)

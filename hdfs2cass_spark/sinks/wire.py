@@ -7,9 +7,12 @@ with timestamp/ttl appended as the LAST TWO bound values
 (CQLRecord.java:49-52, CassandraClusterInfo.java:160-172).
 
 Spark-first placement: serialization happens at the *sink boundary only* —
-Catalyst keeps native types through reshape/route (pushdown, codegen, columnar
-parquet all stay available), and one Arrow-batched mapInPandas emits the exact
-wire bytes the SSTable writer would consume.
+Catalyst keeps native types through reshape/route. The Thrift wire form is a
+plain projection: reshape has already cast every name and value to string,
+and ``cast(string AS binary)`` is its UTF-8 bytes, so Thrift rows never leave
+the JVM. CQL values keep one Arrow-batched mapInPandas, because Catalyst has
+no bit cast for double/float and no form of Cassandra's decimal or collection
+serializers; ``functions/serde.schema_encoder`` is the one typed encoder.
 """
 
 from __future__ import annotations
@@ -18,47 +21,53 @@ import struct
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ..functions import serde as _serde_mod
 from ..functions.serde import schema_encoder
 from ..functions.shippable import pickle_by_value
 
-# the encoder closures reference functions.serde — ship it by value so
-# executors without this package on PYTHONPATH can still run the UDFs
+# the CQL encoder closure references functions.serde — ship it by value so
+# executors without this package on PYTHONPATH can still run the UDF
 pickle_by_value(_serde_mod)
 
-def _token_field(routed: DataFrame) -> StructField:
-    """Murmur3-routed frames carry bigint tokens; RandomPartitioner (MD5)
-    frames carry 39-char zero-padded decimal STRING tokens (128-bit values
-    exceed every JVM numeric — functions/md5token.py). The wire schema must
-    follow the routed frame's dtype or Arrow rejects the batch."""
-    return StructField("token", routed.schema["token"].dataType)
+
+def _bytes(c: Column) -> Column:
+    """A string (as UTF-8) or binary column as Cassandra bytes; NULL is the
+    empty buffer (CassandraRecordUtils.java:81-82)."""
+    return F.coalesce(c.cast("binary"), F.lit(bytearray()))
 
 
-WIRE_SCHEMA = StructType(
-    [
-        StructField("pk", BinaryType()),
-        StructField("token", LongType()),
-        StructField("bucket", IntegerType()),
-        StructField("values", ArrayType(BinaryType())),
-        StructField("writetime", LongType()),
-        StructField("ttl", IntegerType()),
-    ]
-)
+def _pk(routed: DataFrame, key: str) -> Column:
+    """Partition-key bytes: the typed `_pk` when the pipeline provides it
+    (single-column typed encoding or composite envelope), else the UTF-8 of
+    the display key ``key``."""
+    return _bytes(F.col("_pk") if "_pk" in routed.columns else F.col(key))
 
 
-def _with_token_dtype(schema: StructType, routed: DataFrame) -> StructType:
-    return StructType(
-        [_token_field(routed) if f.name == "token" else f for f in schema.fields]
+def _non_null(c: Column, message: Column) -> Column:
+    """``c``, failing the job with ``message`` where it is NULL: a counter
+    delta or a super column name has no empty-buffer meaning."""
+    return F.when(c.isNull(), F.raise_error(message)).otherwise(c)
+
+
+def _cells(muts: Column) -> Column:
+    """[(name, value, ts, ttl)] with name/value as bytes, ms ts and ttl kept."""
+    return F.transform(
+        muts,
+        lambda m: F.struct(
+            _bytes(m["name"]).alias("name"),
+            _bytes(m["value"]).alias("value"),
+            m["ts"].alias("ts"),
+            m["ttl"].alias("ttl"),
+        ),
+    )
+
+
+def _thrift(routed: DataFrame, mutations: Column) -> DataFrame:
+    return routed.select(
+        _pk(routed, "key").alias("pk"), "token", "bucket", mutations.alias("mutations")
     )
 
 
@@ -71,17 +80,20 @@ def encode_cql_wire(routed: DataFrame) -> DataFrame:
     """
     meta = {"_rowkey", "_pk", "writetime", "ttl", "token", "bucket"}
     value_cols = [c for c in routed.columns if c not in meta]
-    has_pk = "_pk" in routed.columns
     # encoders are bound to the DECLARED column types (like Cassandra's
     # per-column TypeSerializers) — value-type inference would mis-encode
     # nullable int columns, which Arrow->pandas hands over as float64
     encoders = [schema_encoder(routed.schema[c].dataType) for c in value_cols]
+    dtype = {c: routed.schema[c].dataType.simpleString() for c in routed.columns}
+    schema = (
+        f"pk binary, token {dtype['token']}, bucket {dtype['bucket']}, values array<binary>, "
+        f"writetime {dtype['writetime']}, ttl {dtype['ttl']}"
+    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             cols = [pdf[c].to_numpy() for c in value_cols]
-            wt = pdf["writetime"].to_numpy()
-            ttl = pdf["ttl"].to_numpy()
+            wt, ttl = pdf["writetime"].to_numpy(), pdf["ttl"].to_numpy()
             # the USING TIMESTAMP ? AND TTL ? bind parameters are bigint/int —
             # fixed widths, not value-inferred
             values = [
@@ -89,47 +101,13 @@ def encode_cql_wire(routed: DataFrame) -> DataFrame:
                 + [struct.pack(">q", int(wt[i])), struct.pack(">i", int(ttl[i]))]
                 for i in range(len(pdf))
             ]
-            # pk = the typed partition-key bytes when the pipeline provides
-            # them (_pk — single-column typed encoding or composite envelope);
-            # utf-8 of the display rowkey only for bare reshape outputs
-            if has_pk:
-                pk = pdf["_pk"].map(lambda b: bytes(b) if b is not None else b"")
-            else:
-                pk = pdf["_rowkey"].map(lambda s: s.encode("utf-8") if s else b"")
-            yield pd.DataFrame(
-                {
-                    "pk": pk,
-                    "token": pdf["token"],
-                    "bucket": pdf["bucket"],
-                    "values": values,
-                    "writetime": pdf["writetime"],
-                    "ttl": pdf["ttl"],
-                }
-            )
+            out = {"pk": pdf["_pk"], "token": pdf["token"], "bucket": pdf["bucket"]}
+            yield pd.DataFrame({**out, "values": values, "writetime": wt, "ttl": ttl})
 
-    return routed.mapInPandas(batches, _with_token_dtype(WIRE_SCHEMA, routed))
-
-
-THRIFT_WIRE_SCHEMA = StructType(
-    [
-        StructField("pk", BinaryType()),
-        StructField("token", LongType()),
-        StructField("bucket", IntegerType()),
-        StructField(
-            "mutations",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("name", BinaryType()),
-                        StructField("value", BinaryType()),
-                        StructField("ts", LongType()),
-                        StructField("ttl", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
+    keyed = routed.select(
+        *value_cols, "writetime", "ttl", "token", "bucket", _pk(routed, "_rowkey").alias("_pk")
+    )
+    return keyed.mapInPandas(batches, schema)
 
 
 def encode_thrift_wire(routed: DataFrame) -> DataFrame:
@@ -137,58 +115,7 @@ def encode_thrift_wire(routed: DataFrame) -> DataFrame:
     wire form: one Mutation per column with name/value as Cassandra bytes,
     ms timestamp and ttl carried through (CrunchBulkRecordWriter.java:163-209;
     expiring columns keep their ttl, the writer computes expiry from it)."""
-
-    has_pk = "_pk" in routed.columns
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_muts = []
-            for muts in pdf["mutations"]:
-                out_muts.append(
-                    [
-                        {
-                            "name": str(m["name"]).encode("utf-8"),
-                            "value": b"" if m["value"] is None else str(m["value"]).encode("utf-8"),
-                            "ts": int(m["ts"]),
-                            "ttl": int(m["ttl"]),
-                        }
-                        for m in muts
-                    ]
-                )
-            if has_pk:
-                pk = pdf["_pk"].map(lambda b: bytes(b) if b is not None else b"")
-            else:
-                pk = pdf["key"].map(lambda s: s.encode("utf-8") if s else b"")
-            yield pd.DataFrame(
-                {
-                    "pk": pk,
-                    "token": pdf["token"],
-                    "bucket": pdf["bucket"],
-                    "mutations": out_muts,
-                }
-            )
-
-    return routed.mapInPandas(batches, _with_token_dtype(THRIFT_WIRE_SCHEMA, routed))
-
-
-COUNTER_WIRE_SCHEMA = StructType(
-    [
-        StructField("pk", BinaryType()),
-        StructField("token", LongType()),
-        StructField("bucket", IntegerType()),
-        StructField(
-            "mutations",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("name", BinaryType()),
-                        StructField("delta", LongType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
+    return _thrift(routed, _cells(F.col("mutations")))
 
 
 def encode_thrift_counter_wire(routed: DataFrame) -> DataFrame:
@@ -196,63 +123,12 @@ def encode_thrift_counter_wire(routed: DataFrame) -> DataFrame:
 
     No timestamp/ttl — the counter write path assigns them
     (CrunchBulkRecordWriter.java:188-190, addCounterColumn(name, value))."""
-    has_pk = "_pk" in routed.columns
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_muts = [
-                [
-                    {"name": str(m["name"]).encode("utf-8"), "delta": int(m["delta"])}
-                    for m in muts
-                ]
-                for muts in pdf["mutations"]
-            ]
-            if has_pk:
-                pk = pdf["_pk"].map(lambda b: bytes(b) if b is not None else b"")
-            else:
-                pk = pdf["key"].map(lambda s: s.encode("utf-8") if s else b"")
-            yield pd.DataFrame(
-                {
-                    "pk": pk,
-                    "token": pdf["token"],
-                    "bucket": pdf["bucket"],
-                    "mutations": out_muts,
-                }
-            )
+    def cell(m: Column) -> Column:
+        delta = _non_null(m["delta"], F.concat(F.lit("NULL counter delta for column "), m["name"]))
+        return F.struct(_bytes(m["name"]).alias("name"), delta.alias("delta"))
 
-    return routed.mapInPandas(batches, _with_token_dtype(COUNTER_WIRE_SCHEMA, routed))
-
-
-SUPER_WIRE_SCHEMA = StructType(
-    [
-        StructField("pk", BinaryType()),
-        StructField("token", LongType()),
-        StructField("bucket", IntegerType()),
-        StructField(
-            "mutations",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("super", BinaryType()),
-                        StructField(
-                            "columns",
-                            ArrayType(
-                                StructType(
-                                    [
-                                        StructField("name", BinaryType()),
-                                        StructField("value", BinaryType()),
-                                        StructField("ts", LongType()),
-                                        StructField("ttl", IntegerType()),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
+    return _thrift(routed, F.transform("mutations", cell))
 
 
 def encode_thrift_super_wire(routed: DataFrame) -> DataFrame:
@@ -263,42 +139,9 @@ def encode_thrift_super_wire(routed: DataFrame) -> DataFrame:
     mutation.super_column.name) then adds each subcolumn as a regular or
     expiring column (CrunchBulkRecordWriter.java:174-186).
     """
-    has_pk = "_pk" in routed.columns
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_muts = []
-            for muts in pdf["mutations"]:
-                out_muts.append(
-                    [
-                        {
-                            "super": str(m["super"]).encode("utf-8"),
-                            "columns": [
-                                {
-                                    "name": str(c["name"]).encode("utf-8"),
-                                    "value": b""
-                                    if c["value"] is None
-                                    else str(c["value"]).encode("utf-8"),
-                                    "ts": int(c["ts"]),
-                                    "ttl": int(c["ttl"]),
-                                }
-                                for c in m["columns"]
-                            ],
-                        }
-                        for m in muts
-                    ]
-                )
-            if has_pk:
-                pk = pdf["_pk"].map(lambda b: bytes(b) if b is not None else b"")
-            else:
-                pk = pdf["key"].map(lambda s: s.encode("utf-8") if s else b"")
-            yield pd.DataFrame(
-                {
-                    "pk": pk,
-                    "token": pdf["token"],
-                    "bucket": pdf["bucket"],
-                    "mutations": out_muts,
-                }
-            )
+    def cell(m: Column) -> Column:
+        name = _non_null(m["super"], F.lit("NULL super column name")).cast("binary")
+        return F.struct(name.alias("super"), _cells(m["columns"]).alias("columns"))
 
-    return routed.mapInPandas(batches, _with_token_dtype(SUPER_WIRE_SCHEMA, routed))
+    return _thrift(routed, F.transform("mutations", cell))

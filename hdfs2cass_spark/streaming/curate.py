@@ -507,14 +507,20 @@ def stream_curate(
 
 
 def read_curated(spark: SparkSession, sink_path: str) -> DataFrame:
-    """Read everything stream_curate wrote under ``sink_path``."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(sink_path)
+    """Read everything stream_curate wrote under ``sink_path``: the newest
+    complete keeper plus the batch dirs it has not folded (``read_index``)."""
+    from .index import read_index
+
+    return read_index(spark, sink_path)
 
 
 def read_packed(spark: SparkSession, packed_path: str) -> DataFrame:
     """Read the packed sequences stream_curate wrote under ``packed_path``
-    (requires the query to have run with ``packed_path`` set)."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(packed_path)
+    (requires the query to have run with ``packed_path`` set), through
+    ``read_index`` like :func:`read_curated`."""
+    from .index import read_index
+
+    return read_index(spark, packed_path)
 
 
 _STAGE_COUNT_COLS = ["n_input", "n_quality", "n_exact", "n_nd", "n_kept"]

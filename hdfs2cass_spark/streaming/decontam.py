@@ -109,6 +109,8 @@ def stream_decontamination(
 
 
 def read_scored(spark: SparkSession, sink_path: str) -> DataFrame:
-    """Read everything stream_decontamination wrote under ``sink_path``
-    (recursive lookup over the batch-NNNNNNNNN subdirectories)."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(sink_path)
+    """Read everything stream_decontamination wrote under ``sink_path`` (its
+    batch-NNNNNNNNN subdirectories, through ``read_index``)."""
+    from .index import read_index
+
+    return read_index(spark, sink_path)

@@ -379,5 +379,8 @@ def stream_near_dup(
 
 
 def read_decisions(spark: SparkSession, sink_path: str) -> DataFrame:
-    """Read everything stream_near_dup wrote under ``sink_path``."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(sink_path)
+    """Read everything stream_near_dup wrote under ``sink_path``: the newest
+    complete keeper plus the batch dirs it has not folded (``read_index``)."""
+    from .index import read_index
+
+    return read_index(spark, sink_path)

@@ -267,3 +267,40 @@ def test_stale_batches_below_keeper_never_refold_or_reread(spark, tmp_path):
     assert keepers == [3] and batches == []
     got = {r["k"]: r["c"] for r in read_index(spark, p).collect()}
     assert got == {0: 30, 1: 30, 2: 30}
+
+
+def test_stream_sink_readers_return_each_row_once(spark, tmp_path):
+    """The decisions/curated/packed/scored sink readers go through
+    read_index: a compacted sink caught with a batch dir its complete keeper
+    already folded (compact's write-then-delete window) AND a torn newer
+    keeper (crash mid-write, sources intact) still yields every row exactly
+    once. A recursive read of the sink directory returns both copies."""
+    from hdfs2cass_spark.streaming.curate import read_curated, read_funnel, read_packed
+    from hdfs2cass_spark.streaming.decontam import read_scored
+    from hdfs2cass_spark.streaming.neardup import read_decisions
+
+    def dec(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("doc_id"),
+            F.lit(True).alias("quality_pass"),
+            F.lit(False).alias("exact_dup"),
+            F.lit(False).alias("near_dup"),
+            F.lit(True).alias("kept"),
+        )
+
+    p = str(tmp_path / "sink")
+    append(dec(0, 10), p, 0)
+    append(dec(10, 20), p, 1)
+    compact(spark, p, 2)  # complete keeper-2
+    append(dec(10, 20), p, 1)  # folded into keeper-2, not yet deleted
+    append(dec(20, 30), p, 2)
+    append(dec(30, 40), p, 3)
+    torn = f"{p}/keeper-{4:09d}"
+    dec(20, 25).write.mode("overwrite").parquet(torn)
+    os.remove(f"{torn}/_SUCCESS")
+
+    for read in (read_decisions, read_curated, read_packed, read_scored):
+        ids = sorted(r["doc_id"] for r in read(spark, p).select("doc_id").collect())
+        assert ids == list(range(40)), read.__name__
+    funnel = {r["stage"]: r["n_docs"] for r in read_funnel(spark, p).collect()}
+    assert funnel["input"] == 40 and funnel["decontam"] == 40

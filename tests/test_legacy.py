@@ -71,6 +71,37 @@ def test_roundtrip_format_parse(spark):
     )
 
 
+def test_read_legacy_text_from_files(spark, tmp_path):
+    """S2: legacy lines written as text files under two paths, read back by
+    read_legacy_text and parsed strictly, equal the same lines parsed from
+    an in-memory frame (all three versions, non-ASCII included)."""
+    from hdfs2cass_spark.sources.readers import read_legacy_text
+
+    df = spark.createDataFrame(
+        [
+            Row(k="a", c="col", ts=123, ttl=5, v="val"),
+            Row(k="ü", c="c2", ts=7, ttl=0, v="naïve"),
+        ]
+    )
+    lines = [
+        r["line"]
+        for fmt in ({}, {"timestamp": "ts"}, {"timestamp": "ts", "ttl": "ttl"})
+        for r in format_legacy_lines(df, key="k", colname="c", value="v", **fmt).collect()
+    ]
+    paths = [str(tmp_path / "a.txt"), str(tmp_path / "b.txt")]
+    for path, chunk in zip(paths, (lines[:3], lines[3:])):
+        with open(path, "w", encoding="utf-8") as f:
+            f.write("\n".join(chunk) + "\n")
+
+    def parsed(frame):
+        out = parse_legacy_lines(frame, mode="strict", now_ms=NOW_MS)
+        return sorted(tuple(r) for r in out.collect())
+
+    got = parsed(read_legacy_text(spark, paths))
+    assert len(got) == 6
+    assert got == parsed(_lines_df(spark, lines))
+
+
 def _python_reference_parse(line, now_ms):
     """Pure-Python spec of the legacy format (LegacyInputFormat.java:26-38,
     57-101): returns the parsed tuple or None if malformed."""
