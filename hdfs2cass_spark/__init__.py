@@ -11,7 +11,8 @@ Layout:
     session       SparkSession factory (AQE on, UTC, Arrow on)
     sources       table loaders for the fixture schema + legacy text format
     functions     cassandra token specs, serialization matrix, text/vector exprs
-    jvm           the cassandra tokens as Java UDFs, compiled and registered on first use
+    jvm           the cassandra tokens and the image codecs as Java UDFs, compiled and
+                  registered on first use
     operators     reshape (P1/P2/P6), legacy parse (P3-P5), token partitioning
                   (K1, G1-G3), dedup, similarity, multimodal
     sinks         simulated bulk sink (sorted parquet by token bucket), connector stub

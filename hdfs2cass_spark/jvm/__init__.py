@@ -1,15 +1,18 @@
-"""JVM-side Cassandra token functions (``Tokens.java``), built and registered
-on first use.
+"""JVM-side functions, built and registered on first use: the Cassandra
+token functions (``Tokens.java``) and the image codecs (``Media.java``).
 
 The bulk-load map stage needs only two functions Spark lacks: Cassandra's
 Murmur3 token (vanilla murmur3 masks tail bytes, Cassandra sign-extends them)
 and the RandomPartitioner MD5 token with its reducer bucket. Both are Java
 ``UDF1``/``UDF2`` classes, so the stage stays inside whole-stage codegen and a
-bulk load starts no Python worker.
+bulk load starts no Python worker. The image functions decode, resize, split
+into frames and encode JPEG, PNG, GIF and netpbm payloads on the JDK's
+``javax.imageio``, so image queries start no Python worker either.
 
-The source ships with the package. On first use it is compiled with ``javac``
-against pyspark's jars into a jar cached in a per-user directory under the
-temp dir (``hdfs2cass_spark-<uid>``, mode 0700), keyed by the source's sha.
+The sources ship with the package. On first use they are compiled with
+``javac`` against pyspark's jars into one jar cached in a per-user directory
+under the temp dir (``hdfs2cass_spark-<uid>``, mode 0700), keyed by the sha
+of every ``*.java`` source, so an edit to any of them builds a new jar.
 A cached jar is loaded only if it and that directory belong to the current
 user and are not group- or other-writable, so a jar that another user planted
 at a guessable path is never loaded: it is rebuilt instead. The jar is written
@@ -32,10 +35,37 @@ import zipfile
 from importlib import resources
 
 from pyspark.sql import SparkSession
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 MURMUR3_TOKEN = "h2c_m3tok"
 MD5_TOKEN_BUCKET = "h2c_md5tok"
+MEDIA_DECODE = "h2c_media_decode"
+MEDIA_RESIZE = "h2c_media_resize"
+MEDIA_FRAMES = "h2c_media_frames"
+JPEG_ENCODE = "h2c_jpeg_encode"
+GIF_ENCODE = "h2c_gif_encode"
+
+# the sample statistics are over every channel of the first (composited) frame
+DECODED = StructType(
+    [
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("n_frames", IntegerType()),
+        StructField("mean", DoubleType()),
+        StructField("min", IntegerType()),
+        StructField("max", IntegerType()),
+        StructField("row_sums", ArrayType(LongType())),
+    ]
+)
 
 _FUNCTIONS = {
     MURMUR3_TOKEN: ("hdfs2cass_spark.jvm.Tokens$Murmur3", LongType()),
@@ -43,6 +73,11 @@ _FUNCTIONS = {
         "hdfs2cass_spark.jvm.Tokens$Md5Bucket",
         StructType([StructField("token", StringType()), StructField("bucket", IntegerType())]),
     ),
+    MEDIA_DECODE: ("hdfs2cass_spark.jvm.Media$Decode", DECODED),
+    MEDIA_RESIZE: ("hdfs2cass_spark.jvm.Media$Resize", BinaryType()),
+    MEDIA_FRAMES: ("hdfs2cass_spark.jvm.Media$Frames", ArrayType(BinaryType())),
+    JPEG_ENCODE: ("hdfs2cass_spark.jvm.Media$JpegEncode", BinaryType()),
+    GIF_ENCODE: ("hdfs2cass_spark.jvm.Media$GifEncode", BinaryType()),
 }
 
 
@@ -53,7 +88,7 @@ def _javac() -> str:
     found = shutil.which("javac")
     if found is None:
         raise RuntimeError(
-            "hdfs2cass_spark needs a JDK to build its Cassandra token functions: "
+            "hdfs2cass_spark needs a JDK to build its Cassandra token and image functions: "
             "no javac under JAVA_HOME or on PATH; install a JDK (17+) and set JAVA_HOME"
         )
     return found
@@ -69,10 +104,25 @@ def _private(path: str, is_kind) -> bool:
     return is_kind(st.st_mode) and st.st_uid == os.getuid() and st.st_mode & 0o422 == 0o400
 
 
+def _sources() -> dict[str, bytes]:
+    """Every ``*.java`` source of the package, by file name, in name order."""
+    files = sorted(resources.files(__name__).iterdir(), key=lambda f: f.name)
+    return {f.name: f.read_bytes() for f in files if f.name.endswith(".java")}
+
+
+def _jar_name(sources: dict[str, bytes]) -> str:
+    sha = hashlib.sha256()
+    for file_name, source in sources.items():
+        sha.update(f"{file_name}\0{len(source)}\0".encode())
+        sha.update(source)
+    return f"jvm-{sha.hexdigest()[:16]}.jar"
+
+
 def jar_path() -> str:
-    """The token jar, compiled on the first call for this source."""
-    source = resources.files(__name__).joinpath("Tokens.java").read_bytes()
-    name = f"tokens-{hashlib.sha256(source).hexdigest()[:16]}.jar"
+    """The jar of the package's Java functions, compiled on the first call for
+    these sources."""
+    sources = _sources()
+    name = _jar_name(sources)
     cache = os.path.join(tempfile.gettempdir(), f"hdfs2cass_spark-{os.getuid()}")
     if _private(cache, stat.S_ISDIR) and _private(os.path.join(cache, name), stat.S_ISREG):
         return os.path.join(cache, name)
@@ -80,19 +130,21 @@ def jar_path() -> str:
 
     javac = _javac()
     with tempfile.TemporaryDirectory(prefix="hdfs2cass_spark-javac-") as work:
-        src = os.path.join(work, "Tokens.java")
-        with open(src, "wb") as f:
-            f.write(source)
+        srcs = []
+        for file_name, source in sources.items():
+            srcs.append(os.path.join(work, file_name))
+            with open(srcs[-1], "wb") as f:
+                f.write(source)
         classes = os.path.join(work, "classes")
         # the jars pyspark launches its JVM with, so the build matches the runtime
         cp = os.path.join(_find_spark_home(), "jars", "*")
         done = subprocess.run(
-            [javac, "--release", "17", "-nowarn", "-cp", cp, "-d", classes, src],
+            [javac, "--release", "17", "-nowarn", "-cp", cp, "-d", classes, *srcs],
             capture_output=True,
             text=True,
         )
         if done.returncode != 0:
-            raise RuntimeError(f"javac failed to build {src}:\n{done.stderr}")
+            raise RuntimeError(f"javac failed to build {', '.join(sources)}:\n{done.stderr}")
         if not _private(cache, stat.S_ISDIR):
             try:
                 os.mkdir(cache, 0o700)
@@ -118,9 +170,10 @@ def jar_path() -> str:
 
 
 def ensure_registered(spark: SparkSession) -> None:
-    """Make the token functions callable by name in ``spark``. The jar lands in
-    the SparkContext, so a second ``ADD JAR`` of it (a new session of the same
-    application, or racing callers) is a no-op that Spark logs as a warning."""
+    """Make the token and image functions callable by name in ``spark``. The
+    jar lands in the SparkContext, so a second ``ADD JAR`` of it (a new session
+    of the same application, or racing callers) is a no-op that Spark logs as
+    a warning."""
     if spark.catalog.functionExists(MURMUR3_TOKEN):
         return
     spark.sql(f"ADD JAR '{jar_path()}'")

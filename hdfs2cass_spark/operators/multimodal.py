@@ -1,22 +1,22 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Pattern for image/audio/video at 100 TB: the payload is a `binary` column
-(or a pointer into object storage), metadata travels in a typed struct, and
-decode/feature-extraction runs as Arrow-batched `mapInPandas` so the Python
-decoder sees whole record batches, never row-at-a-time.
+(or a pointer into object storage) and metadata travels in typed columns.
 
 Decode branches:
   - `decode_stub=True` (default) produces deterministic fake features derived
-    from the payload bytes — shape-true plumbing, testable end-to-end with no
-    codec at all.
-  - `decode_stub=False` REALLY decodes: PIL when importable (PNG/JPEG/
-    anything PIL opens), else a built-in netpbm decoder (binary PGM `P5` /
-    PPM `P6` — header-parsed dimensions, raw samples; the format ffmpeg's
-    image2pipe emits), so the real branch works even in codec-less
-    environments for netpbm payloads. Payloads neither PIL nor netpbm can
-    decode raise loudly — silent garbage features would poison a training
-    set. General video containers still need ffmpeg and raise
-    NotImplementedError; concatenated-netpbm streams demux natively.
+    from the payload bytes in an Arrow-batched `mapInPandas` — shape-true
+    plumbing, testable end-to-end with no codec at all.
+  - `decode_stub=False` REALLY decodes, with the JDK image functions of
+    jvm/Media.java (``javax.imageio`` for JPEG, PNG and GIF, plus binary
+    netpbm `P5`/`P6`, the format ffmpeg's image2pipe emits), so an image
+    plan is Catalyst projections with no Python worker. Formats are told
+    apart by magic bytes. A payload none of them decodes, or a damaged one,
+    fails the query and names the cause — silent garbage features would
+    poison a training set. Concatenated-netpbm streams and multi-frame GIFs
+    demux natively; general video containers are not supported.
+
+Audio decodes in Python (operators/wavcodec.py) inside `mapInPandas`.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..jvm import MEDIA_DECODE, MEDIA_FRAMES, MEDIA_RESIZE, ensure_registered
 
 MEDIA_SCHEMA = StructType(
     [
@@ -58,18 +60,16 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _shippable_codec():
-    """The real-decode helpers, bound for closure capture: registering the
-    spark-free mmcodec module for pickle-by-value means executors without the
-    package on PYTHONPATH still run the decode (the murmur3-UDF pattern).
-    jpegcodec and gifcodec ship too — mmcodec dispatches into them lazily on
-    FFD8/GIF8 payloads, and a by-reference import would ImportError on
-    workers."""
-    from ..functions.shippable import pickle_by_value
-    from . import gifcodec, jpegcodec, mmcodec
+def hex_byte(v: Column) -> Column:
+    """An integer 0-255 as two hex digits, for building payloads with ``unhex``."""
+    return F.lpad(F.hex(v), 2, "0")
 
-    pickle_by_value(mmcodec, jpegcodec, gifcodec)
-    return mmcodec
+
+def netpbm_gray(width: Column, height: Column, raster_hex: Column) -> Column:
+    """A binary P5 (8-bit gray) image; ``raster_hex`` is its samples in row
+    order, two hex digits each."""
+    header = F.format_string("P5\n%d %d\n255\n", width, height)
+    return F.concat(F.encode(header, "US-ASCII"), F.unhex(raster_hex))
 
 
 def attach_media(df: DataFrame, id_col: str, payload_col: str, media_type: str) -> DataFrame:
@@ -83,44 +83,46 @@ def attach_media(df: DataFrame, id_col: str, payload_col: str, media_type: str) 
 
 
 def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches).
+    """Decode + feature-extract: width, height, frame count and the mean
+    sample value of the first frame, over every channel.
 
     Stub features are pure functions of the payload bytes (deterministic,
-    engine-independent): fake width/height from the byte length, fake frame
-    count, mean byte value as "intensity".
+    engine-independent), computed via mapInPandas: fake width/height from
+    the byte length, fake frame count, mean byte value as "intensity".
     """
-    decode_image = None if decode_stub else _shippable_codec().decode_image
+    if not decode_stub:
+        ensure_registered(media.sparkSession)
+        dec = F.col("dec")
+        return media.select(
+            "media_id",
+            "media_type",
+            F.octet_length("payload").cast("long").alias("byte_len"),
+            F.call_function(MEDIA_DECODE, "payload").alias("dec"),
+        ).select(
+            "media_id",
+            "media_type",
+            "byte_len",
+            dec.width.alias("width"),
+            dec.height.alias("height"),
+            dec.n_frames.alias("n_frames"),
+            dec.mean.alias("mean_intensity"),
+        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = pdf["payload"]
             byte_len = payloads.map(len).astype("int64")
-            if decode_stub:
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "media_type": pdf["media_type"],
-                        "byte_len": byte_len,
-                        "width": (byte_len % 640 + 1).astype("int32"),
-                        "height": (byte_len % 480 + 1).astype("int32"),
-                        "n_frames": (byte_len // 256 + 1).astype("int32"),
-                        "mean_intensity": payloads.map(
-                            lambda b: float(sum(b)) / len(b) if len(b) else 0.0
-                        ),
-                    }
-                )
-                continue
-            decoded = [decode_image(bytes(b)) for b in payloads]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "media_type": pdf["media_type"],
                     "byte_len": byte_len,
-                    "width": pd.Series([d[0] for d in decoded], dtype="int32"),
-                    "height": pd.Series([d[1] for d in decoded], dtype="int32"),
-                    # still images: one frame (stream demux is sample_frames' job)
-                    "n_frames": pd.Series([1] * len(decoded), dtype="int32"),
-                    "mean_intensity": pd.Series([d[2] for d in decoded], dtype="float64"),
+                    "width": (byte_len % 640 + 1).astype("int32"),
+                    "height": (byte_len % 480 + 1).astype("int32"),
+                    "n_frames": (byte_len // 256 + 1).astype("int32"),
+                    "mean_intensity": payloads.map(
+                        lambda b: float(sum(b)) / len(b) if len(b) else 0.0
+                    ),
                 }
             )
 
@@ -144,21 +146,28 @@ def resize_media(
 ) -> DataFrame:
     """Resize transform: binary in -> binary out, metadata updated.
 
-    The 100 TB shape: payload-to-payload transforms stay inside one
-    mapInPandas (no decode on the driver, no row-at-a-time Python); the
-    output schema carries the new dimensions so downstream operators never
-    re-decode to learn them. Stub "resize" deterministically truncates or
-    tiles the payload to width*height bytes where the real
-    decode->resample->encode goes.
+    The 100 TB shape: payload-to-payload transforms run executor-side (no
+    decode on the driver); the output schema carries the new dimensions so
+    downstream operators never re-decode to learn them. The real resize is
+    nearest-neighbour on the first frame, in the payload's own format. Stub
+    "resize" (a mapInPandas) deterministically truncates or tiles the
+    payload to width*height bytes where the real decode->resample->encode
+    goes.
     """
-
-    if decode_stub:
-        resize_fn = None
-    else:
-        _codec = _shippable_codec()
-
-        def resize_fn(b: bytes, _resize=_codec.resize_image) -> bytes:
-            return _resize(b, width, height)
+    if not decode_stub:
+        ensure_registered(media.sparkSession)
+        return media.select(
+            "media_id",
+            "media_type",
+            F.call_function(MEDIA_RESIZE, "payload", F.lit(width), F.lit(height)).alias("payload"),
+        ).select(
+            "media_id",
+            "media_type",
+            "payload",
+            F.octet_length("payload").cast("long").alias("byte_len"),
+            F.lit(width).alias("width"),
+            F.lit(height).alias("height"),
+        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         target = width * height
@@ -170,7 +179,7 @@ def resize_media(
                 reps = -(-target // len(b))  # ceil-tile then cut
                 return (bytes(b) * reps)[:target]
 
-            out = pdf["payload"].map(stub_resize if decode_stub else resize_fn)
+            out = pdf["payload"].map(stub_resize)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -204,29 +213,35 @@ def sample_frames(
     """Frame sampling: ONE video row -> MANY frame rows (every Nth frame).
 
     The Spark-side shape that matters at 100 TB: the 1->N amplification
-    happens INSIDE mapInPandas (the Arrow batch grows, no driver involvement,
-    no explode of a pre-materialized frame array — frames never exist as one
-    giant row). Stub "frames" are fixed-size payload slices where the real
-    container demuxer goes.
+    happens executor-side with no driver involvement. The real branch
+    demuxes a concatenated-netpbm stream or a multi-frame GIF (each
+    composited frame re-encoded as PNG) into an array and posexplodes it; a
+    still image is its own one frame. Stub "frames" are fixed-size payload
+    slices cut inside mapInPandas, where the real container demuxer goes.
     """
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
-
-    demux = None if decode_stub else _shippable_codec().demux_frames
+    if not decode_stub:
+        ensure_registered(media.sparkSession)
+        frames = media.select(
+            "media_id", F.posexplode(F.call_function(MEDIA_FRAMES, "payload"))
+        )
+        return frames.where(F.col("pos") % every_n == 0).select(
+            "media_id",
+            F.col("pos").cast("int").alias("frame_idx"),
+            F.col("col").alias("frame"),
+            F.octet_length("col").cast("long").alias("frame_len"),
+        )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ids, idxs, frames = [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 b = bytes(payload) if payload is not None else b""
-                if decode_stub:
-                    n_frames = -(-len(b) // frame_bytes) if b else 0
-                    all_frames = [
-                        b[i * frame_bytes : (i + 1) * frame_bytes]
-                        for i in range(n_frames)
-                    ]
-                else:
-                    all_frames = demux(b) if b else []
+                n_frames = -(-len(b) // frame_bytes) if b else 0
+                all_frames = [
+                    b[i * frame_bytes : (i + 1) * frame_bytes] for i in range(n_frames)
+                ]
                 for i in range(0, len(all_frames), every_n):
                     ids.append(mid)
                     idxs.append(i)
@@ -266,8 +281,8 @@ _AUDIO_FEATURE_KEYS = [
 
 
 def _shippable_wavcodec():
-    """wavcodec bound for closure capture, pickle-by-value (the mmcodec
-    pattern: executors without the package on PYTHONPATH still decode)."""
+    """wavcodec bound for closure capture, pickle-by-value: executors without
+    the package on PYTHONPATH still decode."""
     from ..functions.shippable import pickle_by_value
     from . import wavcodec
 

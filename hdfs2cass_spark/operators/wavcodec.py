@@ -1,7 +1,7 @@
 """Built-in RIFF/WAVE PCM codec — spark-free, pickle-by-value shippable.
 
-The second real (non-stub) multimodal codec family after netpbm/PNG
-(operators/mmcodec.py): audio as an opaque ``binary`` column whose decode
+The audio codec of the multimodal operators (images decode on the JDK,
+jvm/Media.java): audio as an opaque ``binary`` column whose decode
 runs inside Arrow-batched ``mapInPandas`` on the executors. Written against
 the public RIFF/WAVE format (the Microsoft/IBM multimedia file spec, as
 also implemented by the stdlib ``wave`` module — which handles only a
@@ -17,7 +17,7 @@ subset of what real crawls contain, hence the explicit chunk walker here):
     spec (decoded to signed by centering at 128), wider ints are signed
 
 Anything else (ADPCM, mu-law, ...) raises ``NotImplementedError`` loudly —
-silent garbage samples would poison a training set (the mmcodec contract).
+silent garbage samples would poison a training set.
 
 The reference (spotify/hdfs2cass) has no media surface at all; this module
 belongs to the LLM-training-pipeline extension the project brief demands

@@ -1,119 +1,80 @@
 """GIF-modality query: lossless LZW round-trip features, driver-hash-checked.
 
-The jpeg_image_features pattern applied to the built-in GIF codec
-(operators/gifcodec.py), with a stronger contract because GIF is LOSSLESS:
-per document a REAL GIF89a payload is synthesized executor-side — a
+The jpeg_image_features pattern applied to GIF, with a stronger contract
+because GIF is LOSSLESS: per document a REAL GIF89a payload is synthesized
+executor-side by the JDK's codec (``h2c_gif_encode``, jvm/Media.java) — a
 row-gradient indexed frame over a non-power-of-two palette (the physical
 color table is padded to 2^bits; the logical size is what the index math
 uses), interlaced for odd doc_ids, with a declared transparent index over a
-background-colored canvas — decoded back through the full
-LZW + de-interlace + palette + transparency compositing pipeline, and
-reduced to an exact integer feature. The row weighting makes the feature
-sensitive to WHERE each row lands, so an interlace-reordering bug cannot
-cancel out:
+background-colored canvas — decoded back through the full LZW +
+de-interlace + palette + transparency compositing pipeline
+(``h2c_media_decode``), and reduced to an exact integer feature. The row
+weighting makes the feature sensitive to WHERE each row lands, so an
+interlace-reordering bug cannot cancel out:
 
     palette[k] = ((5k+11)%256, (7k+3)%256, (11k+29)%256)
     idx(y, x)  = (y + d) % C          (constant per row)
-    weighted_rgb_sum = sum_y (y+1) * W * rgbsum(row y)
+    weighted_rgb_sum = sum_y (y+1) * row_sum(y),  row_sum(y) = W * rgbsum(row y)
 
 where a row whose index equals the transparent index shows the background
 color (index (d+1)%C) instead. The DuckDB oracle computes the sum from the
 closed form (it never sees bytes); hash-equality proves the whole
-encode -> LZW -> decode -> composite loop value-exact — no excluded cases,
-unlike the lossy JPEG row.
+encode -> LZW -> decode -> composite loop value-exact — no excluded cases.
 
-100 TB shape: synth + encode + decode + features run in ONE mapInPandas;
-the only shuffle is the presentation sort.
+100 TB shape: the indices, the palette, the encode, the decode and the
+feature are one projection of Java functions and Catalyst arithmetic; the
+only shuffle is the presentation sort.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import functions as F
 
+from ..jvm import GIF_ENCODE, MEDIA_DECODE, ensure_registered
+from ..operators.multimodal import hex_byte, netpbm_gray
 from ..sources.readers import load_table
 from .present import present_sorted
 from .registry import declare
 
-_GIF_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_colors", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("weighted_rgb_sum", LongType()),
-    ]
-)
-
 
 def synth_decode_gif(d: DataFrame) -> DataFrame:
-    """(doc_id) -> one real GIF encode+decode round trip per row, all inside
-    one mapInPandas (payloads never leave the Arrow batch)."""
-    from ..functions.shippable import pickle_by_value
-    from ..operators import gifcodec
-
-    pickle_by_value(gifcodec)
-    encode, parse = gifcodec.encode_gif, gifcodec.parse_gif
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            w_out, h_out, c_out, nf_out, ws_out = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d_ = int(doc_id)
-                w = 5 + d_ % 20
-                h = 5 + d_ % 15
-                c = 4 + d_ % 13
-                bg = (d_ + 1) % c
-                trans = (d_ + 2) % c
-                k = np.arange(c, dtype=np.int64)
-                pal = np.stack(
-                    [(5 * k + 11) % 256, (7 * k + 3) % 256, (11 * k + 29) % 256],
-                    axis=1,
-                ).astype(np.uint8)
-                idx = np.broadcast_to(
-                    ((np.arange(h) + d_) % c)[:, None].astype(np.uint8), (h, w)
-                )
-                payload = encode(
-                    [np.ascontiguousarray(idx)],
-                    pal,
-                    interlace=bool(d_ % 2),
-                    frame_meta=[{"transparent": trans}],
-                    background=bg,
-                )
-                gw, gh, frames = parse(payload)
-                assert (gw, gh) == (w, h)
-                weights = np.arange(1, gh + 1, dtype=np.int64)
-                wsum = int(
-                    (frames[0].astype(np.int64).sum(axis=(1, 2)) * weights).sum()
-                )
-                w_out.append(gw)
-                h_out.append(gh)
-                c_out.append(c)
-                nf_out.append(len(frames))
-                ws_out.append(wsum)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(w_out, dtype="int32"),
-                    "height": pd.Series(h_out, dtype="int32"),
-                    "n_colors": pd.Series(c_out, dtype="int32"),
-                    "n_frames": pd.Series(nf_out, dtype="int32"),
-                    "weighted_rgb_sum": pd.Series(ws_out, dtype="int64"),
-                }
-            )
-
-    return d.select("doc_id").mapInPandas(batches, _GIF_SCHEMA)
+    """(doc_id) -> one real GIF encode+decode round trip per row, in one
+    projection (payloads never leave the JVM)."""
+    ensure_registered(d.sparkSession)
+    doc = F.col("doc_id")
+    width, height, colours = 5 + doc % 20, 5 + doc % 15, 4 + doc % 13
+    rows = F.transform(
+        F.sequence(F.lit(0), height - 1), lambda y: F.repeat(hex_byte((y + doc) % colours), width)
+    )
+    palette = F.transform(
+        F.sequence(F.lit(0), colours - 1),
+        lambda k: F.concat(
+            hex_byte((5 * k + 11) % 256), hex_byte((7 * k + 3) % 256), hex_byte((11 * k + 29) % 256)
+        ),
+    )
+    gif = F.call_function(
+        GIF_ENCODE,
+        netpbm_gray(width, height, F.concat_ws("", rows)),
+        F.unhex(F.concat_ws("", palette)),
+        doc % 2 == 1,
+        ((doc + 2) % colours).cast("int"),
+        ((doc + 1) % colours).cast("int"),
+    )
+    dec = F.col("dec")
+    weighted = F.transform(dec.row_sums, lambda s, y: s * (y + 1))
+    return d.select(
+        doc, colours.cast("int").alias("n_colors"), F.call_function(MEDIA_DECODE, gif).alias("dec")
+    ).select(
+        "doc_id",
+        dec.width.alias("width"),
+        dec.height.alias("height"),
+        "n_colors",
+        dec.n_frames.alias("n_frames"),
+        F.aggregate(weighted, F.lit(0).cast("long"), lambda acc, v: acc + v).alias(
+            "weighted_rgb_sum"
+        ),
+    )
 
 
 @declare(
@@ -150,11 +111,11 @@ def synth_decode_gif(d: DataFrame) -> DataFrame:
     doc="Multimodal image: per document a real GIF89a payload (row-gradient "
     "frame over a non-power-of-two palette, interlaced for odd doc_ids, "
     "with a transparent index over a background canvas) is encoded and "
-    "decoded back through the built-in LZW + compositing codec; the oracle "
+    "decoded back through the JDK's LZW codec plus compositing; the oracle "
     "predicts the row-weighted RGB sum by closed-form palette arithmetic, "
     "never touching bytes — hash-equality proves the lossless codec loop "
     "value-exact with no excluded cases. Synth+encode+decode is one "
-    "mapInPandas; the only shuffle is the presentation sort.",
+    "projection of Java functions; the only shuffle is the presentation sort.",
 )
 def gif_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -1,11 +1,11 @@
 """Image-modality query: baseline-JPEG round-trip features, driver-hash-checked.
 
-The wav_audio_features pattern applied to the built-in JPEG codec
-(operators/jpegcodec.py): per document a REAL baseline JPEG of a solid gray
-level is encoded executor-side, decoded back through the full
-huffman + dequant + IDCT pipeline, and reduced to exact features. A flat
-8x8 block quantizes to a DC-only spectrum, so the decoded level is exactly
-predictable by integer math from the spec:
+The wav_audio_features pattern applied to JPEG: per document a REAL baseline
+JPEG of a solid gray level is encoded executor-side by the JDK's codec
+(``h2c_jpeg_encode``, jvm/Media.java), decoded back through the full
+huffman + dequant + IDCT pipeline (``h2c_media_decode``), and reduced to
+exact features. A flat 8x8 block quantizes to a DC-only spectrum, so the
+decoded level is exactly predictable by integer math from the spec:
 
     q00  = scaled Annex-K luminance DC quantizer at quality 85  (= 5)
     qv   = floor(8*(g - 128)/q00 + 0.5)          (encoder quantization)
@@ -15,46 +15,35 @@ The DuckDB oracle computes g' from that closed form (it never sees bytes);
 the Spark side runs the actual codec. Hash-equality proves the whole
 encode -> entropy-code -> decode -> reconstruct loop value-exact, including
 header parsing (width/height survive) and edge padding (dims are NOT
-block-aligned). Gray levels are drawn from SAFE_GRAYS — the levels whose
-reconstruction does not land exactly on a floor(x + 0.5) boundary
-(qv*q00 % 8 == 4), where the float IDCT's ~1e-13 error could legitimately
-round either way; excluding them keeps the comparison bit-deterministic
-without weakening coverage (250 of 256 levels remain).
+block-aligned), for every gray level g = doc_id % 256. No level lands on
+the decoder's rounding boundary (5*qv % 8 == 4): 5*qv is within 2 of
+8*(g - 128), so 5*qv % 8 is one of 6, 7, 0, 1 and 2.
 
-100 TB shape: synth + encode + decode + features run in ONE mapInPandas;
-the only shuffle is the presentation sort.
+100 TB shape: the gray image, the encode, the decode and the features are
+one projection of Java functions and Catalyst arithmetic; the only shuffle
+is the presentation sort.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
-from ..operators.jpegcodec import QUANT_LUMA, scaled_quant
+from ..jvm import JPEG_ENCODE, MEDIA_DECODE, ensure_registered
+from ..operators.multimodal import hex_byte, netpbm_gray
 from ..sources.readers import load_table
 from .present import present_sorted
 from .registry import declare
 
 _QUALITY = 85
-_Q00 = scaled_quant(QUANT_LUMA, _QUALITY)[0]  # = 5 at quality 85
+# the Annex-K luminance DC quantizer 16 at IJG quality 85 (scale 200 - 2*85 = 30%)
+_Q00 = 5
 
 
 def _qv(g: int) -> int:
     return math.floor(8 * (g - 128) / _Q00 + 0.5)
-
-
-# gray levels whose DC reconstruction is safely off the rounding boundary
-SAFE_GRAYS = [g for g in range(256) if (_qv(g) * _Q00) % 8 != 4]
 
 
 def predicted_gray(g: int) -> int:
@@ -63,61 +52,26 @@ def predicted_gray(g: int) -> int:
     return max(0, min(255, math.floor(_qv(g) * _Q00 / 8 + 128.5)))
 
 
-_JPEG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("gray_in", IntegerType()),
-        StructField("gray_decoded", IntegerType()),
-    ]
-)
-
-
 def synth_decode_jpeg(d: DataFrame) -> DataFrame:
-    """(doc_id) -> one real JPEG encode+decode round trip per row, all
-    inside one mapInPandas (payloads never leave the Arrow batch)."""
-    from ..functions.shippable import pickle_by_value
-    from ..operators import jpegcodec
-
-    pickle_by_value(jpegcodec)
-    encode, decode = jpegcodec.encode_jpeg, jpegcodec.decode_jpeg
-    safe = list(SAFE_GRAYS)
-    quality = _QUALITY
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            w_out, h_out, g_in, g_dec = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d_ = int(doc_id)
-                w = 5 + d_ % 20
-                h = 5 + d_ % 15
-                g = safe[d_ % len(safe)]
-                img = np.full((h, w), g, np.uint8)
-                px = decode(encode(img, quality=quality))
-                assert px.shape == (h, w)
-                u = np.unique(px)
-                assert len(u) == 1, "flat image must decode flat"
-                w_out.append(w)
-                h_out.append(h)
-                g_in.append(g)
-                g_dec.append(int(u[0]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(w_out, dtype="int32"),
-                    "height": pd.Series(h_out, dtype="int32"),
-                    "gray_in": pd.Series(g_in, dtype="int32"),
-                    "gray_decoded": pd.Series(g_dec, dtype="int32"),
-                }
-            )
-
-    return d.select("doc_id").mapInPandas(batches, _JPEG_SCHEMA)
-
-
-_SAFE_SQL = "[" + ", ".join(str(g) for g in SAFE_GRAYS) + "]"
+    """(doc_id) -> one real JPEG encode+decode round trip per row, in one
+    projection (payloads never leave the JVM)."""
+    ensure_registered(d.sparkSession)
+    doc = F.col("doc_id")
+    width, height, gray = 5 + doc % 20, 5 + doc % 15, (doc % 256).cast("int")
+    image = netpbm_gray(width, height, F.repeat(hex_byte(gray), width * height))
+    jpeg = F.call_function(JPEG_ENCODE, image, F.lit(_QUALITY), F.lit(False))
+    dec = F.col("dec")
+    return d.select(
+        doc, gray.alias("gray_in"), F.call_function(MEDIA_DECODE, jpeg).alias("dec")
+    ).select(
+        "doc_id",
+        dec.width.alias("width"),
+        dec.height.alias("height"),
+        "gray_in",
+        F.when(dec["min"] == dec["max"], dec["min"])
+        .otherwise(F.raise_error(F.lit("a flat JPEG must decode flat")))
+        .alias("gray_decoded"),
+    )
 
 
 @declare(
@@ -127,7 +81,7 @@ _SAFE_SQL = "[" + ", ".join(str(g) for g in SAFE_GRAYS) + "]"
       SELECT doc_id,
              5 + doc_id % 20 AS width,
              5 + doc_id % 15 AS height,
-             ({_SAFE_SQL})[CAST(doc_id % {len(SAFE_GRAYS)} AS INTEGER) + 1] AS g
+             doc_id % 256 AS g
       FROM documents),
     q AS (
       SELECT doc_id, width, height, g,
@@ -143,12 +97,12 @@ _SAFE_SQL = "[" + ", ".join(str(g) for g in SAFE_GRAYS) + "]"
     """,
     doc="Multimodal image: per document a real baseline JPEG of a solid "
     "gray level (dims deliberately not block-aligned — edge padding in "
-    "play) is encoded and decoded back through the built-in huffman + "
-    "batch-IDCT codec; the oracle predicts the decoded level by the "
-    "closed-form DC quantization arithmetic, never touching bytes — "
-    "hash-equality proves the lossy codec loop value-exact where the spec "
-    "makes it deterministic. Synth+encode+decode is one mapInPandas; the "
-    "only shuffle is the presentation sort.",
+    "play) is encoded and decoded back through the JDK's huffman + IDCT "
+    "codec; the oracle predicts the decoded level by the closed-form DC "
+    "quantization arithmetic, never touching bytes — hash-equality proves "
+    "the lossy codec loop value-exact where the spec makes it "
+    "deterministic. Synth+encode+decode is one projection of Java "
+    "functions; the only shuffle is the presentation sort.",
 )
 def jpeg_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

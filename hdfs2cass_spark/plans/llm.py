@@ -548,8 +548,8 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents ORDER BY doc_id
     """,
     doc="Multimodal column plumbing: opaque binary payload (here: encoded "
-    "text standing in for image/audio bytes) + typed metadata. Real decode "
-    "is a mapInPandas stub in operators/multimodal.py.",
+    "text standing in for image/audio bytes) + typed metadata. Decode lives "
+    "in operators/multimodal.py.",
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")

@@ -368,10 +368,12 @@ SECTIONS = [
     (
         "jpeg_image_features (baseline-JPEG round-trip — round 12)",
         "jpeg_image_features",
-        "Same shape as the WAV row: ONE `MapInPandas` holds the whole synth -> "
-        "encode -> huffman-decode -> IDCT -> feature loop (pixels never exist as "
-        "rows), on a scan pruned to doc_id; the only exchange is the presentation "
-        "sort. The oracle predicts the decoded level by closed-form DC-quantization "
+        "No Python node: the flat gray image (`unhex(repeat(...))` behind a P5 "
+        "header), the JDK's JPEG encode (`h2c_jpeg_encode`) and decode "
+        "(`h2c_media_decode`) are one `Project` of Java functions over a scan "
+        "pruned to doc_id, pixels never exist as rows, and the flatness check is "
+        "a Catalyst `raise_error`; the only exchange is the presentation sort. "
+        "The oracle predicts the decoded level by closed-form DC-quantization "
         "integer math.",
     ),
     (
@@ -388,11 +390,14 @@ SECTIONS = [
     (
         "gif_image_features (GIF/LZW lossless round-trip — round 13)",
         "gif_image_features",
-        "Same shape as the WAV/JPEG rows: ONE `MapInPandas` holds the whole "
-        "synth -> LZW encode -> decode -> de-interlace -> composite -> feature "
-        "loop (pixels never exist as rows), on a scan pruned to doc_id; the "
-        "only exchange is the presentation sort. Being lossless, the oracle "
-        "predicts the row-weighted RGB sum exactly with no excluded cases.",
+        "Same shape as the JPEG row: the index raster and palette are built by "
+        "Catalyst `transform`/`repeat`/`unhex`, then the JDK's LZW encode "
+        "(`h2c_gif_encode`) and the decode + de-interlace + composite "
+        "(`h2c_media_decode`) run in one `Project` of Java functions, and the "
+        "row weighting is an `aggregate` over the decoded row sums; no Python "
+        "node, and the only exchange is the presentation sort. Being lossless, "
+        "the oracle predicts the row-weighted RGB sum exactly with no excluded "
+        "cases.",
     ),
     (
         "semantic_dedup (SemDeDup, k-means cells + collapse — round 11)",

@@ -22,3 +22,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jvm_call(spark):
+    """``jvm_call(name, *args)`` runs one of the package's Java functions in
+    one Spark job and returns its result per row, in order: each list
+    argument is a binary column (one row per element), any other argument
+    a literal."""
+    from pyspark.sql import functions as F
+
+    from hdfs2cass_spark import jvm
+
+    jvm.ensure_registered(spark)
+
+    def call(name, *args):
+        columns = [a for a in args if isinstance(a, list)]
+        schema = ", ".join(["i int"] + [f"c{j} binary" for j in range(len(columns))])
+        rows = [(i, *(c[i] for c in columns)) for i in range(len(columns[0]))]
+        names = iter(range(len(columns)))
+        exprs = [F.col(f"c{next(names)}") if isinstance(a, list) else F.lit(a) for a in args]
+        df = spark.createDataFrame(rows, schema)
+        out = df.select("i", F.call_function(name, *exprs).alias("out")).collect()
+        return [r["out"] for r in sorted(out, key=lambda r: r["i"])]
+
+    return call

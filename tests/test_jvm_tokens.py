@@ -1,5 +1,5 @@
 """The JVM token functions (hdfs2cass_spark/jvm/Tokens.java) against the
-scalar specs, and how they are built and registered.
+scalar specs, and how the package's Java functions are built and registered.
 
 The differential tests run one Spark job each over a seeded batch of 20k+
 keys: every length 0-70 (so every murmur3 block/tail shape), tail bytes
@@ -151,6 +151,18 @@ def test_missing_javac_names_the_jdk(spark, tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == []
 
 
+def test_jar_name_covers_every_java_source():
+    """The jar is keyed on every Java source, so an edit to either one builds
+    a new jar instead of loading a stale cached one."""
+    sources = jvm._sources()
+    assert sorted(sources) == ["Media.java", "Tokens.java"]
+    name = jvm._jar_name(sources)
+    for edited in sources:
+        changed = {**sources, edited: sources[edited] + b"\n// edited\n"}
+        assert jvm._jar_name(changed) != name
+    assert os.path.basename(jvm.jar_path()) == name
+
+
 def _assert_token_jar(jar):
     with zipfile.ZipFile(jar) as z:
         assert z.testzip() is None
@@ -158,6 +170,7 @@ def _assert_token_jar(jar):
             "hdfs2cass_spark/jvm/Tokens.class",
             "hdfs2cass_spark/jvm/Tokens$Murmur3.class",
             "hdfs2cass_spark/jvm/Tokens$Md5Bucket.class",
+            "hdfs2cass_spark/jvm/Media$Decode.class",
         } <= set(z.namelist())
 
 

@@ -1,8 +1,14 @@
-"""Multimodal plumbing tests: binary payload + mapInPandas feature extraction."""
+"""Multimodal plumbing tests: binary payload + feature extraction, the stub
+mapInPandas branch and the real branch on the JDK image functions
+(hdfs2cass_spark/jvm/Media.java), with netpbm and PNG payloads written in
+imagebytes.py."""
 
+import numpy as np
 import pytest
+from imagebytes import decoded, parse_netpbm, png, png_chunk, png_from_raw, stats
 from pyspark.sql import functions as F
 
+from hdfs2cass_spark.jvm import MEDIA_DECODE
 from hdfs2cass_spark.operators.multimodal import attach_media, extract_features
 
 
@@ -33,9 +39,9 @@ def test_extract_features_deterministic(media):
 
 
 def test_extract_features_real_decode_raises(media):
-    """Text payloads are neither netpbm nor PIL-decodable: the real branch
-    must fail loudly, never emit garbage features."""
-    with pytest.raises(Exception):  # NotImplementedError surfaces as PythonException
+    """Text payloads are no image format: the real branch must fail loudly,
+    never emit garbage features."""
+    with pytest.raises(Exception, match="unknown image format"):
         extract_features(media, decode_stub=False).collect()
 
 
@@ -78,19 +84,18 @@ def test_real_decode_netpbm_features(netpbm_media):
 
 
 def test_real_resize_netpbm_nearest_neighbor(netpbm_media):
-    from hdfs2cass_spark.operators.mmcodec import parse_netpbm
     from hdfs2cass_spark.operators.multimodal import resize_media
 
     rows = {
         r["media_id"]: bytes(r["payload"])
         for r in resize_media(netpbm_media, width=2, height=1, decode_stub=False).collect()
     }
-    w, h, ch, px, _ = parse_netpbm(rows[0])
+    w, h, ch, px = parse_netpbm(rows[0])
     assert (w, h, ch) == (2, 1, 3)
     # nearest-neighbor from the 4x2 source: rows map to y=0, cols to x=0,2
     assert px[0, 0].tolist() == [0, 0, 100]
     assert px[0, 1].tolist() == [20, 0, 100]
-    w, h, ch, px, _ = parse_netpbm(rows[1])
+    w, h, ch, px = parse_netpbm(rows[1])
     assert (w, h, ch) == (2, 1, 1)
     assert px[0, 0].tolist() == [0] and px[0, 1].tolist() == [50]
 
@@ -100,7 +105,6 @@ def test_real_frames_concatenated_netpbm_stream(spark):
     every_n selection over REAL frame boundaries, each frame re-parseable."""
     import pandas as pd
 
-    from hdfs2cass_spark.operators.mmcodec import parse_netpbm
     from hdfs2cass_spark.operators.multimodal import sample_frames
 
     frames_src = [_ppm(2, 1, lambda y, x, i=i: (i, i, i)) for i in range(5)]
@@ -117,31 +121,10 @@ def test_real_frames_concatenated_netpbm_stream(spark):
     assert [r["frame_idx"] for r in rows] == [0, 2, 4]
     for r in rows:
         assert bytes(r["frame"]) == frames_src[r["frame_idx"]]
-        w, h, ch, px, _ = parse_netpbm(bytes(r["frame"]))
+        assert r["frame_len"] == len(frames_src[r["frame_idx"]])
+        w, h, ch, px = parse_netpbm(bytes(r["frame"]))
         assert (w, h, ch) == (2, 1, 3)
         assert px[0, 0].tolist() == [r["frame_idx"]] * 3
-
-
-def test_real_decode_via_pil_when_available(spark):
-    """PIL branch (skips where pillow isn't installed): a PNG payload decodes
-    through PIL with the same feature semantics as the netpbm branch."""
-    image_mod = pytest.importorskip("PIL.Image")
-    import io
-
-    import numpy as np
-    import pandas as pd
-
-    arr = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
-    buf = io.BytesIO()
-    image_mod.fromarray(arr, "RGB").save(buf, format="PNG")
-    pdf = pd.DataFrame({"media_id": [0], "blob": [buf.getvalue()]})
-    media = attach_media(
-        spark.createDataFrame(pdf), id_col="media_id", payload_col="blob",
-        media_type="image/png",
-    )
-    row = extract_features(media, decode_stub=False).collect()[0]
-    assert (row["width"], row["height"]) == (2, 2)
-    assert abs(row["mean_intensity"] - arr.mean()) < 1e-9
 
 
 def test_resize_media_shape_and_determinism(media):
@@ -219,171 +202,124 @@ def _forward_filter(px, filters):
     return b"".join(out)
 
 
-def _png_from_raw(w, h, ctype, raw, plte=None, depth=8):
-    import struct
-    import zlib
-
-    def chunk(t, d):
-        return struct.pack(">I", len(d)) + t + d + struct.pack(
-            ">I", zlib.crc32(t + d) & 0xFFFFFFFF
-        )
-
-    out = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, 0)
-    )
-    if plte is not None:
-        out += chunk(b"PLTE", plte)
-    return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-
-def test_png_16bit_roundtrip_and_filters():
-    """Depth-16 PNG (r13): encode/parse round trip per color type, plus the
-    independent forward-filter check running over the BYTE view with
-    bpp = 2*ch (the spec's 'left' reaches bpp bytes back)."""
-    import numpy as np
-
-    from hdfs2cass_spark.operators.mmcodec import encode_png, parse_png
-
+def test_png_16bit_roundtrip_and_filters(jvm_call):
+    """Depth-16 PNG per colour type, filter 0 and the five filters run by
+    the independent forward filter over the BYTE view with bpp = 2*ch (the
+    spec's 'left' reaches bpp bytes back): exact width, height and samples'
+    statistics."""
     rng = np.random.RandomState(16)
+    payloads, want = [], []
     for ch, ctype in ((1, 0), (3, 2), (2, 4), (4, 6)):
         px = rng.randint(0, 1 << 16, size=(5, 4, ch)).astype(np.uint16)
         px[0, 0] = 0
         px[0, 1] = 0xFFFF  # force the extremes through the byte split
-        w, h, got_ch, got = parse_png(encode_png(px))
-        assert (w, h, got_ch) == (4, 5, ch)
-        assert got.dtype == np.uint16 and np.array_equal(got, px)
-        # independent forward filtering over bytes, all five filters
         bview = np.ascontiguousarray(px.astype(">u2")).view(np.uint8).reshape(5, 4, 2 * ch)
         raw = _forward_filter(bview, filters=[0, 1, 2, 3, 4])
-        w, h, got_ch, got = parse_png(_png_from_raw(4, 5, ctype, raw, depth=16))
-        assert got.dtype == np.uint16 and np.array_equal(got, px)
+        payloads += [png(px), png_from_raw(4, 5, ctype, raw, depth=16)]
+        want += [stats(px)] * 2
+    assert [decoded(r) for r in jvm_call(MEDIA_DECODE, payloads)] == want
 
 
-def test_png_adam7_roundtrip():
-    """Adam7 interlace (r13): round trip at sizes exercising empty and
-    partial passes, both depths; the interlaced payload must genuinely
-    differ from the plain one (raster reordered, not a no-op flag)."""
-    import numpy as np
-
-    from hdfs2cass_spark.operators.mmcodec import encode_png, parse_png
-
+def test_png_adam7_roundtrip(jvm_call):
+    """Adam7 interlace at sizes with empty and partial passes, both depths;
+    the interlaced payload genuinely differs from the plain one."""
     rng = np.random.RandomState(77)
-    for wh in ((1, 1), (3, 2), (7, 7), (8, 8), (13, 9), (16, 5)):
-        w0, h0 = wh
+    payloads, want = [], []
+    for w0, h0 in ((1, 1), (3, 2), (7, 7), (8, 8), (13, 9), (16, 5)):
         for dt, hi in ((np.uint8, 256), (np.uint16, 1 << 16)):
             px = rng.randint(0, hi, size=(h0, w0, 3)).astype(dt)
-            enc = encode_png(px, interlace=True)
-            w, h, ch, got = parse_png(enc)
-            assert (w, h, ch) == (w0, h0, 3)
-            assert np.array_equal(got, px), (wh, dt)
+            payloads.append(png(px, interlace=True))
+            want.append(stats(px))
+    assert [decoded(r) for r in jvm_call(MEDIA_DECODE, payloads)] == want
     px = rng.randint(0, 256, size=(8, 8, 1), dtype=np.uint8)
-    assert encode_png(px, interlace=True) != encode_png(px)
+    assert png(px, interlace=True) != png(px)
 
 
-def test_png_16bit_palette_rejected():
-    import numpy as np
-    import pytest as pt
-
-    from hdfs2cass_spark.operators.mmcodec import parse_png
-
+def test_png_16bit_palette_rejected(jvm_call):
     raw = b"\x00" + b"\x00" * 2  # one row, junk
-    with pt.raises(ValueError, match="16-bit palette"):
-        parse_png(_png_from_raw(1, 1, 3, raw, plte=b"\x00" * 6, depth=16))
+    with pytest.raises(Exception, match="Bad color type/bit depth combination"):
+        jvm_call(MEDIA_DECODE, [png_from_raw(1, 1, 3, raw, plte=b"\x00" * 6, depth=16)])
 
 
-def test_png_builtin_all_filters_and_color_types():
-    """parse_png reconstructs exactly what an independent forward-filter
-    produced, for every scanline filter and every 8-bit color type — the
-    spec-equivalence pin for the dependency-free decoder."""
-    import numpy as np
-
-    from hdfs2cass_spark.operators.mmcodec import encode_png, parse_png
-
+def test_png_builtin_all_filters_and_color_types(jvm_call):
+    """Every scanline filter and every 8-bit colour type, written by an
+    independent forward filter; palette images expand through PLTE to RGB."""
     rng = np.random.RandomState(7)
+    payloads, want = [], []
     for ch, ctype in ((1, 0), (3, 2), (2, 4), (4, 6)):
         px = rng.randint(0, 256, size=(5, 4, ch), dtype=np.uint8)
         raw = _forward_filter(px, filters=[0, 1, 2, 3, 4])
-        w, h, got_ch, got = parse_png(_png_from_raw(4, 5, ctype, raw))
-        assert (w, h, got_ch) == (4, 5, ch)
-        assert np.array_equal(got, px), f"ctype {ctype}"
-        # and the round trip through our own encoder
-        w2, h2, ch2, back = parse_png(encode_png(px))
-        assert np.array_equal(back, px)
-
-    # palette color type expands through PLTE to RGB
+        payloads += [png_from_raw(4, 5, ctype, raw), png(px)]
+        want += [stats(px)] * 2
     idx = rng.randint(0, 4, size=(3, 3, 1), dtype=np.uint8)
     plte = bytes(rng.randint(0, 256, size=12, dtype=np.uint8))
-    raw = _forward_filter(idx, filters=[0, 1, 4])
-    w, h, ch, got = parse_png(_png_from_raw(3, 3, 3, raw, plte=plte))
-    assert (w, h, ch) == (3, 3, 3)
-    exp = np.frombuffer(plte, np.uint8).reshape(-1, 3)[idx[:, :, 0]]
-    assert np.array_equal(got, exp)
+    payloads.append(png_from_raw(3, 3, 3, _forward_filter(idx, filters=[0, 1, 4]), plte=plte))
+    want.append(stats(np.frombuffer(plte, np.uint8).reshape(-1, 3)[idx[:, :, 0]]))
+    assert [decoded(r) for r in jvm_call(MEDIA_DECODE, payloads)] == want
 
 
-def test_png_builtin_rejects_corruption():
-    import struct
-
-    import numpy as np
-    import pytest as pt
-
-    from hdfs2cass_spark.operators.mmcodec import encode_png, parse_png
-
-    px = np.zeros((2, 2, 3), np.uint8)
-    good = encode_png(px)
-    bad = bytearray(good)
-    bad[20] ^= 0xFF  # flip a byte inside IHDR -> CRC mismatch
-    with pt.raises(ValueError, match="CRC"):
-        parse_png(bytes(bad))
-    with pt.raises(ValueError, match="signature"):
-        parse_png(b"JUNK" + good)
-    # sub-byte depth is out of the built-in envelope and says so (16-bit
-    # and Adam7 joined the envelope in r13)
-    ihdr4 = struct.pack(">IIBBBBB", 2, 2, 4, 0, 0, 0, 0)
-    hdr = good[:8] + struct.pack(">I", 13) + b"IHDR" + ihdr4
+def test_png_builtin_rejects_corruption(jvm_call):
+    """ImageIO ignores chunk CRCs, so the decode checks them; a bad
+    signature is no image format; a short zlib stream fails ImageIO."""
     import zlib
 
-    hdr += struct.pack(">I", zlib.crc32(b"IHDR" + ihdr4) & 0xFFFFFFFF)
-    with pt.raises(ValueError, match="unsupported PNG"):
-        parse_png(hdr + good[33:])
+    good = png(np.zeros((2, 2, 3), np.uint8))
+    bad = bytearray(good)
+    bad[20] ^= 0xFF  # flip a byte inside IHDR -> CRC mismatch
+    with pytest.raises(Exception, match="PNG chunk IHDR CRC mismatch"):
+        jvm_call(MEDIA_DECODE, [bytes(bad)])
+    with pytest.raises(Exception, match="unknown image format"):
+        jvm_call(MEDIA_DECODE, [b"JUNK" + good])
+    raw = zlib.compress(b"\x00" + bytes(6) + b"\x00" + bytes(6))
+    short = good[:33] + png_chunk(b"IDAT", raw[: len(raw) // 2]) + png_chunk(b"IEND", b"")
+    with pytest.raises(Exception, match="Error reading PNG image data"):
+        jvm_call(MEDIA_DECODE, [short])
 
 
-def test_real_decode_png_builtin(spark):
-    """The real-decode branch over a REAL compressed format, un-skipped in
-    dependency-free environments: PNG payloads flow through attach_media ->
-    extract_features(decode_stub=False) with exact width/height/mean, and
-    resize_media round-trips PNG -> PNG."""
-    import numpy as np
+def test_real_decode_png_builtin(spark, jvm_call):
+    """The real-decode branch over a REAL compressed format: PNG payloads
+    flow through attach_media -> extract_features(decode_stub=False) with
+    exact width/height/mean, and resize_media round-trips PNG -> PNG."""
     import pandas as pd
 
-    from hdfs2cass_spark.operators.mmcodec import encode_png, parse_png
     from hdfs2cass_spark.operators.multimodal import resize_media
 
     arr = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    pdf = pd.DataFrame({"media_id": [0], "blob": [encode_png(arr)]})
+    pdf = pd.DataFrame({"media_id": [0], "blob": [png(arr)]})
     media = attach_media(
         spark.createDataFrame(pdf), id_col="media_id", payload_col="blob",
         media_type="image/png",
     )
     row = extract_features(media, decode_stub=False).collect()[0]
-    assert (row["width"], row["height"]) == (4, 4)
+    assert (row["width"], row["height"], row["n_frames"]) == (4, 4, 1)
     assert abs(row["mean_intensity"] - arr.mean()) < 1e-9
 
     rz = resize_media(media, width=2, height=2, decode_stub=False).collect()[0]
-    w, h, ch, px = parse_png(bytes(rz["payload"]))
-    assert (w, h, ch) == (2, 2, 3)
-    assert np.array_equal(px, arr[[0, 2]][:, [0, 2]])  # nearest-neighbor grid
+    assert bytes(rz["payload"])[:8] == b"\x89PNG\r\n\x1a\n"
+    assert rz["byte_len"] == len(rz["payload"]) and (rz["width"], rz["height"]) == (2, 2)
+    (dec,) = jvm_call(MEDIA_DECODE, [bytes(rz["payload"])])
+    assert decoded(dec) == stats(arr[[0, 2]][:, [0, 2]])  # nearest-neighbour grid
 
 
-def test_parse_png_truncated_chunk_raises_valueerror():
-    """A length-inflated chunk header must raise the designed ValueError
-    (decode_image catches it for the PIL fallback), not struct.error
-    (review round 11)."""
+def test_parse_png_truncated_chunk_raises_valueerror(jvm_call):
+    """A length-inflated chunk header fails by name, before ImageIO reads it."""
     import struct
 
-    import pytest
+    evil = b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 10_000) + b"IHDR" + b"\x00" * 4
+    with pytest.raises(Exception, match="truncated PNG: chunk IHDR overruns"):
+        jvm_call(MEDIA_DECODE, [evil])
 
-    from hdfs2cass_spark.operators.mmcodec import PNG_SIG, parse_png
 
-    evil = PNG_SIG + struct.pack(">I", 10_000) + b"IHDR" + b"\x00" * 4
-    with pytest.raises(ValueError, match="truncated PNG"):
-        parse_png(evil)
+def test_resize_and_frames_keep_the_format(jvm_call):
+    """A resized payload keeps its format; a still image is its own one
+    frame. (A GIF's frames are composited, so they come out as PNG.)"""
+    from hdfs2cass_spark.jvm import JPEG_ENCODE, MEDIA_FRAMES, MEDIA_RESIZE
+
+    img = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
+    pnm = b"P6\n4 4\n255\n" + img.tobytes()
+    (jpeg,) = jvm_call(JPEG_ENCODE, [pnm], 90, False)
+    still = [pnm, png(img), jpeg]
+    resized = jvm_call(MEDIA_RESIZE, still, 3, 2)
+    assert [r[:2] for r in resized] == [b"P6", b"\x89P", b"\xff\xd8"]
+    assert [(r["width"], r["height"]) for r in jvm_call(MEDIA_DECODE, resized)] == [(3, 2)] * 3
+    assert jvm_call(MEDIA_FRAMES, still) == [[p] for p in still]
