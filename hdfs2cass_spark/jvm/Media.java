@@ -68,7 +68,7 @@ public final class Media {
       Pixels p = frames(b).get(0).resized(width, height);
       return switch (format(b)) {
         case "netpbm" -> pnm(p);
-        case "JPEG" -> jpeg(p, 75, false);
+        case "JPEG" -> jpeg(p, 85, false); // the quality of the JPEG image query
         // ImageIO's GIF writer indexes up to 256 colours exactly
         default -> write(format(b), image(p), 0, false);
       };

@@ -165,10 +165,12 @@ def test_transparency_shows_background(encode, decode):
 def test_multiframe_disposal_and_local_palette(jvm_call):
     """Three frames: full base, an offset overlay with a transparent hole +
     local palette + disposal 2 (restore background), then a small frame whose
-    disposal 3 (restore previous) never affects earlier composites."""
+    disposal 3 (restore previous) never affects earlier composites. The base
+    colour changes with the column, so each composite's row sums pin where
+    the overlay, its hole and the restored rectangle sit horizontally."""
     gpal = palette(6)
     lpal = np.array([[9, 9, 9], [200, 100, 50], [1, 2, 3], [0, 0, 0]], np.uint8)
-    base = np.zeros((10, 12), np.uint8)
+    base = (np.arange(12) % 6)[None, :].repeat(10, 0).astype(np.uint8)
     over = np.full((4, 5), 1, np.uint8)
     over[1, 1] = 3
     tiny = np.full((2, 2), 2, np.uint8)
@@ -182,7 +184,7 @@ def test_multiframe_disposal_and_local_palette(jvm_call):
         screen=(12, 10),
         background=5,
     )
-    c0 = np.broadcast_to(gpal[0], (10, 12, 3)).copy()
+    c0 = gpal[base]
     c1 = c0.copy()
     region = c1[2:6, 3:8]
     mask = over != 3
@@ -245,14 +247,25 @@ def test_decode_image_gif_branch(encode, decode):
 
 
 def test_demux_frames_gif_to_png(jvm_call):
-    pal = palette(4)
-    b = gif([{"idx": np.full((5, 7), i, np.uint8)} for i in range(3)], pal)
+    """Each composited frame comes out as a PNG. Every base column has its
+    own colour, so the row sums pin each overlay's offset."""
+    pal = palette(8)
+    base = np.tile(np.arange(7, dtype=np.uint8), (5, 1))
+    top = np.full((2, 3), 7, np.uint8)
+    side = np.full((3, 2), 7, np.uint8)
+    b = gif(
+        [{"idx": base}, {"idx": top, "left": 4, "top": 1}, {"idx": side, "left": 1, "top": 2}],
+        pal,
+    )
+    c0 = pal[base]
+    c1 = c0.copy()
+    c1[1:3, 4:7] = pal[7]
+    c2 = c1.copy()
+    c2[2:5, 1:3] = pal[7]
     (pngs,) = jvm_call(MEDIA_FRAMES, [b])
     assert len(pngs) == 3 and all(p[:8] == b"\x89PNG\r\n\x1a\n" for p in pngs)
     rows = jvm_call(MEDIA_DECODE, list(pngs))
-    assert [decoded(r) for r in rows] == [
-        stats(np.broadcast_to(pal[i], (5, 7, 3))) for i in range(3)
-    ]
+    assert [decoded(r) for r in rows] == [stats(c) for c in (c0, c1, c2)]
 
 
 def test_resize_image_gif_stays_gif(encode, jvm_call):

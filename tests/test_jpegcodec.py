@@ -2,8 +2,10 @@
 h2c_jpeg_encode and h2c_media_decode, and the damaged payloads that must
 fail the query by name. A flat gray image decodes exactly to the closed-form
 prediction of plans/image.py; gradients and colour stay within the stated
-tolerances; progressive decodes identical to baseline. Engine exactness of
-the jpeg_image_features row is covered by test_catalog_oracle.py.
+tolerances; progressive decodes identical to baseline. JPEGs with restart
+markers or 4:4:4 colour, which h2c_jpeg_encode does not write, come from the
+JDK's writer driven directly. Engine exactness of the jpeg_image_features row
+is covered by test_catalog_oracle.py.
 """
 
 from __future__ import annotations
@@ -27,6 +29,47 @@ def encode(jvm_call):
 @pytest.fixture
 def decode(jvm_call):
     return lambda payloads: jvm_call(MEDIA_DECODE, list(payloads))
+
+
+_JPEG_TREE = "javax_imageio_jpeg_image_1.0"
+
+
+@pytest.fixture
+def jdk_jpeg(spark):
+    """[h, w, ch] uint8 -> a JPEG from the JDK's writer, its metadata edited
+    for what h2c_jpeg_encode does not offer: a restart interval (a DRI
+    marker, RSTn markers in the scan) or 4:4:4 colour (1x1 sampling)."""
+    jvm = spark._jvm
+    imageio = jvm.javax.imageio
+
+    def write(px, quality=85, restart_interval=0, subsample=True):
+        im = imageio.ImageIO.read(jvm.java.io.ByteArrayInputStream(png(px)))
+        writer = imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+        param = writer.getDefaultWriteParam()
+        param.setCompressionMode(2)  # ImageWriteParam.MODE_EXPLICIT
+        param.setCompressionQuality(quality / 100)
+        meta = writer.getDefaultImageMetadata(imageio.ImageTypeSpecifier(im), param)
+        tree = meta.getAsTree(_JPEG_TREE)
+        if not subsample:
+            specs = tree.getElementsByTagName("componentSpec")
+            for i in range(specs.getLength()):
+                specs.item(i).setAttribute("HsamplingFactor", "1")
+                specs.item(i).setAttribute("VsamplingFactor", "1")
+        if restart_interval:
+            dri = imageio.metadata.IIOMetadataNode("dri")
+            dri.setAttribute("interval", str(restart_interval))
+            markers = tree.getElementsByTagName("markerSequence").item(0)
+            markers.insertBefore(dri, markers.getFirstChild())
+        meta.setFromTree(_JPEG_TREE, tree)
+        out = jvm.java.io.ByteArrayOutputStream()
+        stream = imageio.stream.MemoryCacheImageOutputStream(out)
+        writer.setOutput(stream)
+        writer.write(None, imageio.IIOImage(im, None, meta), param)
+        stream.close()
+        writer.dispose()
+        return bytes(out.toByteArray())
+
+    return write
 
 
 def _gradient_gray(h=48, w=64):
@@ -82,15 +125,38 @@ def test_gray_gradient_high_fidelity(encode, decode):
     assert abs(row["mean"] - img.mean()) < 0.25
 
 
-def test_color_roundtrip_within_tolerance(encode, decode):
-    """Colour (YCbCr, chroma subsampled 4:2:0 by the JDK's writer): every
-    row's mean over its three channels within 2 levels, the image mean within
-    0.5."""
+def _luma_sampling(b: bytes) -> int:
+    """The H/V sampling byte of the first component of a baseline SOF."""
+    # SOF0: marker(2) len(2) prec(1) h(2) w(2) nc(1) cid(1) -> hv at +11
+    return b[b.find(b"\xff\xc0") + 11]
+
+
+def test_color_444_and_420_roundtrip(encode, decode, jdk_jpeg):
+    """Colour (YCbCr) at quality 90: h2c_jpeg_encode writes 4:2:0 chroma, the
+    JDK writer with 1x1 sampling 4:4:4. Both decode with every row's mean over
+    its three channels within 2 levels and the image mean within 0.5; 4:2:0 is
+    the smaller file on chroma-heavy content."""
     img = _gradient_rgb()
-    row = _roundtrip(encode, decode, img, quality=90)
-    assert (row["width"], row["height"]) == (56, 40)
-    assert _row_error(row, img) < 2.0
-    assert abs(row["mean"] - img.mean()) < 0.5
+    (b420,) = encode([img], quality=90)
+    b444 = jdk_jpeg(img, quality=90, subsample=False)
+    assert (_luma_sampling(b420), _luma_sampling(b444)) == (0x22, 0x11)
+    assert len(b420) < len(b444)
+    for row in decode([b420, b444]):
+        assert (row["width"], row["height"]) == (56, 40)
+        assert _row_error(row, img) < 2.0
+        assert abs(row["mean"] - img.mean()) < 0.5
+
+
+def test_restart_markers_resync(decode, jdk_jpeg):
+    """DRI + RSTn: the decoder must resync its predictors at every interval
+    and decode the same image as the marker-free encoding."""
+    img = _gradient_rgb(24, 40)
+    plain, rst = jdk_jpeg(img), jdk_jpeg(img, restart_interval=1)
+    assert b"\xff\xdd" not in plain and b"\xff\xdd" in rst
+    # 4:2:0 MCUs are 16x16: 2 rows of 3, so 5 RSTn markers between 6 intervals
+    assert sum(rst.count(bytes([0xFF, 0xD0 + k])) for k in range(8)) == 5
+    a, b = decode([plain, rst])
+    assert decoded(a) == decoded(b)
 
 
 def test_quality_scales_size_and_error(encode, decode):
