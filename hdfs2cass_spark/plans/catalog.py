@@ -25,7 +25,7 @@ from ..operators.joins import size_guarded_broadcast
 from ..operators.legacy import format_legacy_lines, parse_legacy_lines
 from ..operators.partitioning import with_bucket, with_token
 from ..operators.reshape import melt_to_mutations, reshape_cql
-from ..sources.readers import load_table, read_records
+from ..sources.readers import load_table, read_records, write_avro
 from .present import present_sorted
 from .registry import declare
 
@@ -1324,25 +1324,22 @@ def legacy_to_sinks_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_custkey
     """,
     doc="S1 front door, driver-hash-checked: the customer table is staged as "
-    "a REAL Avro container file (deflate codec, 256-row blocks) and read back "
-    "through read_records(fmt='avro'), i.e. Spark's own Avro file source, "
-    "which plans the file's splits and decodes on the JVM "
-    "(Hdfs2Cass.java:107-108,135-144 — Avro is the reference's primary "
-    "input). Hash-equality against SQL over the original parquet proves the "
-    "whole encode -> container -> scan -> decode loop value-exact. "
-    "Scale: the writer is the fixture-scale staging tool; the READ side is "
-    "the production path.",
+    "REAL Avro container files (deflate codec) by write_avro and read back "
+    "through read_records(fmt='avro'). Both go through Spark's own Avro file "
+    "source, which encodes on the executors, plans the files' splits and "
+    "decodes on the JVM (Hdfs2Cass.java:107-108,135-144 — Avro is the "
+    "reference's primary input). Hash-equality against SQL over the original "
+    "parquet proves the whole encode -> container -> scan -> decode loop "
+    "value-exact.",
 )
 def avro_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-
-    from ..sources.avro import write_avro
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
     # deterministic per-(process, thread, sf-PATH) staging path: repeated
-    # calls in one session overwrite the same file instead of leaking temp
+    # calls in one session overwrite the same directory instead of leaking temp
     # dirs, while two session threads (or two sf dirs sharing a basename)
     # can never race write_avro against the other's lazy Avro scan
     # (ADVICE r11) — the thread id and the full-path hash split them
@@ -1355,8 +1352,7 @@ def avro_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"h2c_avro_rt_{os.getpid()}_{threading.get_ident()}",
         f"{sf_key}_customer.avro",
     )
-    os.makedirs(os.path.dirname(stage), exist_ok=True)
-    write_avro(cust, stage, codec="deflate", block_records=256)
+    write_avro(cust, stage, codec="deflate")
     return present_sorted(read_records(spark, stage, fmt="avro"), "c_custkey")
 
 

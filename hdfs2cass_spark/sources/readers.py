@@ -1,10 +1,12 @@
-"""Fixture table loaders.
+"""Record sources and fixture table loaders.
 
 Mirrors the reference's source surface (S1/S2, SURVEY.md §2.1:
-/root/reference/src/main/java/com/spotify/hdfs2cass/Hdfs2Cass.java:107-108 reads a
-list of Avro paths; multiple --input paths are concatenated by the source). Here the
-fixtures are parquet; ``load_table`` accepts one dir or many (union-by-the-source,
-the reference's only union-like behavior).
+Hdfs2Cass.java:107-108 reads a list of Avro paths; multiple --input paths are
+concatenated by the source). ``read_records`` reads any Spark datasource, Avro
+through Spark's own Avro file source (``AVRO_FORMAT``); ``write_avro`` writes
+through the same class, one container file per partition. The fixtures are
+parquet; ``load_table`` accepts one dir or many (union-by-the-source, the
+reference's only union-like behavior).
 
 The ``events`` table carries INT64 TIMESTAMP(NANOS); with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` Spark surfaces it as LongType
@@ -85,8 +87,9 @@ def read_legacy_text(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 
 # Spark's own Avro file source (S1). spark-sql 4.1 ships this class but
 # registers no "avro" short name for it (that registration comes with the
-# external spark-avro package), so `read_records` names the class. The
-# reference reads Avro container files (Hdfs2Cass.java:107-108,135-144).
+# external spark-avro package), so `read_records` and `write_avro` name the
+# class. The reference reads Avro container files
+# (Hdfs2Cass.java:107-108,135-144).
 AVRO_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
@@ -110,3 +113,18 @@ def read_records(
         options = {"pathGlobFilter": "*.avro", **options}
     # pass the list, not *p: load()'s 2nd positional parameter is `format`
     return spark.read.format(fmt).options(**options).load(p)
+
+
+def write_avro(df: DataFrame, path: str, codec: str = "deflate", **options: str) -> None:
+    """Write ``df`` to the directory ``path`` (replacing it) as Avro container
+    files, one per partition, through ``AVRO_FORMAT`` on the executors.
+    ``codec`` is Spark's ``compression`` option (uncompressed, deflate,
+    snappy, ...); ``options`` pass through to the writer (e.g. ``avroSchema``
+    names the exact writer schema)."""
+    (
+        df.write.mode("overwrite")
+        .format(AVRO_FORMAT)
+        .option("compression", codec)
+        .options(**options)
+        .save(path)
+    )

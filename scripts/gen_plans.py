@@ -21,12 +21,15 @@ SECTIONS = [
     (
         "bulk_load (reference dataflow)",
         "__bulk_load__",
-        "One `ArrowEvalPython` (the token UDF — the only Python hop), ONE `Exchange` on the bucket id, "
-        "then the in-partition `Sort` that gives the sink its append-only order. The key is TYPED: "
-        "`_pk = unhex(lpad(hex(c_custkey)))` — the 8-byte big-endian Cassandra encoding of the bigint, "
-        "built JVM-side, tokenized as real ring bytes (`_rowkey` stays as a display column only). The "
-        "ring bucket is pure codegen'd int64 arithmetic (the split-division identity — round 4; the "
-        "earlier Decimal(38,0) form ran on the interpreted Decimal path).",
+        "No Python node: the Murmur3 token is the JVM function `h2c_m3tok` (`jvm.MURMUR3_TOKEN`, "
+        "jvm/Tokens.java), called in a `Project` that whole-stage codegen compiles with the scan "
+        "(the final plan shows it as `*(n) Project`; test_avro.py asserts that). ONE routed "
+        "`Exchange` sends each ring bucket to one of `min(reducers, cores)` partitions "
+        "(`route_keys`), then the in-partition `Sort` gives the sink its append-only order. The key "
+        "is TYPED: `_pk = unhex(lpad(hex(c_custkey)))` — the 8-byte big-endian Cassandra encoding of "
+        "the bigint, built JVM-side, tokenized as real ring bytes (`_rowkey` stays as a display "
+        "column only). The ring bucket is pure codegen'd int64 arithmetic (the split-division "
+        "identity; a Decimal(38,0) form would run on the interpreted Decimal path).",
     ),
     (
         "q1_pricing_summary",

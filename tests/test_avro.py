@@ -1,33 +1,29 @@
 """Avro reads through Spark's own file source (``read_records(fmt="avro")``):
 split planning against Spark's other file scans, the plan shape, exact
 temporals, the directory contract, and the loud failures (mixed schemas, a
-block whose record count does not match its payload)."""
+block whose record count does not match its payload). Spark's own Avro
+writer (``write_avro``) stages every file."""
 
 from __future__ import annotations
 
 import pytest
 
-from hdfs2cass_spark.sources import avrodec
-from hdfs2cass_spark.sources.readers import read_records
+from avrofiles import avro_file, stored_records
+
+from hdfs2cass_spark.sources.readers import read_records, write_avro
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _song_files(d, n_files: int, rows_per_file: int) -> int:
-    schema = {
-        "type": "record",
-        "name": "r",
-        "fields": [{"name": "k", "type": "long"}, {"name": "v", "type": "string"}],
-    }
-    d.mkdir()
-    k = 0
-    for i in range(n_files):
-        rows = [{"k": k + j, "v": f"v{k + j}"} for j in range(rows_per_file)]
-        avrodec.write_container(str(d / f"p{i:03d}.avro"), schema, rows, block_records=64)
-        k += rows_per_file
-    return k
+def _song_files(spark, d, n_files: int, rows_per_file: int) -> int:
+    """``n_files`` uncompressed (k long, v string) files under ``d``, written
+    by one job of ``n_files`` partitions."""
+    n = n_files * rows_per_file
+    df = spark.range(n, numPartitions=n_files).selectExpr("id AS k", "concat('v', id) AS v")
+    write_avro(df, str(d), codec="uncompressed")
+    return n
 
 
 def test_split_packing_follows_spark_file_scans(spark, tmp_path):
@@ -38,7 +34,7 @@ def test_split_packing_follows_spark_file_scans(spark, tmp_path):
     from pyspark.sql import functions as F
 
     d = tmp_path / "many"
-    n = _song_files(d, 40, 1000)
+    n = _song_files(spark, d, 40, 1000)
     keys = (
         "spark.sql.files.openCostInBytes",
         "spark.sql.files.maxPartitionBytes",
@@ -47,7 +43,7 @@ def test_split_packing_follows_spark_file_scans(spark, tmp_path):
     old = [spark.conf.get(k, None) for k in keys]
     counts = []
     try:
-        # the second set packs 40 ~7 KB files into 14 tasks, the first
+        # the second set packs 40 files of 7-10 KB into 14 tasks, the first
         # into 4
         for confs in (("4m", "128m", "4"), ("16k", "64k", "4")):
             for k, v in zip(keys, confs):
@@ -72,7 +68,9 @@ def test_split_packing_follows_spark_file_scans(spark, tmp_path):
 def test_top_level_temporals_cast_exactly(spark, tmp_path):
     """date / timestamp-millis / timestamp-micros top-level columns arrive
     as the exact instants, including pre-1970 values and ones past
-    the year 2262, where a nanosecond pandas hop overflows."""
+    the year 2262, where a nanosecond pandas hop overflows. The file stores
+    the same raw values, read without Spark, so a unit error shared by
+    Spark's writer and reader cannot cancel out."""
     schema = {
         "type": "record",
         "name": "r",
@@ -89,8 +87,14 @@ def test_top_level_temporals_cast_exactly(spark, tmp_path):
         {"k": 2, "d": 200000, "ms": 16725225600123, "us": 16725225600123456},
         {"k": 3, "d": 19000, "ms": 1700000000001, "us": 1700000000000001},
     ]
-    p = str(tmp_path / "t.avro")
-    avrodec.write_container(p, schema, rows, codec="deflate", block_records=3)
+    df = spark.createDataFrame(
+        [tuple(r.values()) for r in rows], "k bigint, d int, ms bigint, us bigint"
+    ).selectExpr(
+        "k", "date_from_unix_date(d) AS d", "timestamp_millis(ms) AS ms",
+        "timestamp_micros(us) AS us",
+    )
+    p = avro_file(df, tmp_path / "t.avro", schema)
+    assert stored_records(spark, p) == rows
     got = read_records(spark, p, fmt="avro").selectExpr(
         "k", "unix_date(d) AS d", "unix_millis(ms) AS ms", "unix_micros(us) AS us"
     )
@@ -106,8 +110,8 @@ def test_mixed_writer_schemas_fail_naming_the_file(spark, tmp_path):
     d.mkdir()
     a = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     b = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "string"}]}
-    avrodec.write_container(str(d / "a.avro"), a, [{"k": i} for i in range(10)])
-    avrodec.write_container(str(d / "b.avro"), b, [{"k": f"s{i}"} for i in range(10)])
+    avro_file(spark.range(10).selectExpr("id AS k"), d / "a.avro", a)
+    avro_file(spark.range(10).selectExpr("concat('s', id) AS k"), d / "b.avro", b)
     with pytest.raises(Exception, match=r"FAILED_READ_FILE.*b\.avro"):
         read_records(spark, str(d), fmt="avro").collect()
 
@@ -117,10 +121,11 @@ def test_block_count_mismatch_fails(spark, tmp_path):
     the read instead of dropping the rest of the block."""
     schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     p = tmp_path / "short.avro"
-    avrodec.write_container(str(p), schema, [{"k": 1}, {"k": 2}], block_records=2)
-    with open(p, "rb") as f:
-        start = avrodec.read_header(f)["data_start"]
+    avro_file(spark.range(1, 3).selectExpr("id AS k"), p, schema)
     raw = bytearray(p.read_bytes())
+    # every block ends with the file's 16-byte sync marker, which also
+    # closes the header: the first block starts right after its first copy
+    start = raw.find(raw[-16:]) + 16
     assert raw[start] == 4  # zigzag varint of the record count 2
     raw[start] = 2  # claim one record
     p.write_bytes(bytes(raw))
@@ -135,10 +140,10 @@ def test_directory_reads_only_avro_files(spark, tmp_path):
     schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     d = tmp_path / "dir"
     d.mkdir()
-    avrodec.write_container(str(d / "a.avro"), schema, [{"k": i} for i in range(10)])
+    avro_file(spark.range(10).selectExpr("id AS k"), d / "a.avro", schema)
     (d / "README.txt").write_text("not avro\n")
     assert read_records(spark, str(d), fmt="avro").count() == 10
-    avrodec.write_container(str(d / "b.dat"), schema, [{"k": i} for i in range(5)])
+    avro_file(spark.range(5).selectExpr("id AS k"), d / "b.dat", schema)
     assert read_records(spark, str(d), fmt="avro", pathGlobFilter="*.dat").count() == 5
     empty = tmp_path / "noavro"
     empty.mkdir()
@@ -158,7 +163,7 @@ def test_bulk_load_over_avro_has_no_python_node(spark, tmp_path):
     from hdfs2cass_spark.sinks.pipeline import bulk_load
 
     d = tmp_path / "songs"
-    n = _song_files(d, 2, 500)
+    n = _song_files(spark, d, 2, 500)
     src = read_records(spark, str(d), fmt="avro")
     random_target = TargetInfo("ks", "t", src.columns, ["k"], partitioner=RANDOM)
     for fn, target in ((MURMUR3_TOKEN, None), (MD5_TOKEN_BUCKET, random_target)):

@@ -45,19 +45,19 @@ def test_cli_end_to_end(spark, sf_dir, tmp_path):
 
 def test_avro_roundtrip(spark, tmp_path, sf_dir):
     """S1: round-trip a fixture through the Avro container format and
-    bulk-load it — identical dataflow to parquet. The built-in writer
-    stages the file and Spark's own Avro source reads it back, values
-    checked against the parquet original."""
+    bulk-load it — identical dataflow to parquet. Spark's Avro source
+    writes the files, one per partition of a 4-partition input (no driver
+    collect), and reads them back, values checked against the parquet
+    original."""
     from hdfs2cass_spark.sinks.pipeline import bulk_load
-    from hdfs2cass_spark.sources.avro import write_avro
-    from hdfs2cass_spark.sources.readers import read_records
+    from hdfs2cass_spark.sources.readers import read_records, write_avro
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     avro_dir = tmp_path / "customer_avro"
-    avro_dir.mkdir()
-    write_avro(cust, str(avro_dir / "part-0.avro"), codec="deflate")
+    write_avro(cust.repartition(4), str(avro_dir), codec="deflate")
+    assert len(glob.glob(f"{avro_dir}/*.avro")) == 4
     back = read_records(spark, str(avro_dir), fmt="avro")
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, cust.collect()))
+    assert back.exceptAll(cust).isEmpty() and cust.exceptAll(back).isEmpty()
     routed = bulk_load(back, "cql://h/ks/t?reducers=4", rowkey="c_custkey", now_ms=42)
     assert routed.count() == cust.count()
 
@@ -66,7 +66,8 @@ def test_avro_builtin_reader_splits_and_codecs(spark, tmp_path):
     """Spark's Avro source at scale: multi-file input, splits smaller than
     one file (forced via maxPartitionBytes) cover every row exactly once,
     and every codec the writer produces decodes."""
-    from hdfs2cass_spark.sources import avrodec
+    from avrofiles import avro_file
+
     from hdfs2cass_spark.sources.readers import read_records
 
     df = spark.range(5000).selectExpr(
@@ -75,26 +76,21 @@ def test_avro_builtin_reader_splits_and_codecs(spark, tmp_path):
         "CAST(id AS DOUBLE) / 7 AS score",
         "CASE WHEN id % 11 = 0 THEN NULL ELSE concat('v', id % 5) END AS maybe",
     )
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "name", "type": "string"},
+            {"name": "score", "type": "double"},
+            {"name": "maybe", "type": ["null", "string"]},
+        ],
+    }
     d = tmp_path / "multi"
     d.mkdir()
-    for codec, fname in (("null", "a.avro"), ("deflate", "b.avro"), ("snappy", "c.avro")):
-        rows = (r.asDict() for r in df.collect())
-        avrodec.write_container(
-            str(d / fname),
-            {
-                "type": "record",
-                "name": "r",
-                "fields": [
-                    {"name": "id", "type": "long"},
-                    {"name": "name", "type": "string"},
-                    {"name": "score", "type": "double"},
-                    {"name": "maybe", "type": ["null", "string"]},
-                ],
-            },
-            rows,
-            codec=codec,
-            block_records=256,
-        )
+    for codec, fname in (("uncompressed", "a.avro"), ("deflate", "b.avro"), ("snappy", "c.avro")):
+        # ~2 KB blocks: many sync points for the byte-range splits to divide
+        avro_file(df, d / fname, schema, codec=codec, **{"avro.mapred.sync.interval": "2048"})
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key, None)
     try:
@@ -256,14 +252,13 @@ def test_cli_timestamp_ttl_ignore_flags(spark, sf_dir, tmp_path):
 
 
 def test_avro_timestamp_roundtrip_is_microsecond_exact(spark, tmp_path):
-    """The writer's datetime->micros conversion must be integer-exact:
-    float total_seconds()*1e6 + int() truncation corrupted ~1.2% of
-    timestamps by 1us (review round 11). Includes the adversarial odd-
-    microsecond epochs where float64 resolution is ~0.5us."""
+    """Spark's Avro writer and reader carry timestamps microsecond-exact,
+    on the adversarial odd-microsecond epochs where float64 resolution is
+    ~0.5us: a float total_seconds()*1e6 + int() conversion corrupted ~1.2%
+    of such timestamps by 1us."""
     import datetime as dt
 
-    from hdfs2cass_spark.sources.avro import write_avro
-    from hdfs2cass_spark.sources.readers import read_records
+    from hdfs2cass_spark.sources.readers import read_records, write_avro
 
     rows = [
         (0, dt.datetime(2005, 4, 17, 8, 29, 2, 646319)),  # the fuzz repro
@@ -275,7 +270,7 @@ def test_avro_timestamp_roundtrip_is_microsecond_exact(spark, tmp_path):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "k bigint, ts timestamp_ntz")
-    p = str(tmp_path / "ts.avro")
+    p = str(tmp_path / "ts")
     write_avro(df, p)
     got = {r.k: r.ts for r in read_records(spark, p, fmt="avro").collect()}
     for k, want in rows:
@@ -286,8 +281,11 @@ def test_avro_nested_temporal_reads_exact_instant(spark, tmp_path):
     """A temporal logical type NESTED in a record/array reads back as the
     exact instant, like a top-level one (spark-avro semantics): declaring
     TimestampType while keeping raw millis would read them as MICROseconds,
-    a silent 1000x corruption."""
-    from hdfs2cass_spark.sources import avrodec
+    a silent 1000x corruption. The file stores the raw millis, read without
+    Spark, so a unit error shared by Spark's writer and reader cannot cancel
+    out."""
+    from avrofiles import avro_file, stored_records
+
     from hdfs2cass_spark.sources.readers import read_records
 
     ts = {"type": "long", "logicalType": "timestamp-millis"}
@@ -302,10 +300,14 @@ def test_avro_nested_temporal_reads_exact_instant(spark, tmp_path):
         ],
     }
     millis = 1700000000123
-    p = str(tmp_path / "nested.avro")
-    avrodec.write_container(
-        p, schema, [{"k": 1, "t": millis, "nest": {"t2": millis}, "arr": [millis]}]
+    t = f"timestamp_millis({millis})"
+    src = spark.sql(
+        f"SELECT 1L AS k, {t} AS t, named_struct('t2', {t}) AS nest, array({t}) AS arr"
     )
+    p = avro_file(src, tmp_path / "nested.avro", schema)
+    assert stored_records(spark, p) == [
+        {"k": 1, "t": millis, "nest": {"t2": millis}, "arr": [millis]}
+    ]
     df = read_records(spark, p, fmt="avro")
     assert df.schema.simpleString() == (
         "struct<k:bigint,t:timestamp,nest:struct<t2:timestamp>,arr:array<timestamp>>"
@@ -319,7 +321,8 @@ def test_avro_nested_temporal_reads_exact_instant(spark, tmp_path):
 def test_avro_reader_options_pass_through(spark, tmp_path):
     """Reader options reach Spark's Avro source: an avroSchema projection
     reads only the fields it names."""
-    from hdfs2cass_spark.sources import avrodec
+    from avrofiles import avro_file
+
     from hdfs2cass_spark.sources.readers import read_records
 
     schema = {
@@ -327,8 +330,8 @@ def test_avro_reader_options_pass_through(spark, tmp_path):
             {"name": "id", "type": "long"}, {"name": "v", "type": "string"},
         ],
     }
-    p = str(tmp_path / "x.avro")
-    avrodec.write_container(p, schema, [{"id": 7, "v": "a"}])
+    src = spark.createDataFrame([(7, "a")], "id bigint, v string")
+    p = avro_file(src, tmp_path / "x.avro", schema)
     proj = '{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}'
     df = read_records(spark, p, fmt="avro", avroSchema=proj)
     assert df.schema.simpleString() == "struct<id:bigint>"
