@@ -1,7 +1,7 @@
 """Ship UDF-referenced modules by value.
 
-Functions created inside factories (token UDF, wire encoders) pickle as
-closures, but their globals that live in THIS package pickle **by reference**
+Functions created inside factories (the wire encoders of sinks/wire.py)
+pickle as closures, but their globals that live in THIS package pickle **by reference**
 — executors then try `import hdfs2cass_spark` and fail unless the package is
 on every worker's PYTHONPATH. The driver gate (and any real cluster without
 --py-files) hits exactly that.

@@ -13,18 +13,21 @@ import java.util.zip.CRC32;
 import javax.imageio.*;
 import javax.imageio.event.*;
 import javax.imageio.stream.*;
+import javax.sound.sampled.*;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.*;
 
 /**
- * Image payloads as Spark SQL functions: the JDK's javax.imageio JPEG, PNG
- * and GIF codecs plus a binary netpbm (P5/P6) parser, which ImageIO lacks.
- * Formats are recognised by magic bytes. A decode fails, naming the cause,
- * wherever ImageIO alone would hand back a damaged image: any reader warning
- * (a truncated JPEG), an arithmetic-coded JPEG, a PNG chunk CRC mismatch, a
- * GIF frame outside its logical screen or one whose LZW data ends early.
- * Streams are memory-cached, so nothing is written to java.io.tmpdir.
+ * Media payloads as Spark SQL functions: the JDK's javax.imageio JPEG, PNG
+ * and GIF codecs plus a binary netpbm (P5/P6) parser, which ImageIO lacks,
+ * and RIFF/WAVE PCM audio features on javax.sound.sampled. Image formats are
+ * recognised by magic bytes. A decode fails, naming the cause, wherever the
+ * JDK alone would hand back damaged data: any reader warning (a truncated
+ * JPEG), an arithmetic-coded JPEG, a PNG chunk CRC mismatch, a GIF frame
+ * outside its logical screen or one whose LZW data ends early, a WAV data
+ * chunk shorter than its header declares. Streams are memory-cached, so
+ * nothing is written to java.io.tmpdir.
  */
 public final class Media {
   private Media() {}
@@ -116,6 +119,68 @@ public final class Media {
       if (indices == null || palette == null) return null;
       return gif(pnms(indices).get(0).pixels, palette, interlace,
           transparent == null ? -1 : transparent, background == null ? 0 : background);
+    }
+  }
+
+  /**
+   * A RIFF/WAVE payload of 8-, 16-, 24- or 32-bit integer PCM -> (n_channels, sample_rate,
+   * n_frames, peak_abs, sum_abs, sum_sq, zero_crossings, duration_ms). The sums are exact over
+   * every sample of every channel and fail past 2^63, never wrap; zero crossings are strict sign
+   * flips between consecutive frames of one channel.
+   */
+  public static final class AudioFeatures implements UDF1<byte[], Row> {
+    @Override
+    public Row call(byte[] b) throws IOException {
+      if (b == null) return null;
+      AudioInputStream in;
+      try {
+        if (!new String(b, 0, Math.min(12, b.length), StandardCharsets.ISO_8859_1)
+            .matches("(?s)RIFF.{4}WAVE")) {
+          throw new UnsupportedAudioFileException("no RIFF/WAVE header");
+        }
+        in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(b));
+      } catch (UnsupportedAudioFileException e) {
+        throw new IllegalArgumentException("not a RIFF/WAVE PCM payload: " + e.getMessage(), e);
+      }
+      AudioFormat f = in.getFormat();
+      int bits = f.getSampleSizeInBits();
+      int width = bits / 8;
+      int ch = f.getChannels();
+      boolean signed = f.getEncoding().equals(AudioFormat.Encoding.PCM_SIGNED);
+      if (!(signed || f.getEncoding().equals(AudioFormat.Encoding.PCM_UNSIGNED))
+          || f.isBigEndian() || bits % 8 != 0 || width < 1 || width > 4
+          || f.getFrameSize() != ch * width) {
+        throw new IllegalArgumentException("unsupported WAV encoding " + f
+            + ": only little-endian 8-, 16-, 24- or 32-bit integer PCM");
+      }
+      // javax.sound reads a short data chunk without complaint
+      byte[] data = in.readAllBytes();
+      long frames = in.getFrameLength();
+      if (data.length != frames * f.getFrameSize()) {
+        throw new IllegalArgumentException(String.format(
+            "truncated WAV data chunk: %d of %d bytes", data.length, frames * f.getFrameSize()));
+      }
+      long peak = 0, sumAbs = 0, sumSq = 0, crossings = 0;
+      long[] prev = new long[ch];
+      try {
+        for (int i = 0; i < data.length; i += width) {
+          long v = 0;
+          for (int k = width - 1; k >= 0; k--) v = v << 8 | (data[i + k] & 0xff);
+          v = signed ? v << (64 - bits) >> (64 - bits) : v - (1L << (bits - 1));
+          int c = i / width % ch;
+          if (prev[c] * v < 0) crossings++;
+          prev[c] = v;
+          long a = Math.abs(v);
+          peak = Math.max(peak, a);
+          sumAbs = Math.addExact(sumAbs, a);
+          sumSq = Math.addExact(sumSq, Math.multiplyExact(a, a));
+        }
+      } catch (ArithmeticException e) {
+        throw new ArithmeticException("WAV sample sums overflow a bigint (past 2^63)");
+      }
+      int rate = (int) f.getSampleRate();
+      return RowFactory.create(ch, rate, frames, peak, sumAbs, sumSq, crossings,
+          rate == 0 ? 0.0 : frames * 1000.0 / rate);
     }
   }
 

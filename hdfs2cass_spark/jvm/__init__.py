@@ -1,5 +1,5 @@
 """JVM-side functions, built and registered on first use: the Cassandra
-token functions (``Tokens.java``) and the image codecs (``Media.java``).
+token functions (``Tokens.java``) and the media codecs (``Media.java``).
 
 The bulk-load map stage needs only two functions Spark lacks: Cassandra's
 Murmur3 token (vanilla murmur3 masks tail bytes, Cassandra sign-extends them)
@@ -7,7 +7,8 @@ and the RandomPartitioner MD5 token with its reducer bucket. Both are Java
 ``UDF1``/``UDF2`` classes, so the stage stays inside whole-stage codegen and a
 bulk load starts no Python worker. The image functions decode, resize, split
 into frames and encode JPEG, PNG, GIF and netpbm payloads on the JDK's
-``javax.imageio``, so image queries start no Python worker either.
+``javax.imageio``, and the audio function reads RIFF/WAVE PCM on
+``javax.sound.sampled``, so media queries start no Python worker either.
 
 The sources ship with the package. On first use they are compiled with
 ``javac`` against pyspark's jars into one jar cached in a per-user directory
@@ -53,6 +54,7 @@ MEDIA_RESIZE = "h2c_media_resize"
 MEDIA_FRAMES = "h2c_media_frames"
 JPEG_ENCODE = "h2c_jpeg_encode"
 GIF_ENCODE = "h2c_gif_encode"
+AUDIO_FEATURES = "h2c_audio_features"
 
 # the sample statistics are over every channel of the first (composited) frame
 DECODED = StructType(
@@ -67,6 +69,20 @@ DECODED = StructType(
     ]
 )
 
+# the sums are over every sample of every channel
+AUDIO = StructType(
+    [
+        StructField("n_channels", IntegerType()),
+        StructField("sample_rate", IntegerType()),
+        StructField("n_frames", LongType()),
+        StructField("peak_abs", LongType()),
+        StructField("sum_abs", LongType()),
+        StructField("sum_sq", LongType()),
+        StructField("zero_crossings", LongType()),
+        StructField("duration_ms", DoubleType()),
+    ]
+)
+
 _FUNCTIONS = {
     MURMUR3_TOKEN: ("hdfs2cass_spark.jvm.Tokens$Murmur3", LongType()),
     MD5_TOKEN_BUCKET: (
@@ -78,6 +94,7 @@ _FUNCTIONS = {
     MEDIA_FRAMES: ("hdfs2cass_spark.jvm.Media$Frames", ArrayType(BinaryType())),
     JPEG_ENCODE: ("hdfs2cass_spark.jvm.Media$JpegEncode", BinaryType()),
     GIF_ENCODE: ("hdfs2cass_spark.jvm.Media$GifEncode", BinaryType()),
+    AUDIO_FEATURES: ("hdfs2cass_spark.jvm.Media$AudioFeatures", AUDIO),
 }
 
 
@@ -88,7 +105,7 @@ def _javac() -> str:
     found = shutil.which("javac")
     if found is None:
         raise RuntimeError(
-            "hdfs2cass_spark needs a JDK to build its Cassandra token and image functions: "
+            "hdfs2cass_spark needs a JDK to build its Cassandra token and media functions: "
             "no javac under JAVA_HOME or on PATH; install a JDK (17+) and set JAVA_HOME"
         )
     return found
@@ -170,7 +187,7 @@ def jar_path() -> str:
 
 
 def ensure_registered(spark: SparkSession) -> None:
-    """Make the token and image functions callable by name in ``spark``. The
+    """Make the token and media functions callable by name in ``spark``. The
     jar lands in the SparkContext, so a second ``ADD JAR`` of it (a new session
     of the same application, or racing callers) is a no-op that Spark logs as
     a warning."""

@@ -1316,6 +1316,10 @@ def legacy_to_sinks_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cql.unionByName(thrift).orderBy("sink", "key")
 
 
+# the staging roots of avro_roundtrip_customer with an exit hook registered
+_AVRO_STAGING_ROOTS: set[str] = set()
+
+
 @declare(
     "avro_roundtrip_customer",
     oracle="""
@@ -1333,25 +1337,29 @@ def legacy_to_sinks_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value-exact.",
 )
 def avro_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import atexit
+    import hashlib
+    import shutil
     import tempfile
+    import threading
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
     # deterministic per-(process, thread, sf-PATH) staging path: repeated
-    # calls in one session overwrite the same directory instead of leaking temp
-    # dirs, while two session threads (or two sf dirs sharing a basename)
-    # can never race write_avro against the other's lazy Avro scan
-    # (ADVICE r11) — the thread id and the full-path hash split them
-    import hashlib
-    import threading
-
-    sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"h2c_avro_rt_{os.getpid()}_{threading.get_ident()}",
-        f"{sf_key}_customer.avro",
+    # calls in one session overwrite the same directory, while two session
+    # threads (or two sf dirs sharing a basename) can never race write_avro
+    # against the other's lazy Avro scan (ADVICE r11) — the thread id and the
+    # full-path hash split them. The scan is lazy, so the root is removed only
+    # when the process exits.
+    root = os.path.join(
+        tempfile.gettempdir(), f"h2c_avro_rt_{os.getpid()}_{threading.get_ident()}"
     )
+    if root not in _AVRO_STAGING_ROOTS:
+        _AVRO_STAGING_ROOTS.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    sf_key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    stage = os.path.join(root, f"{sf_key}_customer.avro")
     write_avro(cust, stage, codec="deflate")
     return present_sorted(read_records(spark, stage, fmt="avro"), "c_custkey")
 

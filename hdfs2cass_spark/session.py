@@ -44,9 +44,8 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # larger Arrow batches amortize the per-batch Python/JVM handoff of
-        # the pandas/Arrow UDFs (audio decode, wire sinks, streaming state);
-        # the bulk-load token and the image codecs are JVM functions and
-        # cross no batch
+        # the pandas/Arrow UDFs (wire sinks, streaming state); the bulk-load
+        # token and the media codecs are JVM functions and cross no batch
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.speculation", "false")

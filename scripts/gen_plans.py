@@ -361,12 +361,13 @@ SECTIONS = [
     (
         "wav_audio_features (WAV/PCM audio round-trip — round 12)",
         "wav_audio_features",
-        "The entire synth -> encode -> chunk-walk decode -> integer features "
-        "pipeline is TWO chained `ArrowEvalPython`-free `MapInPandas` nodes on "
-        "one scan — no explode of per-sample rows (samples never exist as rows; "
-        "features fold inside the Arrow batch), no shuffle before the single "
-        "presentation exchange. At 100 TB the payload column streams through "
-        "executors batch-by-batch; per-row Python is whole-batch numpy.",
+        "No Python node: the WAV bytes (`unhex` of the little-endian header "
+        "fields and a `transform` over the interleaved samples) and the JDK's "
+        "decode + integer features (`h2c_audio_features`, javax.sound.sampled) "
+        "are one `Project` of Catalyst and Java functions, between the `Project` "
+        "that names each document's frame and channel counts and the one that "
+        "unpacks the feature struct, over a scan pruned to doc_id. Samples never "
+        "exist as rows, and the only exchange is the presentation sort.",
     ),
     (
         "jpeg_image_features (baseline-JPEG round-trip — round 12)",
@@ -423,7 +424,8 @@ def main() -> int:
     from hdfs2cass_spark.session import get_session
     from hdfs2cass_spark.plans import CATALOG
 
-    spark = get_session("gen-plans")
+    # fixed parallelism, so the exchange counts do not follow the host's cores
+    spark = get_session("gen-plans", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     out = [

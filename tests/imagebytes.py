@@ -1,10 +1,11 @@
-"""Image payloads written from the format specs for the image tests.
+"""Media payloads written from the format specs for the media tests.
 
 netpbm (P5/P6), PNG (every colour type, 8- or 16-bit, plain or Adam7, raw
-filtered scanlines on request) and GIF (LZW, interlace, global and local
-palettes, transparency, disposal, frame offsets). The JDK functions under
-test decode them; expected values come from the arrays written here, never
-from a decoder.
+filtered scanlines on request), GIF (LZW, interlace, global and local
+palettes, transparency, disposal, frame offsets) and RIFF/WAVE (integer PCM
+at 8, 16, 24 or 32 bits, IEEE float32, extra chunks, any fmt body). The JDK
+functions under test decode them; expected values come from the arrays
+written here, never from a decoder.
 """
 
 from __future__ import annotations
@@ -178,6 +179,67 @@ def gif(frames, pal, screen=None, background=0, interlace=False) -> bytes:
             out += bytes([len(data[i : i + 255])]) + data[i : i + 255]
         out += b"\x00"
     return bytes(out + b"\x3b")
+
+
+# ---------------------------------------------------------------------------
+# RIFF/WAVE
+# ---------------------------------------------------------------------------
+
+WAVE_FORMAT_PCM = 0x0001
+WAVE_FORMAT_IEEE_FLOAT = 0x0003
+
+
+def riff_chunk(kind: bytes, body: bytes) -> bytes:
+    """One RIFF chunk: id, little-endian size, body, a pad byte if odd."""
+    return kind + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+
+
+def wav_fmt(tag: int, channels: int, rate: int, bits: int) -> bytes:
+    """The 16-byte ``fmt `` body: tag, channels, rate, byte rate, block align, bits."""
+    block = channels * ((bits + 7) // 8)
+    return struct.pack("<HHIIHH", tag, channels, rate, rate * block, block, bits)
+
+
+def wav(samples, rate: int, bits: int = 16, float_fmt: bool = False, before: bytes = b"",
+        fmt: bytes | None = None) -> bytes:
+    """(frames, channels) or (frames,) samples -> RIFF/WAVE bytes: integer
+    PCM at ``bits`` (8-bit stored unsigned, offset by 128; wider signed), or
+    IEEE float32 when ``float_fmt``. ``before`` is chunks placed ahead of
+    ``fmt ``; ``fmt`` replaces the ``fmt `` body."""
+    a = np.asarray(samples)
+    a = a.reshape(len(a), -1)
+    if float_fmt:
+        tag, bits, raw = WAVE_FORMAT_IEEE_FLOAT, 32, a.astype("<f4").tobytes()
+    else:
+        v = a.astype(np.int64).reshape(-1)
+        lim = 1 << (bits - 1)
+        assert v.min(initial=0) >= -lim and v.max(initial=0) < lim, "sample out of range"
+        u = (v + lim if bits == 8 else v) & ((1 << bits) - 1)
+        # each sample is the low bits/8 bytes of its little-endian 64-bit word
+        raw = u.astype("<u8").view(np.uint8).reshape(-1, 8)[:, : bits // 8].tobytes()
+        tag = WAVE_FORMAT_PCM
+    fmt_body = wav_fmt(tag, a.shape[1], rate, bits) if fmt is None else fmt
+    chunks = before + riff_chunk(b"fmt ", fmt_body) + riff_chunk(b"data", raw)
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def audio_features(samples, rate: int) -> dict:
+    """What h2c_audio_features reports for integer samples (frames,
+    channels): exact sums over every sample, strict sign flips between
+    consecutive frames of each channel."""
+    v = np.asarray(samples, np.int64)
+    v = v.reshape(len(v), -1)
+    a = [abs(int(x)) for x in v.reshape(-1)]
+    return {
+        "n_channels": v.shape[1],
+        "sample_rate": rate,
+        "n_frames": len(v),
+        "peak_abs": max(a, default=0),
+        "sum_abs": sum(a),
+        "sum_sq": sum(x * x for x in a),
+        "zero_crossings": int(np.count_nonzero(np.sign(v[:-1]) * np.sign(v[1:]) < 0)),
+        "duration_ms": len(v) * 1000.0 / rate,
+    }
 
 
 # ---------------------------------------------------------------------------

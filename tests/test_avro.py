@@ -174,3 +174,24 @@ def test_bulk_load_over_avro_has_no_python_node(spark, tmp_path):
         assert "FileScan avro" in plan, plan
         assert not re.search(r"ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas", plan), plan
         assert re.search(rf"\*\(\d+\) Project \[[^\n]*{fn}\(", plan), plan
+
+
+def test_avro_roundtrip_customer_removes_its_staging_at_exit(spark, sf_dir, monkeypatch):
+    """The catalog query stages under one root per (process, thread): the
+    first call registers one exit hook for it, later calls none, and the
+    hook removes the root."""
+    import atexit
+    import os
+
+    from hdfs2cass_spark.plans import CATALOG, catalog
+
+    hooks = []
+    monkeypatch.setattr(catalog, "_AVRO_STAGING_ROOTS", set())
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: hooks.append((fn, a, kw)))
+    for _ in range(2):
+        assert CATALOG["avro_roundtrip_customer"].fn(spark, sf_dir).count() > 0
+    assert len(hooks) == 1
+    fn, args, kw = hooks[0]
+    assert os.path.isdir(args[0]) and os.path.basename(args[0]).startswith("h2c_avro_rt_")
+    fn(*args, **kw)
+    assert not os.path.exists(args[0])

@@ -1,15 +1,30 @@
-"""Multimodal plumbing tests: binary payload + feature extraction, the stub
-mapInPandas branch and the real branch on the JDK image functions
-(hdfs2cass_spark/jvm/Media.java), with netpbm and PNG payloads written in
-imagebytes.py."""
+"""Multimodal plumbing tests: binary payload + feature extraction on the JDK
+image functions (hdfs2cass_spark/jvm/Media.java), with netpbm, PNG and GIF
+payloads written in imagebytes.py."""
 
 import numpy as np
 import pytest
-from imagebytes import decoded, parse_netpbm, png, png_chunk, png_from_raw, stats
+from imagebytes import (
+    PNG_SIG,
+    decoded,
+    gif,
+    netpbm,
+    palette,
+    parse_netpbm,
+    png,
+    png_chunk,
+    png_from_raw,
+    stats,
+)
 from pyspark.sql import functions as F
 
 from hdfs2cass_spark.jvm import MEDIA_DECODE
-from hdfs2cass_spark.operators.multimodal import attach_media, extract_features
+from hdfs2cass_spark.operators.multimodal import (
+    attach_media,
+    extract_features,
+    resize_media,
+    sample_frames,
+)
 
 
 @pytest.fixture(scope="module")
@@ -29,20 +44,11 @@ def test_media_schema(media):
     assert row["byte_len"] == len(row["payload"])
 
 
-def test_extract_features_deterministic(media):
-    f1 = {r["media_id"]: tuple(r) for r in extract_features(media).collect()}
-    f2 = {r["media_id"]: tuple(r) for r in extract_features(media).collect()}
-    assert f1 == f2
-    some = next(iter(f1.values()))
-    assert some[3] >= 1 and some[4] >= 1  # width/height
-    assert 0.0 <= some[6] <= 255.0  # mean byte intensity
-
-
 def test_extract_features_real_decode_raises(media):
-    """Text payloads are no image format: the real branch must fail loudly,
-    never emit garbage features."""
+    """Text payloads are no image format: the decode must fail loudly, never
+    emit garbage features."""
     with pytest.raises(Exception, match="unknown image format"):
-        extract_features(media, decode_stub=False).collect()
+        extract_features(media).collect()
 
 
 def _ppm(width, height, pixel_fn):
@@ -68,10 +74,20 @@ def netpbm_media(spark):
     )
 
 
+def test_extract_features_deterministic(netpbm_media):
+    out = extract_features(netpbm_media)
+    assert out.columns == [
+        "media_id", "media_type", "byte_len", "width", "height", "n_frames", "mean_intensity",
+    ]
+    f1 = {r["media_id"]: tuple(r) for r in out.collect()}
+    f2 = {r["media_id"]: tuple(r) for r in extract_features(netpbm_media).collect()}
+    assert f1 == f2 and len(f1) == 2
+
+
 def test_real_decode_netpbm_features(netpbm_media):
-    """decode_stub=False REALLY decodes netpbm: header dimensions and exact
-    mean sample value, no codec dependency."""
-    rows = {r["media_id"]: r for r in extract_features(netpbm_media, decode_stub=False).collect()}
+    """netpbm decodes for real: header dimensions and exact mean sample
+    value."""
+    rows = {r["media_id"]: r for r in extract_features(netpbm_media).collect()}
     p6 = rows[0]
     assert (p6["width"], p6["height"], p6["n_frames"]) == (4, 2, 1)
     expected = sum(
@@ -84,11 +100,9 @@ def test_real_decode_netpbm_features(netpbm_media):
 
 
 def test_real_resize_netpbm_nearest_neighbor(netpbm_media):
-    from hdfs2cass_spark.operators.multimodal import resize_media
-
     rows = {
         r["media_id"]: bytes(r["payload"])
-        for r in resize_media(netpbm_media, width=2, height=1, decode_stub=False).collect()
+        for r in resize_media(netpbm_media, width=2, height=1).collect()
     }
     w, h, ch, px = parse_netpbm(rows[0])
     assert (w, h, ch) == (2, 1, 3)
@@ -105,8 +119,6 @@ def test_real_frames_concatenated_netpbm_stream(spark):
     every_n selection over REAL frame boundaries, each frame re-parseable."""
     import pandas as pd
 
-    from hdfs2cass_spark.operators.multimodal import sample_frames
-
     frames_src = [_ppm(2, 1, lambda y, x, i=i: (i, i, i)) for i in range(5)]
     stream = b"".join(frames_src)
     pdf = pd.DataFrame({"media_id": [7], "blob": [stream]})
@@ -115,7 +127,7 @@ def test_real_frames_concatenated_netpbm_stream(spark):
         media_type="video/x-ppm-stream",
     )
     rows = sorted(
-        sample_frames(media, every_n=2, decode_stub=False).collect(),
+        sample_frames(media, every_n=2).collect(),
         key=lambda r: r["frame_idx"],
     )
     assert [r["frame_idx"] for r in rows] == [0, 2, 4]
@@ -127,41 +139,42 @@ def test_real_frames_concatenated_netpbm_stream(spark):
         assert px[0, 0].tolist() == [r["frame_idx"]] * 3
 
 
-def test_resize_media_shape_and_determinism(media):
-    from hdfs2cass_spark.operators.multimodal import resize_media
-
-    out = resize_media(media, width=8, height=4)
+def test_resize_media_shape_and_determinism(netpbm_media):
+    out = resize_media(netpbm_media, width=8, height=4)
     rows = out.collect()
     assert out.columns == ["media_id", "media_type", "payload", "byte_len", "width", "height"]
-    assert len(rows) == media.count()
+    assert len(rows) == netpbm_media.count()
     for r in rows:
-        assert r["byte_len"] == 32 and len(r["payload"]) == 32
-        assert (r["width"], r["height"]) == (8, 4)
-    again = {r["media_id"]: bytes(r["payload"]) for r in resize_media(media, 8, 4).collect()}
+        assert parse_netpbm(bytes(r["payload"]))[:2] == (8, 4)
+        assert r["byte_len"] == len(r["payload"]) and (r["width"], r["height"]) == (8, 4)
+    again = {r["media_id"]: bytes(r["payload"]) for r in resize_media(netpbm_media, 8, 4).collect()}
     assert again == {r["media_id"]: bytes(r["payload"]) for r in rows}
 
 
-def test_sample_frames_amplifies_inside_batches(media):
-    from hdfs2cass_spark.operators.multimodal import sample_frames
+def test_sample_frames_amplifies_inside_batches(spark, jvm_call):
+    """1 -> N amplification keeping every N-th frame: a 3-frame GIF (frames
+    composited and re-encoded as PNG), a 5-image P5 stream and a still image."""
+    import pandas as pd
 
-    frames = sample_frames(media, every_n=2, frame_bytes=64)
-    rows = frames.collect()
+    pal = palette(4)
+    gif_frames = [np.full((2, 3), k, np.uint8) for k in range(3)]
+    stream = [netpbm(np.full((2, 2), 40 * k, np.uint8)) for k in range(5)]
+    payloads = [gif([{"idx": f} for f in gif_frames], pal), b"".join(stream), stream[1]]
+    pdf = pd.DataFrame({"media_id": [0, 1, 2], "blob": payloads})
+    media = attach_media(spark.createDataFrame(pdf), "media_id", "blob", "video/mixed")
+    frames = sample_frames(media, every_n=2)
     assert frames.columns == ["media_id", "frame_idx", "frame", "frame_len"]
-    assert len(rows) > media.count()  # 1 -> N amplification
-    src = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
     by_media = {}
-    for r in rows:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, fr in by_media.items():
-        idxs = sorted(r["frame_idx"] for r in fr)
-        assert idxs == list(range(0, 2 * len(idxs), 2))  # every 2nd frame
-        for r in fr:
-            i = r["frame_idx"]
-            assert bytes(r["frame"]) == src[mid][i * 64 : (i + 1) * 64]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    for r in frames.collect():
+        by_media.setdefault(r["media_id"], {})[r["frame_idx"]] = bytes(r["frame"])
+    assert {m: sorted(f) for m, f in by_media.items()} == {0: [0, 2], 1: [0, 2, 4], 2: [0]}
+    assert [by_media[1][i] for i in (0, 2, 4)] == stream[::2] and by_media[2][0] == stream[1]
+    pngs = [by_media[0][i] for i in (0, 2)]
+    assert all(p[:8] == PNG_SIG for p in pngs)
+    assert [decoded(r) for r in jvm_call(MEDIA_DECODE, pngs)] == [
+        stats(pal[gif_frames[i]]) for i in (0, 2)
+    ]
+    with pytest.raises(ValueError):
         sample_frames(media, every_n=0)
 
 def _forward_filter(px, filters):
@@ -277,12 +290,10 @@ def test_png_builtin_rejects_corruption(jvm_call):
 
 
 def test_real_decode_png_builtin(spark, jvm_call):
-    """The real-decode branch over a REAL compressed format: PNG payloads
-    flow through attach_media -> extract_features(decode_stub=False) with
-    exact width/height/mean, and resize_media round-trips PNG -> PNG."""
+    """The decode over a REAL compressed format: PNG payloads flow through
+    attach_media -> extract_features with exact width/height/mean, and
+    resize_media round-trips PNG -> PNG."""
     import pandas as pd
-
-    from hdfs2cass_spark.operators.multimodal import resize_media
 
     arr = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
     pdf = pd.DataFrame({"media_id": [0], "blob": [png(arr)]})
@@ -290,11 +301,11 @@ def test_real_decode_png_builtin(spark, jvm_call):
         spark.createDataFrame(pdf), id_col="media_id", payload_col="blob",
         media_type="image/png",
     )
-    row = extract_features(media, decode_stub=False).collect()[0]
+    row = extract_features(media).collect()[0]
     assert (row["width"], row["height"], row["n_frames"]) == (4, 4, 1)
     assert abs(row["mean_intensity"] - arr.mean()) < 1e-9
 
-    rz = resize_media(media, width=2, height=2, decode_stub=False).collect()[0]
+    rz = resize_media(media, width=2, height=2).collect()[0]
     assert bytes(rz["payload"])[:8] == b"\x89PNG\r\n\x1a\n"
     assert rz["byte_len"] == len(rz["payload"]) and (rz["width"], rz["height"]) == (2, 2)
     (dec,) = jvm_call(MEDIA_DECODE, [bytes(rz["payload"])])

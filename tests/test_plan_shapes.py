@@ -90,16 +90,23 @@ def test_bulk_load_single_shuffle_no_python_hop(spark, sf_dir):
     assert re.search(r"\*\(\d+\) Project \[[^\n]*h2c_m3tok\(", _explain(spark, routed))
 
 
-@pytest.mark.parametrize("name", ["jpeg_image_features", "gif_image_features"])
-def test_image_queries_have_no_python_node(spark, sf_dir, name):
-    """Encode and decode are JVM functions: the executed plan starts no
-    Python worker."""
+@pytest.mark.parametrize(
+    "name, decode",
+    [
+        pytest.param("jpeg_image_features", "h2c_media_decode(", id="jpeg_image_features"),
+        pytest.param("gif_image_features", "h2c_media_decode(", id="gif_image_features"),
+        pytest.param("wav_audio_features", "h2c_audio_features(", id="wav_audio_features"),
+    ],
+)
+def test_image_queries_have_no_python_node(spark, sf_dir, name, decode):
+    """Encode and decode are Catalyst and JVM functions: the executed plan
+    starts no Python worker."""
     df = CATALOG[name].fn(spark, sf_dir)
     df.collect()  # the final adaptive plan
     p = _explain(spark, df)
     for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert node not in p
-    assert "h2c_media_decode(" in p
+    assert decode in p
 
 
 def test_semi_anti_join_plans(spark, sf_dir):
