@@ -2,7 +2,9 @@ package hdfs2cass_spark.jvm;
 
 import java.lang.invoke.MethodHandles;
 import java.lang.invoke.VarHandle;
+import java.math.BigDecimal;
 import java.math.BigInteger;
+import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
 import java.security.MessageDigest;
 import java.security.NoSuchAlgorithmException;
@@ -13,9 +15,9 @@ import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF2;
 
 /**
- * Cassandra partition tokens as Spark SQL functions, so the bulk-load map
- * stage stays inside whole-stage codegen. functions/murmur3.py and
- * functions/md5token.py are the readable specs these are tested against.
+ * Cassandra partition tokens, and the bytes of the types Catalyst cannot
+ * serialize, as Spark SQL functions that run inside whole-stage codegen.
+ * functions/murmur3.py, md5token.py and serde.py are their readable specs.
  */
 public final class Tokens {
   private Tokens() {}
@@ -115,6 +117,34 @@ public final class Tokens {
       String digits = token.toString();
       return RowFactory.create(
           "0".repeat(39 - digits.length()) + digits, token.divide(range.size).intValue());
+    }
+  }
+
+  /** DoubleSerializer: the IEEE 754 bits, big-endian. */
+  public static final class DoubleBytes implements UDF1<Double, byte[]> {
+    @Override
+    public byte[] call(Double v) {
+      return v == null ? null : ByteBuffer.allocate(8).putDouble(v).array();
+    }
+  }
+
+  /** FloatSerializer: the IEEE 754 bits, big-endian. */
+  public static final class FloatBytes implements UDF1<Float, byte[]> {
+    @Override
+    public byte[] call(Float v) {
+      return v == null ? null : ByteBuffer.allocate(4).putFloat(v).array();
+    }
+  }
+
+  /** DecimalSerializer: a 4-byte scale, then the unscaled two's complement. */
+  public static final class DecimalBytes implements UDF1<BigDecimal, byte[]> {
+    @Override
+    public byte[] call(BigDecimal v) {
+      if (v == null) {
+        return null;
+      }
+      byte[] unscaled = v.unscaledValue().toByteArray();
+      return ByteBuffer.allocate(4 + unscaled.length).putInt(v.scale()).put(unscaled).array();
     }
   }
 }

@@ -1,14 +1,17 @@
 """JVM-side functions, built and registered on first use: the Cassandra
-token functions (``Tokens.java``) and the media codecs (``Media.java``).
+token functions and serializers (``Tokens.java``) and the media codecs
+(``Media.java``).
 
 The bulk-load map stage needs only two functions Spark lacks: Cassandra's
 Murmur3 token (vanilla murmur3 masks tail bytes, Cassandra sign-extends them)
 and the RandomPartitioner MD5 token with its reducer bucket. Both are Java
 ``UDF1``/``UDF2`` classes, so the stage stays inside whole-stage codegen and a
-bulk load starts no Python worker. The image functions decode, resize, split
-into frames and encode JPEG, PNG, GIF and netpbm payloads on the JDK's
-``javax.imageio``, and the audio function reads RIFF/WAVE PCM on
-``javax.sound.sampled``, so media queries start no Python worker either.
+bulk load starts no Python worker. Three more serialize the values Catalyst
+cannot (``functions/serde.cassandra_hex``): double, float and decimal. The
+image functions decode, resize, split into frames and encode JPEG, PNG, GIF
+and netpbm payloads on the JDK's ``javax.imageio``, and the audio function
+reads RIFF/WAVE PCM on ``javax.sound.sampled``, so media queries start no
+Python worker either.
 
 The sources ship with the package. On first use they are compiled with
 ``javac`` against pyspark's jars into one jar cached in a per-user directory
@@ -49,6 +52,9 @@ from pyspark.sql.types import (
 
 MURMUR3_TOKEN = "h2c_m3tok"
 MD5_TOKEN_BUCKET = "h2c_md5tok"
+DOUBLE_BYTES = "h2c_double_bytes"
+FLOAT_BYTES = "h2c_float_bytes"
+DECIMAL_BYTES = "h2c_decimal_bytes"
 MEDIA_DECODE = "h2c_media_decode"
 MEDIA_RESIZE = "h2c_media_resize"
 MEDIA_FRAMES = "h2c_media_frames"
@@ -89,6 +95,9 @@ _FUNCTIONS = {
         "hdfs2cass_spark.jvm.Tokens$Md5Bucket",
         StructType([StructField("token", StringType()), StructField("bucket", IntegerType())]),
     ),
+    DOUBLE_BYTES: ("hdfs2cass_spark.jvm.Tokens$DoubleBytes", BinaryType()),
+    FLOAT_BYTES: ("hdfs2cass_spark.jvm.Tokens$FloatBytes", BinaryType()),
+    DECIMAL_BYTES: ("hdfs2cass_spark.jvm.Tokens$DecimalBytes", BinaryType()),
     MEDIA_DECODE: ("hdfs2cass_spark.jvm.Media$Decode", DECODED),
     MEDIA_RESIZE: ("hdfs2cass_spark.jvm.Media$Resize", BinaryType()),
     MEDIA_FRAMES: ("hdfs2cass_spark.jvm.Media$Frames", ArrayType(BinaryType())),
@@ -187,10 +196,10 @@ def jar_path() -> str:
 
 
 def ensure_registered(spark: SparkSession) -> None:
-    """Make the token and media functions callable by name in ``spark``. The
-    jar lands in the SparkContext, so a second ``ADD JAR`` of it (a new session
-    of the same application, or racing callers) is a no-op that Spark logs as
-    a warning."""
+    """Make the token, serializer and media functions callable by name in
+    ``spark``. The jar lands in the SparkContext, so a second ``ADD JAR`` of it
+    (a new session of the same application, or racing callers) is a no-op that
+    Spark logs as a warning."""
     if spark.catalog.functionExists(MURMUR3_TOKEN):
         return
     spark.sql(f"ADD JAR '{jar_path()}'")

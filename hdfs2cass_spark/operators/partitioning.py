@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.murmur3 import MIN_TOKEN
+from ..functions.serde import composite_hex
 from ..jvm import MD5_TOKEN_BUCKET, MURMUR3_TOKEN, ensure_registered
 
 RING_SIZE = 2**64  # Murmur3 LongToken ring
@@ -220,75 +221,11 @@ def route_to_buckets(
 
 
 def binary_key_expr(df: DataFrame, cols: list[str]) -> Column:
-    """K1: partition-key bytes as a pure-Catalyst expression.
-
-    Single column -> raw bytes; multiple -> the composite envelope
-    [2-byte len][bytes][0x00] per component (CassandraRecordUtils.java:230-261,
-    differentially tested against functions.serde.compose_partition_key).
-
-    Integer components use Cassandra's fixed-width big-endian encoding built
-    from hex (two's-complement for negatives comes out of Spark's hex() on
-    longs; ints take the low 8 hex chars). All JVM-side — no Python in the
-    key path; the token UDF receives ready-made bytes.
-    """
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    # each component is built as a HEX STRING and the whole key gets ONE
-    # unhex at the end — one binary materialization instead of per-component
-    # unhex + binary concat (measured ~2x on the encode step at sf0.1); the
-    # composite length prefix is a literal for fixed-width types.
-    # NULL components encode as the EMPTY buffer regardless of declared type
-    # (CassandraRecordUtils.java:81-82 — toByteBuffer(null) -> empty;
-    # functions/serde.to_cassandra_bytes is the tested Python twin), so a
-    # null single-column key tokenizes to the empty-key MIN token, never a
-    # null-propagated NULL key.
-    def comp_hex(c: str) -> tuple[Column, Column | None, int | None]:
-        """(hex fragment, runtime byte length or None, fixed byte length or None)."""
-        dt = df.schema[c].dataType
-        col = F.col(c)
-        if isinstance(dt, (IntegerType, ShortType, ByteType)):
-            # low 32 bits, big-endian: hex() of the long value, last 8 chars
-            frag = F.substring(F.lpad(F.hex(col.cast("long")), 16, "0"), 9, 8)
-            return F.when(col.isNull(), F.lit("")).otherwise(frag), None, 4
-        if isinstance(dt, LongType):
-            frag = F.lpad(F.hex(col), 16, "0")
-            return F.when(col.isNull(), F.lit("")).otherwise(frag), None, 8
-        if isinstance(dt, StringType):
-            b = col.cast("binary")
-            return F.coalesce(F.hex(b), F.lit("")), F.coalesce(F.octet_length(b), F.lit(0)), None
-        b = col.cast("binary")
-        return F.coalesce(F.hex(b), F.lit("")), F.coalesce(F.octet_length(b), F.lit(0)), None
-
-    parts = [comp_hex(c) for c in cols]
-    if len(parts) == 1:
-        return F.unhex(parts[0][0])
-    # lpad TRUNCATES strings longer than the target — a component over 65535
-    # bytes would silently emit a corrupted 2-byte length. Fail loudly instead
-    # (compose_partition_key, the Python twin, raises ValueError the same way).
-    fragments: list[Column] = []
-    for (hex_frag, nbytes, fixed), c in zip(parts, cols):
-        if fixed is not None:
-            fragments.append(
-                F.when(F.col(c).isNull(), F.lit("0000")).otherwise(F.lit(format(fixed, "04x")))
-            )
-        else:
-            fragments.append(
-                F.when(
-                    nbytes > 65535,
-                    F.raise_error(
-                        F.concat(
-                            F.lit("composite key component exceeds 65535 bytes: "),
-                            nbytes.cast("string"),
-                        )
-                    ),
-                ).otherwise(F.lpad(F.hex(nbytes), 4, "0"))
-            )
-        fragments.append(hex_frag)
-        fragments.append(F.lit("00"))
-    return F.unhex(F.concat(*fragments))
+    """K1: partition-key bytes as a pure-Catalyst expression: one column's
+    Cassandra bytes, or the composite envelope [2-byte len][bytes][0x00] per
+    column (CassandraRecordUtils.java:230-261), from the serializer of the CQL
+    values (``functions.serde.composite_hex``), with ONE unhex for the whole
+    key. A NULL column is the EMPTY buffer, so a NULL single-column key
+    tokenizes to the empty-key MIN token."""
+    ensure_registered(df.sparkSession)
+    return F.unhex(composite_hex([(F.col(c), df.schema[c].dataType) for c in cols]))

@@ -23,7 +23,7 @@ from pyspark.sql.functions import broadcast
 
 from ..operators.joins import size_guarded_broadcast
 from ..operators.legacy import format_legacy_lines, parse_legacy_lines
-from ..operators.partitioning import with_bucket, with_token
+from ..operators.partitioning import binary_key_expr, with_bucket, with_token
 from ..operators.reshape import melt_to_mutations, reshape_cql
 from ..sources.readers import load_table, read_records, write_avro
 from .present import present_sorted
@@ -141,7 +141,7 @@ _M3_BUCKET8 = (
     "unshuffled mapping. Oracle = golden-token fixture join.",
 )
 def token_route_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.partitioning import binary_key_expr, with_md5_token_bucket
+    from ..operators.partitioning import with_md5_token_bucket
 
     cust = load_table(spark, sf_dir, "customer")
     df = cust.select("c_custkey", binary_key_expr(cust, ["c_custkey"]).alias("_pk"))
@@ -935,32 +935,23 @@ def counter_column_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT c_custkey,
            upper(concat(
-             lpad(to_hex(length(coalesce(c_name, ''))), 4, '0'),
+             lpad(to_hex(strlen(coalesce(c_name, ''))), 4, '0'),
              hex(coalesce(c_name, '')), '00',
              '0008', lpad(to_hex(c_custkey), 16, '0'), '00')) AS pk_hex
     FROM customer ORDER BY c_custkey
     """,
     doc="K1 composite partition keys: the [2-byte len][bytes][0x00] envelope "
-    "(CassandraRecordUtils.java:230-261) materialized as hex so the oracle "
-    "can check the exact wire layout for a (text, bigint) key pair. A NULL "
-    "component encodes as the EMPTY buffer (toByteBuffer(null) -> empty, "
-    "CassandraRecordUtils.java:81-82) — stated explicitly on both sides "
-    "because DuckDB's concat() silently SKIPS null fragments while Spark's "
-    "null-propagates.",
+    "(CassandraRecordUtils.java:230-261) as the engine builds it "
+    "(binary_key_expr), materialized as hex so the oracle can check the "
+    "exact wire layout for a (text, bigint) key pair. The length is in bytes "
+    "(strlen, not the character count). A NULL component encodes as the "
+    "EMPTY buffer (toByteBuffer(null) -> empty, CassandraRecordUtils.java:81-82) "
+    "— stated explicitly in the oracle because DuckDB's concat() silently "
+    "SKIPS null fragments.",
 )
 def composite_key_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    name = F.coalesce(F.col("c_name"), F.lit(""))
-    pk_hex = F.upper(
-        F.concat(
-            F.lpad(F.hex(F.length(name)), 4, "0"),
-            F.hex(name),
-            F.lit("00"),
-            F.lit("0008"),
-            F.lpad(F.hex(F.col("c_custkey")), 16, "0"),
-            F.lit("00"),
-        )
-    )
+    pk_hex = F.hex(binary_key_expr(c, ["c_name", "c_custkey"]))  # hex() is upper case
     return c.select("c_custkey", pk_hex.alias("pk_hex")).orderBy("c_custkey")
 
 

@@ -43,9 +43,9 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # larger Arrow batches amortize the per-batch Python/JVM handoff of
-        # the pandas/Arrow UDFs (wire sinks, streaming state); the bulk-load
-        # token and the media codecs are JVM functions and cross no batch
+        # larger Arrow batches amortize the per-batch Python/JVM handoff of the
+        # pandas/Arrow UDFs (streaming state, LLM-pipeline operators); tokens,
+        # wire serializers and media codecs are JVM functions: no batch
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.speculation", "false")

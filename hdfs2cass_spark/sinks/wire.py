@@ -9,28 +9,20 @@ with timestamp/ttl appended as the LAST TWO bound values
 Spark-first placement: serialization happens at the *sink boundary only* —
 Catalyst keeps native types through reshape/route. The Thrift wire form is a
 plain projection: reshape has already cast every name and value to string,
-and ``cast(string AS binary)`` is its UTF-8 bytes, so Thrift rows never leave
-the JVM. CQL values keep one Arrow-batched mapInPandas, because Catalyst has
-no bit cast for double/float and no form of Cassandra's decimal or collection
-serializers; ``functions/serde.schema_encoder`` is the one typed encoder.
+and ``cast(string AS binary)`` is its UTF-8 bytes. The CQL form is one
+projection too: each bind value is ``functions/serde.cassandra_hex`` of its
+declared column type, the serializer that also builds the partition key. So
+neither form's rows leave the JVM.
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions import serde as _serde_mod
-from ..functions.serde import schema_encoder
-from ..functions.shippable import pickle_by_value
-
-# the CQL encoder closure references functions.serde — ship it by value so
-# executors without this package on PYTHONPATH can still run the UDF
-pickle_by_value(_serde_mod)
+from ..functions.serde import cassandra_hex
+from ..jvm import ensure_registered
 
 
 def _bytes(c: Column) -> Column:
@@ -76,38 +68,21 @@ def encode_cql_wire(routed: DataFrame) -> DataFrame:
     ttl, token, bucket) into bound-statement wire form.
 
     `values` holds the serialized bind values in column order with writetime
-    and ttl appended last — exactly the reference's CQLRecord layout.
+    and ttl appended last — exactly the reference's CQLRecord layout. Each
+    value is encoded by its DECLARED column type, like Cassandra's
+    per-column TypeSerializers; the USING TIMESTAMP ? AND TTL ? parameters
+    are a bigint and an int.
     """
+    ensure_registered(routed.sparkSession)
     meta = {"_rowkey", "_pk", "writetime", "ttl", "token", "bucket"}
-    value_cols = [c for c in routed.columns if c not in meta]
-    # encoders are bound to the DECLARED column types (like Cassandra's
-    # per-column TypeSerializers) — value-type inference would mis-encode
-    # nullable int columns, which Arrow->pandas hands over as float64
-    encoders = [schema_encoder(routed.schema[c].dataType) for c in value_cols]
-    dtype = {c: routed.schema[c].dataType.simpleString() for c in routed.columns}
-    schema = (
-        f"pk binary, token {dtype['token']}, bucket {dtype['bucket']}, values array<binary>, "
-        f"writetime {dtype['writetime']}, ttl {dtype['ttl']}"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            cols = [pdf[c].to_numpy() for c in value_cols]
-            wt, ttl = pdf["writetime"].to_numpy(), pdf["ttl"].to_numpy()
-            # the USING TIMESTAMP ? AND TTL ? bind parameters are bigint/int —
-            # fixed widths, not value-inferred
-            values = [
-                [enc(col[i]) for enc, col in zip(encoders, cols)]
-                + [struct.pack(">q", int(wt[i])), struct.pack(">i", int(ttl[i]))]
-                for i in range(len(pdf))
-            ]
-            out = {"pk": pdf["_pk"], "token": pdf["token"], "bucket": pdf["bucket"]}
-            yield pd.DataFrame({**out, "values": values, "writetime": wt, "ttl": ttl})
-
-    keyed = routed.select(
-        *value_cols, "writetime", "ttl", "token", "bucket", _pk(routed, "_rowkey").alias("_pk")
-    )
-    return keyed.mapInPandas(batches, schema)
+    typed = [(routed[f.name], f.dataType) for f in routed.schema.fields if f.name not in meta]
+    typed += [
+        (routed["writetime"].cast("long"), T.LongType()),
+        (routed["ttl"].cast("int"), T.IntegerType()),
+    ]
+    values = F.array(*(F.unhex(cassandra_hex(c, dtype)) for c, dtype in typed))
+    pk = _pk(routed, "_rowkey").alias("pk")
+    return routed.select(pk, "token", "bucket", values.alias("values"), "writetime", "ttl")
 
 
 def encode_thrift_wire(routed: DataFrame) -> DataFrame:

@@ -197,9 +197,10 @@ def test_binary_key_expr_matches_serde(spark, sf_dir):
 
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     out = c.select(
-        "c_name", "c_custkey", "c_nationkey",
+        "c_name", "c_custkey", "c_nationkey", "c_acctbal",
         binary_key_expr(c, ["c_name"]).alias("k1"),
         binary_key_expr(c, ["c_name", "c_custkey", "c_nationkey"]).alias("k3"),
+        binary_key_expr(c, ["c_name", "c_custkey", "c_nationkey", "c_acctbal"]).alias("k4"),
     ).collect()
     for r in out:
         comps = (
@@ -209,6 +210,9 @@ def test_binary_key_expr_matches_serde(spark, sf_dir):
         )
         assert bytes(r["k1"]) == comps[0]
         assert bytes(r["k3"]) == compose_partition_key(*comps)
+        # double column: 8 bytes of IEEE 754 bits
+        acctbal = struct.pack(">d", r["c_acctbal"])
+        assert bytes(r["k4"]) == compose_partition_key(*comps, acctbal)
 
 
 def test_binary_key_expr_negative_ints(spark):

@@ -4,6 +4,7 @@ encodings (the reference tests the same way:
 """
 
 import struct
+from datetime import datetime, timezone
 
 import pytest
 
@@ -24,6 +25,9 @@ def test_scalars():
     assert to_cassandra_bytes(True) == b"\x01"
     assert to_cassandra_bytes(False) == b"\x00"
     assert to_cassandra_bytes(b"\x00\x01") == b"\x00\x01"
+    # millis floor, like Instant.toEpochMilli: half a millisecond before the epoch is -1
+    before_epoch = datetime(1969, 12, 31, 23, 59, 59, 999500, tzinfo=timezone.utc)
+    assert to_cassandra_bytes(before_epoch) == struct.pack(">q", -1)
 
 
 def test_list_wire_format():
